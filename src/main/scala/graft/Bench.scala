@@ -80,6 +80,11 @@ import org.apache.spark.sql.SparkSession
   *    "full" field — the committed file is the durable
   *    regression-tracking record.
   *
+  *  - The artifact also carries the Spark jobs each timed rep ran, counted
+  *    by a SparkListener: "jobs_by_query" per rep, "jobs" the per-query
+  *    median, "jobs_total" their sum. Unlike seconds, job counts do not
+  *    drift with the machine window.
+  *
   * SPARK_GRAFT_BENCH_ONLY=qNN,qMM filters queries for local iteration;
   * SPARK_GRAFT_BENCH_DIAG=1 additionally prints per-rep lines to stderr.
   */
@@ -234,8 +239,21 @@ object Bench {
       if (diag) System.err.println(
         "BENCHDIAG warm pass " + num(warmSec) + " s (untimed, compile-only)")
     }
+    // Spark jobs per timed rep: each rep tags its jobs with a local
+    // property (inherited by the driver threads a query spawns), and a
+    // listener counts job starts per tag. Listener delivery is async;
+    // `spark.stop()` below drains the bus before the counts are read.
+    val repTag = "graft.bench.rep"
+    val jobsByTag = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(repTag)))
+          .foreach(jobsByTag.merge(_, 1, (a: Integer, b: Integer) => Int.box(a + b)))
+    })
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
                 repLabel: String): Unit = {
+      // tagged with the rep's index in the query's chronological rep vector
+      spark.sparkContext.setLocalProperty(repTag, s"$name/${timesByQuery.get(name).fold(0)(_.size)}")
       val (j0, g0) = (jitMs, gcMs)
       val t0 = System.nanoTime()
       // noop sink forces full materialization of every output column;
@@ -252,6 +270,7 @@ object Bench {
       // operators persist their sketch tables; release them between
       // runs so caches don't accumulate across 160+ queries and every
       // rep measures the same cold-cache plan
+      spark.sparkContext.setLocalProperty(repTag, null)
       GraftCache.releaseAll(spark)
       spark.catalog.clearCache()
       timesByQuery(name) = timesByQuery.getOrElse(name, Vector.empty) :+ (if (ok) sec else -sec)
@@ -307,6 +326,13 @@ object Bench {
       offenders.foreach { case (name, fn) => timeOne(name, fn, s"guard$guardPasses") }
       offenders = offenders.filter { case (n, _) => health(n) > healthBound }
     }
+    // All Spark work is done: stopping the session delivers every pending
+    // listener event, so the per-rep job counts below are complete.
+    spark.stop()
+    val jobsByQuery = selected.map { case (n, _) =>
+      n -> timesByQuery(n).indices.map(i => jobsByTag.getOrDefault(s"$n/$i", 0).intValue).toVector
+    }
+    val jobsMedian = jobsByQuery.map { case (n, js) => n -> js.sorted.apply((js.size - 1) / 2) }
     // An errored rep is negative; if ANY rep errored the query's headline
     // stays negative (error marker), else aggregate over the good reps.
     def agg(name: String, f: Vector[Double] => Double): Double = {
@@ -344,11 +370,13 @@ object Bench {
     val healthJson = numMap(selected.map { case (n, _) => n -> health(n) })
     val guardedJson = guarded.toSeq.sorted
       .map(n => "\"" + esc(n) + "\"").mkString("[", ",", "]")
+    val jobsJson = jobsMedian.map { case (k, v) => "\"" + esc(k) + "\":" + v }.mkString("{", ",", "}")
+    val jobsRepsJson = vecMap(jobsByQuery)(_.toString)
     val errJson = errors.map { case (k, m) => "\"" + esc(k) + "\":\"" + esc(m) + "\"" }
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val line =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"agg":"median","min":$minJson,"$firstRepKey":$cold,"reps":$reps,"warm_pass":$warm,"warm_sec":${num(warmSec)},"guard_passes":$guardPasses,"guard_requeried":$guardedJson,"health":$healthJson,"reps_by_query":$repsJson,"jit_ms":$jitJson,"gc_ms":$gcJson,"loadavg":$loadJson,"calib_sec":$calibJson,"calib_mem_sec":$calibMemJson,"errors":$errJson,"sf":"${esc(sfDir)}"}"""
+      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"agg":"median","min":$minJson,"$firstRepKey":$cold,"reps":$reps,"warm_pass":$warm,"warm_sec":${num(warmSec)},"guard_passes":$guardPasses,"guard_requeried":$guardedJson,"health":$healthJson,"reps_by_query":$repsJson,"jit_ms":$jitJson,"gc_ms":$gcJson,"loadavg":$loadJson,"calib_sec":$calibJson,"calib_mem_sec":$calibMemJson,"jobs":$jobsJson,"jobs_total":${jobsMedian.map(_._2).sum},"jobs_by_query":$jobsRepsJson,"errors":$errJson,"sf":"${esc(sfDir)}"}"""
     // STDOUT LINE MUST FIT THE DRIVER'S 2000-CHAR TAIL BUFFER. Every
     // BENCH_r{1..7}.json artifact has "parsed": null because the recorder
     // keeps only the last 2000 chars of stdout (measured: tail_len=2000 in
@@ -379,7 +407,6 @@ object Bench {
     try java.nio.file.Files.writeString(java.nio.file.Path.of(outPath), line + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}") }
-    spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }
 }

@@ -46,7 +46,7 @@ object Jobs {
     // `fresh` MUST be pinned before the CSV append below mutates its input:
     // a lazy re-evaluation after the append would re-read the grown CSV and
     // see an empty delta (SURVEY §7.4 — checkpoint before side effects).
-    val existing = CsvMeta.loadExistingUrls(spark, csvPath(workDir, productType))
+    val existing = CsvMeta.loadExistingUrls(spark, csvPath(workDir, productType), productType)
     val fresh = DeltaOps.delta(
       parsed.where(col("document_url").isNotNull),
       existing,
@@ -77,10 +77,11 @@ object Jobs {
     val results = Downloader.download(pending, fetch).toDF()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (ok, bad) = Downloader.splitResults(results)
+    val (nOk, nBad) = outcomeCounts(results)
 
     // T3/T4 state commits.
     state.markCompleted(ok.select("url"))
-    if (bad.take(1).nonEmpty) state.markFailed(bad.select("url", "error"))
+    if (nBad > 0) state.markFailed(bad.select("url", "error"))
 
     // J3: enrich products with their download outcome, then K1 append.
     val enriched = DeltaOps.enrich(
@@ -91,10 +92,15 @@ object Jobs {
       .drop("file_size", "success")
     CsvMeta.append(enriched, productType, csvPath(workDir, productType))
 
-    val counts = (freshCount, ok.count(), bad.count())
     results.unpersist()
     fresh.unpersist()
-    counts
+    (freshCount, nOk, nBad)
+  }
+
+  /** (successes, failures) of persisted fetch results, in one job. */
+  private def outcomeCounts(results: DataFrame): (Long, Long) = {
+    val row = results.agg(count(when(col("success"), 1)), count(when(!col("success"), 1))).head()
+    (row.getLong(0), row.getLong(1))
   }
 
   /** §3.1 scrape: resume from state, scan [resume..totalPages]. */
@@ -137,10 +143,10 @@ object Jobs {
     val results = Downloader.download(tasks, fetch).toDF()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (ok, bad) = Downloader.splitResults(results)
+    val counts @ (_, nBad) = outcomeCounts(results)
     state.markCompleted(ok.select("url"))
     state.clearSucceeded(ok.select("url"))
-    if (bad.take(1).nonEmpty) state.markFailed(bad.select("url", "error"))
-    val counts = (ok.count(), bad.count())
+    if (nBad > 0) state.markFailed(bad.select("url", "error"))
     results.unpersist()
     counts
   }

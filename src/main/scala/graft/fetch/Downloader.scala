@@ -50,14 +50,16 @@ object Downloader {
     }
   }
 
-  /** Production fetch over java.net.http (not exercised in the
-    * zero-egress test environment).
+  /** One client per JVM: it pools connections, so consecutive fetches to
+    * a host reuse a kept-alive connection instead of opening one per URL.
     */
+  private lazy val client = java.net.http.HttpClient.newBuilder()
+    .followRedirects(java.net.http.HttpClient.Redirect.NORMAL)
+    .build()
+
+  /** Production fetch over java.net.http, through the JVM-wide [[client]]. */
   def httpFetch(timeoutSec: Long = 300): String => Array[Byte] = {
     url =>
-      val client = java.net.http.HttpClient.newBuilder()
-        .followRedirects(java.net.http.HttpClient.Redirect.NORMAL)
-        .build()
       val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
         .timeout(java.time.Duration.ofSeconds(timeoutSec)).GET().build()
       val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofByteArray())
@@ -66,12 +68,22 @@ object Downloader {
       resp.body()
   }
 
+  /** A task that failed `attempts` times and waits out its backoff until
+    * `notBefore` (System.nanoTime).
+    */
+  private case class Backoff(task: DownloadTask, attempts: Int, notBefore: Long)
+
   /** S6+S7+S8+K2: fetch every task, writing bytes to `destination`.
     *
     * Exactly-once mitigation (SURVEY §7.4): if `skipExisting` and the
     * destination file already exists, the fetch is skipped and reported as
     * success — re-executed partitions (task retry, AQE replan) do not
     * re-download.
+    *
+    * Retries: a task whose k-th attempt fails is attempted again no
+    * sooner than `retryDelayMs * k` later, at most `retryAttempts`
+    * attempts in all, each taking one rate-limiter token. While it waits,
+    * its partition goes on fetching the other tasks.
     *
     * `ratePerSec` is the CLUSTER-GLOBAL budget: the per-JVM token bucket
     * enforces `ratePerSec / numExecutors`, so with E executors each
@@ -94,31 +106,50 @@ object Downloader {
     tasks
       .repartition(maxConcurrent)
       .mapPartitions { it =>
-        it.map { task =>
-          val dest = java.nio.file.Paths.get(task.destination)
-          if (skipExisting && java.nio.file.Files.exists(dest)) {
-            DownloadResult(task.url, success = true, task.destination,
-              java.nio.file.Files.size(dest), null)
-          } else {
-            var attempt = 0
-            var result: DownloadResult = null
-            while (result == null || (!result.success && attempt < retryAttempts)) {
-              if (attempt > 0) Thread.sleep(retryDelayMs * attempt) // linear backoff
-              attempt += 1
-              result =
-                try {
-                  RateLimiter.acquire(perJvmRate)
-                  val bytes = fetch(task.url)
-                  if (dest.getParent != null) java.nio.file.Files.createDirectories(dest.getParent)
-                  java.nio.file.Files.write(dest, bytes)
-                  DownloadResult(task.url, success = true, task.destination, bytes.length.toLong, null)
-                } catch {
-                  case e: Exception =>
-                    DownloadResult(task.url, success = false, null, 0L,
-                      s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
+        def attempt(task: DownloadTask): DownloadResult =
+          try {
+            RateLimiter.acquire(perJvmRate)
+            val bytes = fetch(task.url)
+            val dest = java.nio.file.Paths.get(task.destination)
+            if (dest.getParent != null) java.nio.file.Files.createDirectories(dest.getParent)
+            java.nio.file.Files.write(dest, bytes)
+            DownloadResult(task.url, success = true, task.destination, bytes.length.toLong, null)
+          } catch {
+            case e: Exception =>
+              DownloadResult(task.url, success = false, null, 0L,
+                s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("")}")
+          }
+        // Failed tasks wait in a queue ordered by their not-before time, so
+        // a URL backing off does not hold up the rest of its partition.
+        val waiting = scala.collection.mutable.PriorityQueue.empty[Backoff](
+          Ordering.by((b: Backoff) => b.notBefore).reverse)
+        new Iterator[DownloadResult] {
+          def hasNext: Boolean = waiting.nonEmpty || it.hasNext
+          def next(): DownloadResult = {
+            var out: DownloadResult = null
+            while (out == null) {
+              val due = waiting.nonEmpty && (!it.hasNext || waiting.head.notBefore <= System.nanoTime())
+              val (task, attempts) =
+                if (due) {
+                  val b = waiting.dequeue()
+                  val sleepNanos = b.notBefore - System.nanoTime()
+                  if (sleepNanos > 0) Thread.sleep(sleepNanos / 1000000, (sleepNanos % 1000000).toInt)
+                  (b.task, b.attempts)
+                } else (it.next(), 0)
+              val dest = java.nio.file.Paths.get(task.destination)
+              if (attempts == 0 && skipExisting && java.nio.file.Files.exists(dest)) {
+                out = DownloadResult(task.url, success = true, task.destination,
+                  java.nio.file.Files.size(dest), null)
+              } else {
+                val result = attempt(task)
+                if (result.success || attempts + 1 >= retryAttempts) out = result
+                else { // linear backoff: retryDelayMs * attempts made so far
+                  waiting.enqueue(Backoff(task, attempts + 1,
+                    System.nanoTime() + (attempts + 1) * retryDelayMs * 1000000L))
                 }
+              }
             }
-            result
+            out
           }
         }
       }

@@ -1,8 +1,9 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** CSV metadata source + append sink (SURVEY §2.1 S4/S5, §2.9 K1/K4,
   * §2.4 X14).
@@ -49,17 +50,37 @@ object CsvMeta {
 
   /** S4: project the existing-URL set out of a metadata CSV
     * (delta_download.py:41-51); empty/missing file → empty set.
+    *
+    * The CSV is read with the sink's own all-string schema for
+    * `productType`, so no Spark job runs to infer the header;
+    * `enforceSchema=false` still checks the file's header against that
+    * schema and fails on a mismatch.
     */
-  def loadExistingUrls(spark: SparkSession, csvPath: String): DataFrame = {
+  def loadExistingUrls(spark: SparkSession, csvPath: String, productType: String): DataFrame =
+    existingUrls(spark, csvPath,
+      _.schema(stringSchema(productType)).option("enforceSchema", "false"))
+
+  /** [[loadExistingUrls]] for a CSV of unknown product type: infers the
+    * header, which costs a Spark job per call.
+    */
+  def loadExistingUrls(spark: SparkSession, csvPath: String): DataFrame =
+    existingUrls(spark, csvPath, identity)
+
+  private def existingUrls(spark: SparkSession, csvPath: String,
+                           reader: DataFrameReader => DataFrameReader): DataFrame = {
     val fs = new Path(csvPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(csvPath)))
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL("document_url string"))
-    spark.read.option("header", "true").csv(csvPath)
+        StructType.fromDDL("document_url string"))
+    reader(spark.read.option("header", "true")).csv(csvPath)
       .select("document_url")
       .where(col("document_url").isNotNull && col("document_url") =!= "")
       .distinct()
   }
+
+  /** Every column of `productType` as a string, in sink order. */
+  private def stringSchema(productType: String): StructType =
+    StructType(columns(productType).map(StructField(_, StringType)))
 
   /** S5: data-row count of an existing CSV (csv_writer.py:98-110). */
   def count(spark: SparkSession, csvPath: String): Long = {
@@ -242,11 +263,9 @@ object CsvMeta {
   /** Read a [[appendParts]] directory with the canonical column order. */
   def readParts(spark: SparkSession, productType: String, dir: String): DataFrame = {
     val cols = columns(productType)
-    val schema = org.apache.spark.sql.types.StructType(
-      cols.map(c => org.apache.spark.sql.types.StructField(c, org.apache.spark.sql.types.StringType)))
     // unquoted empty fields parse as null; restore the sink's
     // ""-for-absent convention (X14) on the way back in
-    spark.read.schema(schema).option("header", "false").csv(dir)
+    spark.read.schema(stringSchema(productType)).option("header", "false").csv(dir)
       .select(cols.map(c => coalesce(col(c), lit("")).as(c)): _*)
   }
 

@@ -68,6 +68,20 @@ class CsvAppendSpec extends SparkSpec {
     assert(rems == Set(""))
   }
 
+  test("loadExistingUrls reads with the product type's schema; a foreign header fails") {
+    val csv = tmpDir() + "/health_products.csv"
+    CsvMeta.append(Seq(("u1", "P1"), ("", "P2"), ("u1", "P3")).toDF("document_url", "product_name"),
+      "health", csv)
+    val urls = CsvMeta.loadExistingUrls(spark, csv, "health")
+      .collect().map(_.getString(0)).toSeq
+    assert(urls == Seq("u1"))
+    // the health header does not match the life columns: the read fails
+    // instead of projecting the wrong column
+    val err = intercept[Exception](CsvMeta.loadExistingUrls(spark, csv, "life").collect())
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(e => Option(e.getMessage).exists(_.toLowerCase.contains("header"))), err.toString)
+  }
+
   test("renameOverFallback: history survives every failure mode (never delete-then-hope)") {
     // the non-atomic replace path must keep a complete copy of dst's
     // prior content on disk at all times: a missing src (the trigger

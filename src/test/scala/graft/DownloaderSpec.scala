@@ -2,6 +2,8 @@ package graft
 
 import graft.fetch.Downloader
 import graft.fetch.Downloader.DownloadTask
+import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import java.net.InetSocketAddress
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -87,8 +89,55 @@ class DownloaderSpec extends SparkSpec {
     // 5 acquisitions at 20/s ≈ ≥200ms of spacing (first one is free)
     assert(elapsedMs >= 150, s"elapsed ${elapsedMs}ms — limiter not engaged")
   }
+
+  test("httpFetch reuses one connection for sequential GETs") {
+    // every request records the client address it came from: a new
+    // connection shows up as a new client port
+    val clients = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", (ex: HttpExchange) => {
+      clients.add(ex.getRemoteAddress.toString)
+      val body = ex.getRequestURI.getPath.getBytes("UTF-8")
+      ex.sendResponseHeaders(200, body.length.toLong)
+      ex.getResponseBody.write(body)
+      ex.close()
+    })
+    server.start()
+    try {
+      val fetch = Downloader.httpFetch(10)
+      val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+      val n = 6
+      (1 to n).foreach(i => assert(new String(fetch(s"$base/doc$i"), "UTF-8") == s"/doc$i"))
+      assert(clients.size == 1, s"$n GETs came over ${clients.size} connections: $clients")
+    } finally server.stop(0)
+  }
+
+  test("a task backing off does not block the rest of its partition") {
+    // One partition: the first URL fetched fails once with a 500 ms
+    // backoff. Its retry must come after every other task's fetch instead
+    // of stalling them, and the attempt count stays one per fetch + one.
+    val dir = tmpDir
+    // the log lives in the shared local-mode JVM, not in the closure
+    val log = DownloaderSpec.fetchLog
+    log.clear()
+    val tasks = (1 to 4).map(i => DownloadTask(s"u$i", s"$dir/b$i.bin")).toDS()
+    val out = Downloader.download(tasks,
+      url => {
+        val log = DownloaderSpec.fetchLog
+        val first = log.isEmpty
+        log.add(url)
+        if (first) throw new java.io.IOException("transient")
+        url.getBytes("UTF-8")
+      },
+      maxConcurrent = 1, ratePerSec = 1000.0, retryAttempts = 3, retryDelayMs = 500).collect()
+    val order = log.toArray.toSeq.map(_.toString)
+    assert(order.size == 5, s"attempts: $order")
+    assert(order.last == order.head && order.count(_ == order.head) == 2, s"order: $order")
+    assert(out.map(_.url).sorted.toSeq == Seq("u1", "u2", "u3", "u4") && out.forall(_.success))
+  }
 }
 
 object DownloaderSpec {
   val attempts = new AtomicInteger(0)
+  val fetchLog = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
