@@ -31,6 +31,13 @@ object Jobs {
   def csvPath(workDir: String, productType: String) =
     s"$workDir/metadata/${productType}_products.csv"
 
+  /** Rejects a product type with no sink schema before a job writes any
+    * state (a CLI typo would otherwise commit a stray session row).
+    */
+  private def requireKnownType(productType: String): Unit =
+    if (!CsvMeta.columns.contains(productType))
+      throw new IllegalArgumentException(s"unknown product type: $productType")
+
   /** §3.1/§3.2 shared core: pages → parse → delta → tasks → fetch →
     * enrich → append. Returns (newRows, successes, failures) counts.
     */
@@ -107,6 +114,7 @@ object Jobs {
   def scrape(spark: SparkSession, workDir: String, productType: String,
              pagesDir: String, totalPages: Int,
              fetch: String => Array[Byte] = stubFetch): (Long, Long, Long) = {
+    requireKnownType(productType)
     val state = new StateStore(spark, s"$workDir/state")
     state.startSession(productType, totalPages)
     val start = state.resumePage(productType)
@@ -122,6 +130,7 @@ object Jobs {
   def delta(spark: SparkSession, workDir: String, productType: String,
             pagesDir: String, totalPages: Int,
             fetch: String => Array[Byte] = stubFetch): (Long, Long, Long) = {
+    requireKnownType(productType)
     val state = new StateStore(spark, s"$workDir/state")
     val pages = PageSource.fixtureScan(spark, productType, pagesDir, 1, totalPages)
     runPipeline(spark, state, workDir, productType, pages, fetch)
@@ -154,6 +163,7 @@ object Jobs {
   /** §3.3 reset: drop session state (and optionally the CSV). */
   def reset(spark: SparkSession, workDir: String, productType: String,
             clearCsv: Boolean = false): Unit = {
+    requireKnownType(productType)
     new StateStore(spark, s"$workDir/state").resetSession(productType)
     if (clearCsv) CsvMeta.clear(spark, csvPath(workDir, productType))
   }

@@ -3,94 +3,19 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Hash-sketch primitives for near-duplicate detection at scale:
-  * word/char shingling, MinHash signatures, LSH band keys, and SimHash.
+/** Hash and similarity primitives for near-duplicate detection at
+  * scale: the engine-portable 60-bit md5 hash, hamming distance and
+  * Jaccard similarity.
   *
-  * Everything here is a deterministic per-row Catalyst expression — the
-  * expensive global step (candidate pairing) is done by the callers in
+  * Everything here is deterministic per row — the expensive global step
+  * (candidate pairing) is done by the callers in
   * [[graft.operators.DedupOps]] via band-key equi-joins, which shuffle only
-  * (id, band_key) pairs rather than documents. That is what keeps the
-  * approach viable at 100 TB: signature computation is embarrassingly
-  * parallel, and the shuffle payload is a few longs per document.
+  * (id, band_key) pairs rather than documents. The sketches themselves
+  * (shingles, MinHash signatures, SimHash) are `mapPartitions` kernels in
+  * DedupOps, not Catalyst expressions: nested higher-order functions
+  * re-evaluate their lambda arguments per element.
   */
 object HashFunctions {
-
-  /** Word n-gram shingles over a token array (distinct). */
-  def wordShingles(toks: Column, n: Int): Column = {
-    val grams = when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0), size(toks) - n),
-        i => array_join(slice(toks, i + 1, lit(n)), " ")))
-    array_distinct(grams)
-  }
-
-  /** Character n-gram shingles (distinct) over cleaned text. */
-  def charShingles(text: Column, n: Int): Column = {
-    val t = TextFunctions.cleanText(text)
-    val grams = when(length(t) < n, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0), length(t) - n),
-        i => t.substr(i + 1, lit(n))))
-    array_distinct(grams)
-  }
-
-  /** MinHash signature: k independent permutations approximated by k
-    * seeded xxhash64 draws; element i = min over shingles of
-    * xxhash64(i, shingle). Empty shingle sets get a sentinel signature of
-    * Long.MaxValue so they never collide with real content.
-    *
-    * PITFALL: do not nest this inside another higher-order function (e.g.
-    * `bandKeys(minhashSignature(...))`) — HOF lambda arguments are
-    * re-evaluated per element, so composition multiplies per-row cost by
-    * k × bands. For the production path use
-    * [[graft.operators.DedupOps.minhashBandRows]], a single-pass kernel.
-    */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    transform(
-      sequence(lit(0), lit(k - 1)),
-      i => coalesce(
-        array_min(transform(shingles, s => xxhash64(i, s))),
-        lit(Long.MaxValue)))
-
-  /** LSH band keys from a MinHash signature: `bands` rows of `rowsPerBand`
-    * signature elements each, hashed to one long per band. Join on
-    * (band_index, band_key) to get candidate pairs.
-    */
-  def bandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(
-      sequence(lit(0), lit(bands - 1)),
-      b => xxhash64(b, array_join(
-        transform(slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)), _.cast("string")),
-        "_")))
-
-  /** 64-bit SimHash over a token array: per token, hash to 64 bits; each
-    * bit contributes +1/-1 to a counter; final bit j is set iff counter
-    * j >= 0. Near-duplicates have small hamming distance (use
-    * `bit_count(a ^ b)`).
-    *
-    * PITFALL: the `aggregate`/`zip_with` form boxes 64 lambda evaluations
-    * per token (~2 ms/row measured) — prefer
-    * [[graft.operators.DedupOps.simhashSketches]] on the hot path.
-    */
-  def simhash(toks: Column): Column = {
-    val counters = aggregate(
-      toks,
-      array_repeat(lit(0L), 64),
-      (acc, t) => {
-        val h = xxhash64(t)
-        zip_with(
-          acc,
-          sequence(lit(0), lit(63)),
-          (c, j) => c + when(
-            call_function("shiftright", h, j).bitwiseAND(lit(1L)) === 1L,
-            lit(1L)).otherwise(lit(-1L)))
-      })
-    aggregate(
-      zip_with(counters, sequence(lit(0), lit(63)), (c, j) =>
-        when(c >= 0L, call_function("shiftleft", lit(1L), j)).otherwise(lit(0L))),
-      lit(0L),
-      (acc, v) => acc.bitwiseOR(v))
-  }
 
   /** Hamming distance between two 64-bit sketches. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b)).cast("int")
@@ -99,9 +24,7 @@ object HashFunctions {
     * md5, read as an unsigned integer — always positive, never overflows
     * a signed 64-bit lane. Reproducible bit-for-bit in any md5-bearing
     * engine (DuckDB: `('0x' || substr(md5(x), 1, 15))::BIGINT`), which is
-    * what lets sketches built on it be verified ACROSS engines. ~3× the
-    * cost of xxhash64 — prefer the xxhash64 paths when only Spark ever
-    * re-derives the hash.
+    * what lets sketches built on it be verified ACROSS engines.
     */
   def portableHash60(c: Column): Column =
     conv(substring(md5(c.cast("string")), 1, 15), 16, 10).cast("long")

@@ -19,8 +19,4 @@ object Rounding {
 
   /** Half-up to 2 decimals via binary-deterministic arithmetic. */
   def half2(c: Column): Column = floor(c * 100 + 0.5) / 100.0
-
-  /** DuckDB SQL fragment equivalents (for oracle strings). */
-  def half4Sql(expr: String): String = s"floor(($expr) * 10000 + 0.5) / 10000"
-  def half2Sql(expr: String): String = s"floor(($expr) * 100 + 0.5) / 100"
 }

@@ -192,8 +192,8 @@ object TextFunctions {
       .otherwise("application/octet-stream")
   }
 
-  /** Whitespace tokenization; the base for token counting, shingling,
-    * stopword ratios. Empty/blank input → empty array (not [""]).
+  /** Whitespace tokenization; the base for token counting and
+    * shingling. Empty/blank input → empty array (not [""]).
     */
   def tokens(c: Column): Column = {
     val t = cleanText(c)
@@ -203,38 +203,8 @@ object TextFunctions {
   /** Token count (whitespace tokenization). */
   def tokenCount(c: Column): Column = size(tokens(c)).cast("long")
 
-  /** BPE-ish token count: runs of letters, single digits, or single
-    * non-alphanumeric symbols — a cheap proxy for subword token counts.
-    */
-  def bpeishTokenCount(c: Column): Column =
-    regexp_count(c, lit("[A-Za-z]+|[0-9]|[^A-Za-z0-9\\s]")).cast("long")
-
   val EnglishStopwords: Seq[String] =
     Seq("the", "a", "an", "and", "of", "to", "in", "is", "it", "that", "for", "on", "with", "as")
-
-  /** Fraction of tokens that are (English) stopwords; 0.0 for empty docs. */
-  def stopwordRatio(c: Column): Column = {
-    val toks = tokens(c)
-    val stops = filter(toks, t => t.isin(EnglishStopwords.map(x => x: Any): _*))
-    when(size(toks) === 0, lit(0.0))
-      .otherwise(size(stops).cast("double") / size(toks).cast("double"))
-  }
-
-  /** Punctuation-character ratio over total characters; 0.0 for empty. */
-  def punctRatio(c: Column): Column = {
-    val n = length(c)
-    val noPunct = length(regexp_replace(c, "[!-/:-@\\[-`{-~]", ""))
-    when(n === 0 || n.isNull, lit(0.0))
-      .otherwise((n - noPunct).cast("double") / n.cast("double"))
-  }
-
-  /** Mean token length in characters; 0.0 for empty docs. */
-  def meanTokenLen(c: Column): Column = {
-    val toks = tokens(c)
-    when(size(toks) === 0, lit(0.0))
-      .otherwise(aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double")
-        / size(toks).cast("double"))
-  }
 
   /** Document fingerprint: md5 of lower-cased whitespace-normalized text —
     * the exact-dedup key for 100 TB-scale exact deduplication (hash then

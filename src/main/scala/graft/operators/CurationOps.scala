@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *    payloads (same contract as [[DedupOps.exactDedup]]).
   *
   * Near-dup removal (MinHash) intentionally stays a separate stage
-  * ([[DedupOps.minhashNearDups]]): it needs its own shuffle geometry and
+  * ([[DedupOps.minhashNearDupsPortable]]): it needs its own shuffle geometry and
   * its candidate set should be built on the EXACT-deduped survivors.
   */
 object CurationOps {

@@ -3,12 +3,9 @@ package graft.operators
 import graft.GraftCache
 import graft.functions.{HashFunctions => H, Rounding, TextFunctions => T}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Deduplication operators for large-scale corpus curation.
   *
@@ -35,19 +32,10 @@ object DedupOps {
       .groupBy("fingerprint")
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_count"))
 
-  /** Seeded odd multipliers / offsets for the minhash affine permutation
-    * family (deterministic across runs and JVMs).
-    */
-  private val (permA, permB) = {
-    val rng = new scala.util.Random(0x5EED)
-    (Array.fill(256)(rng.nextLong() | 1L), Array.fill(256)(rng.nextLong()))
-  }
-  private def PermA(i: Int): Long = permA(i % 256)
-  private def PermB(i: Int): Long = permB(i % 256)
-
-  /** (id, distinct word shingles) via one tokenization pass — the
-    * verification-side twin of [[minhashBandRows]] (same HOF-blowup
-    * rationale; `wordShingles(tokens(...))` re-tokenizes per shingle).
+  /** (id, distinct word shingles) via one tokenization pass — a
+    * `mapPartitions` kernel for the same reason as
+    * [[hashedShingleRowsPortable]] (a Catalyst shingle expression over
+    * `tokens(...)` re-tokenizes per shingle).
     */
   def wordShingleRows(docs: DataFrame, idCol: String, textCol: String,
                       shingleN: Int): DataFrame = {
@@ -72,122 +60,31 @@ object DedupOps {
       }.toDF("id", "sh")
   }
 
-  /** (id, band, bandKey) rows — the LSH join keys — computed in one tight
-    * `mapPartitions` kernel.
+  // ---- Engine-portable (md5-based) near-dup kernels ----------------
+  //
+  // Every hash is the portable 60-bit md5 prefix
+  // (HashFunctions.portableHash60), every arithmetic step stays inside 60
+  // unsigned bits, and band keys are the plain '_'-joined signature
+  // strings — so the ENTIRE pipeline, from shingles to verified pairs, is
+  // reproducible in any md5-bearing SQL engine and the contract queries
+  // built on these are hash-checked against DuckDB rather than rows-only.
+
+  /** Candidate near-duplicate pairs via MinHash + LSH banding over
+    * precomputed (id, hs) portable shingle hashes
+    * ([[hashedShingleRowsPortable]] output), with the md5-derived
+    * permutations the DuckDB oracle re-derives.
     *
-    * Why not the Catalyst higher-order-function composition
-    * (`bandKeys(minhashSignature(wordShingles(...)))`)? Lambda arguments in
-    * nested HOFs are re-evaluated per element: the 16-band transform
-    * re-evaluates the 64-perm signature per band, which re-evaluates the
-    * shingle construction per perm — a 1000× per-row blowup that Catalyst
-    * cannot common-subexpression away (measured: minutes for 1k docs).
-    * The kernel is per-row, shuffle-free, and emits only (long, int, long),
-    * so it scales exactly like the expression version was meant to.
-    */
-  def minhashBandRows(docs: DataFrame, idCol: String, textCol: String,
-                      shingleN: Int, numPerms: Int, bands: Int): DataFrame =
-    minhashBandRowsFromShingles(
-      wordShingleRows(docs, idCol, textCol, shingleN), numPerms, bands)
-
-  /** Band rows from a PRECOMPUTED (id, sh) shingle table — lets one
-    * materialized shingle pass feed both the signature and the
-    * verification stages (see [[minhashNearDups]]).
-    */
-  def minhashBandRowsFromShingles(shingles: DataFrame,
-                                  numPerms: Int, bands: Int): DataFrame =
-    minhashBandRowsFromHashes(hashShingles(shingles), numPerms, bands)
-
-  /** (id, distinct shingle xxhash64s) — ONE tokenization+hash pass whose
-    * output feeds BOTH the signature kernel and the verification Jaccard
-    * of [[minhashNearDups]]. Long arrays cache and intersect far cheaper
-    * than string shingles, and 64-bit hashing makes collisions
-    * (≈ n²/2⁶⁵ per doc) irrelevant to the Jaccard ratio.
-    */
-  def hashedShingleRows(docs: DataFrame, idCol: String, textCol: String,
-                        shingleN: Int): DataFrame =
-    hashShingles(wordShingleRows(docs, idCol, textCol, shingleN))
-
-  /** Hash a (id, sh: array<string>) table to (id, hs: array<long>). */
-  private def hashShingles(shingles: DataFrame): DataFrame = {
-    val spark = shingles.sparkSession
-    import spark.implicits._
-    shingles.select(col("id").cast("long"), col("sh").cast("array<string>"))
-      .as[(Long, Seq[String])]
-      .mapPartitions { it =>
-        it.map { case (id, sh) =>
-          // one string hash per shingle (the numPerms "independent"
-          // permutations downstream are affine mixes h*A(i)+B(i) of it —
-          // the standard minhash construction, 64× fewer byte hashes)
-          (id, sh.map(s =>
-            XxHash64Function.hash(UTF8String.fromString(s), StringType, 42L))
-            .distinct.sorted.toArray)
-        }
-      }.toDF("id", "hs")
-  }
-
-  /** Band rows from precomputed (id, hs: array<long>) hashed shingles. */
-  def minhashBandRowsFromHashes(hashed: DataFrame,
-                                numPerms: Int, bands: Int): DataFrame = {
-    val spark = hashed.sparkSession
-    import spark.implicits._
-    val rowsPerBand = numPerms / bands
-    hashed.select(col("id").cast("long"), col("hs").cast("array<long>"))
-      .as[(Long, Array[Long])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, hs) =>
-          val sig = Array.fill(numPerms)(Long.MaxValue)
-          hs.foreach { h =>
-            var i = 0
-            while (i < numPerms) {
-              val mixed = h * PermA(i) + PermB(i)
-              if (mixed < sig(i)) sig(i) = mixed
-              i += 1
-            }
-          }
-          (0 until bands).map { b =>
-            val sb = new StringBuilder
-            var j = b * rowsPerBand
-            while (j < (b + 1) * rowsPerBand) { sb.append(sig(j)).append('_'); j += 1 }
-            (id, b, XxHash64Function.hash(UTF8String.fromString(sb.toString), StringType, b.toLong))
-          }
-        }
-      }.toDF("id", "band", "bk")
-  }
-
-  /** Candidate near-duplicate pairs via MinHash + LSH banding.
-    *
-    * @param shingleN    word-shingle width
     * @param numPerms    MinHash signature length (bands * rowsPerBand)
     * @param bands       LSH bands; collision threshold ≈ (1/bands)^(1/rows)
     * @param maxBucketSize drop degenerate buckets larger than this
     */
-  def minhashCandidates(docs: DataFrame, idCol: String, textCol: String,
-                        shingleN: Int = 3, numPerms: Int = 64, bands: Int = 16,
-                        maxBucketSize: Int = 1000): DataFrame =
-    minhashCandidatesFromHashes(
-      hashedShingleRows(docs, idCol, textCol, shingleN),
-      numPerms, bands, maxBucketSize)
-
-  /** [[minhashCandidates]] over precomputed (id, hs) hashed shingles. */
-  def minhashCandidatesFromHashes(hashed: DataFrame,
-                                  numPerms: Int = 64, bands: Int = 16,
-                                  maxBucketSize: Int = 1000): DataFrame = {
-    // The capped bucket aggregation consumes the band rows exactly ONCE
-    // (the pre-r11 shape fed three branches and persisted them; that
-    // persist is now dead weight that would evict genuinely shared
-    // caches like the hashed-shingle table).
-    candidatesFromBandRows(
-      minhashBandRowsFromHashes(hashed, numPerms, bands), maxBucketSize)
-  }
-
-  /** [[minhashCandidatesFromHashes]] with the PORTABLE md5-derived
-    * permutations — the banding the DuckDB oracle re-derives; feed it
-    * [[hashedShingleRowsPortable]] output.
-    */
   def minhashCandidatesFromHashesPortable(hashed: DataFrame,
                                           numPerms: Int = 64, bands: Int = 16,
                                           maxBucketSize: Int = 1000): DataFrame =
-    // single consumer — see minhashCandidatesFromHashes
+    // The capped bucket aggregation consumes the band rows exactly ONCE
+    // (the pre-r11 shape fed three branches and persisted them; that
+    // persist would now be dead weight that evicts genuinely shared
+    // caches like the hashed-shingle table).
     candidatesFromBandRows(
       minhashBandRowsPortable(hashed, numPerms, bands), maxBucketSize)
 
@@ -244,39 +141,6 @@ object DedupOps {
       }.toDF("id", "band", "bk")
   }
 
-  /** MinHash-LSH near-dup pairs, verified with exact n-gram Jaccard over
-    * the candidate set only.
-    */
-  def minhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-                      threshold: Double = 0.8, shingleN: Int = 3,
-                      numPerms: Int = 64, bands: Int = 16): DataFrame = {
-    // ONE tokenization+hash pass feeds the signature kernel AND both
-    // sides of the verification join (r2 verdict: the double tokenization
-    // dominated q25). The shared table holds hashed shingles (longs):
-    // smaller to cache, cheaper to intersect, identical Jaccard.
-    val hs = GraftCache.register(
-      hashedShingleRows(docs, idCol, textCol, shingleN)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val cands = minhashCandidatesFromHashes(hs, numPerms, bands)
-    cands
-      .join(hs.withColumnRenamed("id", "id_a").withColumnRenamed("hs", "sh_a"), "id_a")
-      .join(hs.withColumnRenamed("id", "id_b").withColumnRenamed("hs", "sh_b"), "id_b")
-      .withColumn("jaccard", H.jaccard(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), Rounding.half4(col("jaccard")).as("jaccard"))
-  }
-
-  // ---- Engine-portable (md5-based) near-dup variants ----------------
-  //
-  // Same algorithms as the xxhash64 paths above, but every hash is the
-  // portable 60-bit md5 prefix (HashFunctions.portableHash60), every
-  // arithmetic step stays inside 60 unsigned bits, and band keys are the
-  // plain '_'-joined signature strings — so the ENTIRE pipeline, from
-  // shingles to verified pairs, is reproducible in any md5-bearing SQL
-  // engine and the contract queries built on these are hash-checked
-  // against DuckDB rather than rows-only. ~3× hashing cost vs xxhash64;
-  // prefer the xxhash64 paths when no cross-engine audit is needed.
-
   private val Mask60 = (1L << 60) - 1
 
   /** Deterministic portable permutation constants, derived from md5 so an
@@ -291,8 +155,19 @@ object DedupOps {
     }
   }
 
-  /** (id, distinct sorted portable-60-bit shingle hashes) — one fused
-    * tokenize+shingle+md5 pass; the portable twin of [[hashedShingleRows]].
+  /** (id, distinct sorted portable-60-bit shingle hashes) — ONE fused
+    * tokenize+shingle+md5 pass whose output feeds both the signature
+    * kernel and the verification Jaccard. Long arrays cache and intersect
+    * far cheaper than string shingles.
+    *
+    * Why a `mapPartitions` kernel and not a Catalyst higher-order-function
+    * composition (minhash signature over shingles over tokens)? Lambda
+    * arguments in nested HOFs are re-evaluated per element: a 16-band
+    * transform re-evaluates the 64-perm signature per band, which
+    * re-evaluates the shingle construction per perm — a 1000× per-row
+    * blowup that Catalyst cannot common-subexpression away (measured:
+    * minutes for 1k docs). The kernels are per-row and shuffle-free, and
+    * emit only longs.
     */
   def hashedShingleRowsPortable(docs: DataFrame, idCol: String, textCol: String,
                                 shingleN: Int): DataFrame = {
@@ -411,9 +286,10 @@ object DedupOps {
       .distinct()
   }
 
-  /** Portable twin of [[minhashNearDups]]: identical LSH shape, every
-    * hash md5-derived — the pairs AND the Jaccard scores are reproducible
-    * in DuckDB, so the contract query is hash-checked, not rows-only.
+  /** MinHash-LSH near-dup pairs, verified with exact n-gram Jaccard over
+    * the candidate set only. Every hash is md5-derived — the pairs AND
+    * the Jaccard scores are reproducible in DuckDB, so the contract query
+    * is hash-checked, not rows-only.
     */
   def minhashNearDupsPortable(docs: DataFrame, idCol: String, textCol: String,
                               threshold: Double = 0.8, shingleN: Int = 3,
@@ -484,7 +360,9 @@ object DedupOps {
 
   /** Portable 60-bit SimHash sketches: per-token portable md5 hash votes
     * on 60 counters. Tokenless documents sketch to all-ones (every
-    * counter 0 >= 0), mirrored explicitly by the oracle.
+    * counter 0 >= 0), mirrored explicitly by the oracle. A kernel, not
+    * the Catalyst `aggregate`/`zip_with` form, which boxes one lambda
+    * evaluation per counter per token (measured ~2 ms/row).
     */
   def simhashSketchesPortable(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val spark = docs.sparkSession
@@ -512,9 +390,9 @@ object DedupOps {
       }.toDF("id", "sh")
   }
 
-  /** Portable twin of [[simhashNearDups]]: 60-bit sketch, 4×15-bit bands
-    * (guaranteed recall for hamming <= 3), exact hamming verify — fully
-    * DuckDB-reproducible.
+  /** SimHash near-dup pairs: 60-bit sketch, candidates by 15-bit band
+    * equality (4 bands ⇒ guaranteed recall for hamming <= 3), verified by
+    * exact hamming distance — fully DuckDB-reproducible.
     */
   def simhashNearDupsPortable(docs: DataFrame, idCol: String, textCol: String,
                               maxHamming: Int = 3): DataFrame = {
@@ -537,64 +415,6 @@ object DedupOps {
       .select("id_a", "id_b", "hamming")
   }
 
-  /** 64-bit SimHash sketches as a single-pass kernel (same HOF-blowup
-    * rationale as [[minhashBandRows]]: the Catalyst `aggregate`/`zip_with`
-    * form boxes 64 lambda evaluations per token — measured ~2 ms/row).
-    * Per token: one xxhash64 draw; bit j of the hash votes ±1 on counter
-    * j; final bit j is set iff counter j >= 0.
-    */
-  def simhashSketches(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(textCol).cast("string"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val toks = Option(text).getOrElse("").trim.split("\\s+").filter(_.nonEmpty)
-          val counters = new Array[Int](64)
-          toks.foreach { t =>
-            val h = XxHash64Function.hash(UTF8String.fromString(t), StringType, 42L)
-            var j = 0
-            while (j < 64) {
-              if (((h >>> j) & 1L) == 1L) counters(j) += 1 else counters(j) -= 1
-              j += 1
-            }
-          }
-          var sh = 0L
-          var j = 0
-          while (j < 64) { if (counters(j) >= 0) sh |= (1L << j); j += 1 }
-          (id, sh)
-        }
-      }.toDF("id", "sh")
-  }
-
-  /** SimHash near-dup pairs: 64-bit sketch, candidates by 16-bit band
-    * equality (4 bands ⇒ guaranteed recall for hamming ≤ 3), verified by
-    * exact hamming distance.
-    */
-  def simhashNearDups(docs: DataFrame, idCol: String, textCol: String,
-                      maxHamming: Int = 3): DataFrame = {
-    val sketched = GraftCache.register(
-      simhashSketches(docs, idCol, textCol)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-
-    val banded = sketched.select(
-      col("id"), col("sh"),
-      posexplode(transform(sequence(lit(0), lit(3)), b =>
-        call_function("shiftright", col("sh"), b * lit(16)).bitwiseAND(lit(0xFFFFL))
-      )).as(Seq("band", "bk")))
-
-    val a = banded.select(col("band"), col("bk"), col("id").as("id_a"), col("sh").as("sh_a"))
-    val b = banded.select(col("band"), col("bk"), col("id").as("id_b"), col("sh").as("sh_b"))
-    a.join(b, Seq("band", "bk"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "sh_a", "sh_b")
-      .distinct()
-      .withColumn("hamming", H.hamming(col("sh_a"), col("sh_b")))
-      .where(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-  }
-
   /** Winnowing fingerprints (the MOSS rolling-hash scheme): polynomial
     * rolling hash over char k-grams of the normalized text, then the
     * rightmost-minimum hash of each length-w window, distinct. Two
@@ -602,9 +422,9 @@ object DedupOps {
     * containment/plagiarism detector. Guarantee: any shared substring of
     * length ≥ w + k - 1 produces at least one shared fingerprint.
     *
-    * Kernel-shaped like [[minhashBandRows]]: per-row, shuffle-free, emits
-    * (id, array<long>); at 100 TB the downstream overlap join shuffles
-    * only (fingerprint, id) longs.
+    * Kernel-shaped like [[minhashBandRowsPortable]]: per-row,
+    * shuffle-free, emits (id, array<long>); at 100 TB the downstream
+    * overlap join shuffles only (fingerprint, id) longs.
     */
   def winnowingFingerprints(docs: DataFrame, idCol: String, textCol: String,
                             k: Int = 8, w: Int = 4): DataFrame = {
@@ -734,7 +554,7 @@ object DedupOps {
     * O(log n) rounds — diameter-independent, unlike min-label propagation
     * whose round count is the component diameter (a chain of length d
     * needs d rounds; this needs ~log d). Each round is ONE Spark action:
-    * the (count, xxhash64-xor) set checksum that detects the fixpoint is
+    * the (count, splitmix64-xor) set checksum that detects the fixpoint is
     * computed by the same aggregation that materializes the round's
     * persist, so there is no separate "changed" job.
     *

@@ -1007,10 +1007,11 @@ object MultimodalOps {
     * offset — 5,000 clips collapsed onto ~400 distinct prints (one per
     * length), the EXACT affine-degeneracy trap the round-13 image
     * fixture already documented and fixed (the pair-count invariant
-    * `clean_pairs == n + const` in AudioScaleProbe was the tell). The
-    * cubic mixer decorrelates windows across families; the last
-    * window additionally carries `3000 · variant`. Max amplitude
-    * 40·256 + 6000 stays inside 16-bit PCM.
+    * `clean_pairs == n + const` in the round-14 audio scale probe,
+    * SCALING.md, was the tell). The cubic mixer decorrelates windows
+    * across families; the last window additionally carries
+    * `3000 · variant`. Max amplitude 40·256 + 6000 stays inside 16-bit
+    * PCM.
     */
   private[graft] def windowAmp(family: Long, w: Int, variant: Int): Int =
     40 * (mix8(family * 65L + w) + 1) + (if (w == 64) 3000 * variant else 0)

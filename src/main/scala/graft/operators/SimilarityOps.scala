@@ -265,21 +265,14 @@ object SimilarityOps {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("sim"), col(textCol))
   }
 
-  /** Deterministic pseudo-random unit-ish hyperplanes (seeded). Small:
-    * nbits × dim doubles, inlined into the plan as a literal.
-    */
-  def hyperplanes(nbits: Int, dim: Int, seed: Long = 42L): Seq[Seq[Double]] = {
-    val rng = new scala.util.Random(seed)
-    Seq.fill(nbits)(Seq.fill(dim)(rng.nextGaussian()))
-  }
-
   /** Engine-portable hyperplanes: component (j,k) derives from the md5
     * 60-bit hash of "graft_plane_j_k", mapped affinely to [-1, 1) — any
     * md5-bearing engine re-derives the planes without a shared constant
     * table (uniform rather than Gaussian components; for sign-bucket LSH
     * only the direction distribution matters and uniform hypercube
     * directions are fine at these dims). The int→double conversion and
-    * the division are single IEEE ops, identical in every engine.
+    * the division are single IEEE ops, identical in every engine. Small:
+    * nbits × dim doubles, inlined into the plan as a literal.
     */
   def portableHyperplanes(nbits: Int = 16, dim: Int = 64): Seq[Seq[Double]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -288,28 +281,15 @@ object SimilarityOps {
         .toDouble / (1L << 59).toDouble - 1.0))
   }
 
-  /** Near-duplicate embedding pairs via random-hyperplane LSH buckets,
-    * verified with exact cosine.
-    */
-  def embeddingNearDups(corpus: DataFrame, minCosine: Double = 0.95,
-                        nbits: Int = 16, dim: Int = 64,
-                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    embeddingNearDupsWithPlanes(corpus, hyperplanes(nbits, dim), minCosine, idCol, vecCol)
-
-  /** [[embeddingNearDups]] on [[portableHyperplanes]] — the whole
+  /** Near-duplicate embedding pairs via random-hyperplane LSH buckets on
+    * [[portableHyperplanes]], verified with exact cosine — the whole
     * pipeline (buckets AND verified cosines) is md5-derivable, so the
     * contract query is hash-checked in DuckDB instead of rows-only.
     */
   def embeddingNearDupsPortable(corpus: DataFrame, minCosine: Double = 0.95,
                                 nbits: Int = 16, dim: Int = 64,
-                                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    embeddingNearDupsWithPlanes(corpus, portableHyperplanes(nbits, dim), minCosine, idCol, vecCol)
-
-  private def embeddingNearDupsWithPlanes(corpus: DataFrame,
-                                          planeRows: Seq[Seq[Double]],
-                                          minCosine: Double,
-                                          idCol: String, vecCol: String): DataFrame = {
-    val planes = typedLit(planeRows)
+                                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val planes = typedLit(portableHyperplanes(nbits, dim))
     // bucket keys feed both self-join branches; the HOF dot-per-plane is
     // the expensive part — materialize it once
     val keyed = graft.GraftCache.register(corpus.select(

@@ -81,25 +81,6 @@ object TextAnalysisOps {
       }.toDF().withColumnRenamed("id", idCol)
   }
 
-  private def markerHits(toks: Column, markers: Seq[String]): Column =
-    size(filter(toks, t => t.isin(markers.map(x => x: Any): _*))).cast("double")
-
-  /** Heuristic language ID as a pure Column expression (API surface; the
-    * operator below uses the [[textStats]] kernel for the same result at a
-    * fraction of the per-row cost). Highest marker-hit count wins, ties
-    * broken by [[LangMarkers]] order; "und" when nothing hits.
-    */
-  def langIdExpr(text: Column): Column = {
-    val toks = T.tokens(text)
-    val scored = LangMarkers.map { case (lang, ms) => (lang, markerHits(toks, ms)) }
-    val best = scored.foldLeft((lit("und"), lit(0.0))) {
-      case ((bestLang, bestScore), (lang, score)) =>
-        (when(score > bestScore, lit(lang)).otherwise(bestLang),
-         when(score > bestScore, score).otherwise(bestScore))
-    }
-    best._1
-  }
-
   /** Deterministic argmax over the kernel's per-language hit counts:
     * strict `>` fold = earliest language (in [[LangMarkers]] order) with
     * the maximum score; zero hits everywhere → "und".

@@ -38,15 +38,13 @@ object DedupQueries {
 
     // MinHash-LSH near-dups, portable md5 hashing end-to-end: candidate
     // pairs AND Jaccard scores are hash-checked against a full DuckDB
-    // re-derivation (shingles → signatures → bands → verify). The
-    // xxhash64 fast path remains DedupOps.minhashNearDups.
+    // re-derivation (shingles → signatures → bands → verify).
     "q25_minhash_neardups" -> ((s, d) =>
       DedupOps.minhashNearDupsPortable(dupCorpus(Tables.documents(s, d)), "id", "text",
         threshold = 0.7)),
 
 
-    // SimHash near-dups, portable 60-bit md5 sketches — oracle-checked;
-    // xxhash64 fast path remains DedupOps.simhashNearDups.
+    // SimHash near-dups, portable 60-bit md5 sketches — oracle-checked.
     "q26_simhash_neardups" -> ((s, d) =>
       DedupOps.simhashNearDupsPortable(dupCorpus(Tables.documents(s, d)), "id", "text")),
 

@@ -18,8 +18,7 @@ object SimilarityQueries {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Embedding near-dups via hyperplane LSH with PORTABLE md5-derived
-    // planes — buckets and verified cosines hash-checked in DuckDB; the
-    // seeded-Gaussian fast path remains SimilarityOps.embeddingNearDups.
+    // planes — buckets and verified cosines hash-checked in DuckDB.
     "q27_embedding_neardups" -> ((s, d) =>
       SimilarityOps.embeddingNearDupsPortable(dupEmbeddings(Tables.embeddings(s, d)),
         minCosine = 0.99)),

@@ -59,7 +59,7 @@ object BloomLayout {
     * `expectedNdv` sizes each row group's filter (parquet allocates
     * bits for the target FPP at that cardinality) and it must cover the
     * key's distinct count PER ROW GROUP — for unique keys, the rows per
-    * group. The asymmetry matters and was MEASURED (BloomScaleProbe):
+    * group. The asymmetry matters and was MEASURED (SCALING.md round 14):
     * an UNDER-estimate saturates the filter and silently stops skipping
     * (a 400k hint on 1.25M-key groups left 11/16 groups passing
     * absent-key probes — no error, no warning, just full decodes),

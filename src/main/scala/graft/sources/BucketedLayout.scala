@@ -54,8 +54,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * partitions to match, so the whole join runs at bucket-count
   * parallelism (asserted structurally in BucketedJoinSpec; q255 is the
   * oracle-gated contract query). DECISION RULE, as MEASURED
-  * (MixedJoinProbe, SCALING.md round 13): for the mixed join itself
-  * the half-shuffle discount (only the delta moves) beat the
+  * (SCALING.md round 13, mixed bucketed⋈unbucketed join): for the
+  * mixed join itself the half-shuffle discount (only the delta moves) beat the
   * idle-core loss at every probed size — an 8-bucket fact joined
   * faster than both the plain join and the escape hatch up to 60M
   * rows — so keep the bucketed scan for delta joins even on a

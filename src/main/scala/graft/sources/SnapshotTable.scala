@@ -205,14 +205,6 @@ object SnapshotTable {
     */
   @volatile private[graft] var clock: () => Long = () => System.currentTimeMillis()
 
-  /** Probe-only A/B knob: when false, delete/merge skip change-file
-    * materialization (manifest carries an empty feed). Exists so
-    * SnapshotScaleProbe can measure the feed's write overhead
-    * same-JVM/same-ambient (cross-run comparison is hostage to host
-    * drift); production code never touches it.
-    */
-  @volatile private[graft] var materializeChanges: Boolean = true
-
   /** The optimistic-commit driver shared by every multi-attempt writer:
     * read the tip, let `build` derive a candidate manifest against it
     * (None = the caller detected a replay/no-op — surfaced as -1),
@@ -308,8 +300,9 @@ object SnapshotTable {
     // (file list) plus O(files × integral columns) stats lines — the
     // original multi-pass filter/groupBy shape re-split and re-boxed
     // every line per category and measured 7.9 s at 10⁶ files × 4
-    // stats columns (SnapshotScaleProbe stats= arm); one pass with
-    // mutable builders keeps the same result at a fraction of that.
+    // stats columns (SCALING.md, round-17 multi-column envelopes); one
+    // pass with mutable builders keeps the same result at a fraction of
+    // that.
     val lines = text.split('\n').iterator.filter(_.nonEmpty).toVector
     require(lines.headOption.contains(Header),
       s"not a snapshot manifest: ${manifestPath(root, version)}")
@@ -858,15 +851,14 @@ object SnapshotTable {
           s"DSv2 overwrite at $root lost a race to a schema evolution " +
           s"(planned against a different schema than tip v${pm.version}'s) — " +
           "re-plan the write against the widened schema")
-      val doCdc = materializeChanges // capture once per attempt
       val cdcFiles =
-        if (doCdc && pm.files.nonEmpty)
+        if (pm.files.nonEmpty)
           writeCdcFiles(spark, rp, readFiles(spark, rp, pm, pm.files)
             .withColumn("change_type", lit("delete")))
         else Nil
       Some(Manifest(pm.version + 1, pm.version, "overwrite", pm.statsCol,
         pm.schemaJson, metas, pm.streamId, pm.streamBatch, cdcFiles,
-        addedPaths = Some(metas.map(_.path).toSet), cdcDone = Some(doCdc)))
+        addedPaths = Some(metas.map(_.path).toSet), cdcDone = Some(true)))
     }
   }
 
@@ -948,9 +940,8 @@ object SnapshotTable {
           s"read are no longer in tip v${pm.version} (e.g. ${gone.head}) — " +
           "re-run the statement")
       val (replaced, carried) = pm.files.partition(f => replacedPaths.contains(f.path))
-      val doCdc = materializeChanges // capture once per attempt
       val cdcFiles =
-        if (!doCdc || (replaced.isEmpty && metas.isEmpty)) Nil
+        if (replaced.isEmpty && metas.isEmpty) Nil
         else {
           // membership events over the touched groups: old∖new deletes,
           // new∖old inserts; a row re-emitted unchanged by the
@@ -972,7 +963,7 @@ object SnapshotTable {
       Some(Manifest(pm.version + 1, pm.version, op, pm.statsCol,
         pm.schemaJson, carried ++ metas, pm.streamId, pm.streamBatch,
         cdcFiles, addedPaths = Some(metas.map(_.path).toSet),
-        cdcDone = Some(doCdc)))
+        cdcDone = Some(true)))
     }
   }
 
@@ -1066,10 +1057,6 @@ object SnapshotTable {
     val rp = new Path(root)
     val fs = fsOf(spark, rp)
     commitLoop(spark, fs, rp, "deleteWhere") { base =>
-      // capture the probe knob ONCE per attempt: the cdc files written
-      // and the cdcDone capability flag recorded must agree even if
-      // the global flips mid-commit
-      val doCdc = materializeChanges
       val (touched, carried) =
         base.files.partition(f => f.minKey <= hi && f.maxKey >= lo)
       val (rewritten, cdcFiles) =
@@ -1093,14 +1080,13 @@ object SnapshotTable {
               .where(col(base.statsCol).cast("long").between(lo, hi))
               .withColumn("change_type", lit("delete"))
             (writeDataFiles(spark, rp, survivors, base.statsCol),
-             if (doCdc) writeCdcFiles(spark, rp, deleted)
-             else Nil)
+             writeCdcFiles(spark, rp, deleted))
           } finally touchedRows.unpersist(false)
         }
       Some(Manifest(base.version + 1, base.version, "delete", base.statsCol,
         base.schemaJson, carried ++ rewritten, base.streamId, base.streamBatch,
         cdcFiles, addedPaths = Some(rewritten.map(_.path).toSet),
-        cdcDone = Some(doCdc)))
+        cdcDone = Some(true)))
     }
   }
 
@@ -1151,7 +1137,6 @@ object SnapshotTable {
       s"${uniq.getLong(1)} distinct ${keyCols.mkString("(", ",", ")")} — " +
       "deduplicate (e.g. keep-latest per key) before merging")
     commitLoop(spark, fs, rp, "merge") { base =>
-      val doCdc = materializeChanges // capture once per attempt
       // Re-derive the final schema against THIS parent (a racing
       // evolution may have widened it since entry — same rule as
       // appendEvolved's retry); survivors and batch both align to it.
@@ -1165,8 +1150,8 @@ object SnapshotTable {
       // Both frames are DELTA-sized — the persist-wins case of the
       // cache discipline: without it every consumer re-reads the
       // touched parquet and re-runs the caller's batch pipeline
-      // (SnapshotScaleProbe's cdc= arm measures the materialization
-      // trade same-JVM; SCALING.md round-15 section). Every downstream
+      // (the materialization trade is measured in SCALING.md's
+      // round-15 change-feed section). Every downstream
       // key source — stabbedFiles, the survivor anti-join, the insert
       // leg — reads the PERSISTED newAligned, never alignedBatch: with
       // a non-deterministic caller batch, keys recomputed from the
@@ -1208,12 +1193,11 @@ object SnapshotTable {
           .unionByName(pairs.where(changed)
             .select(outCols.map(c => col(s"n.$c")): _*)
             .withColumn("change_type", lit("update_postimage")))
-        val cdcFiles =
-          if (doCdc) writeCdcFiles(spark, rp, events) else Nil
+        val cdcFiles = writeCdcFiles(spark, rp, events)
         Some(Manifest(base.version + 1, base.version, "merge", base.statsCol,
           finalJson, carried ++ newFiles, base.streamId, base.streamBatch,
           cdcFiles, addedPaths = Some(newFiles.map(_.path).toSet),
-          cdcDone = Some(doCdc)))
+          cdcDone = Some(true)))
       } finally {
         touchedRows.unpersist(false)
         newAligned.unpersist(false)
@@ -1507,8 +1491,9 @@ object SnapshotTable {
           // Capability check, loud (the CellGuard convention — enforced
           // bounds, not documented ones): an empty cdc list is only a
           // provably-empty feed when the manifest RECORDS that
-          // materialization was on. cdcDone=false (probe's A/B arm) and
-          // a pre-flag manifest with no cdc files both mean the events
+          // materialization was on. cdcDone=false (written by an older
+          // build that could switch materialization off) and a pre-flag
+          // manifest with no cdc files both mean the events
           // were never written — reading them as "no changes" would
           // silently understate the feed.
           m.cdcDone match {

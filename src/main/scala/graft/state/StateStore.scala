@@ -60,17 +60,17 @@ class StateStore(spark: SparkSession, root: String) {
   def sessions: DataFrame = readOrEmpty("sessions", sessionSchema)
 
   /** Start (or restart) a session row for a product type
-    * (state.py:99-106).
+    * (state.py:99-106). The row is built with the typed API, like
+    * [[summary]]'s, so the product type never passes through a SQL parser.
     */
   def startSession(productType: String, totalPages: Int): Unit = {
+    import spark.implicits._
     val others = sessions.where(col("product_type") =!= productType)
     val existing = sessions.where(col("product_type") === productType)
       .select("last_completed_page", "total_products").collect().headOption
-    val row = spark.sql(
-      s"""SELECT '$productType' AS product_type, 'in_progress' AS status,
-         | ${existing.map(_.getInt(0)).getOrElse(0)} AS last_completed_page,
-         | $totalPages AS total_pages,
-         | CAST(${existing.map(_.getLong(1)).getOrElse(0L)} AS LONG) AS total_products""".stripMargin)
+    val row = Seq((productType, "in_progress", existing.map(_.getInt(0)).getOrElse(0),
+        totalPages, existing.map(_.getLong(1)).getOrElse(0L)))
+      .toDF("product_type", "status", "last_completed_page", "total_pages", "total_products")
     commit(others.unionByName(row), "sessions")
   }
 

@@ -30,20 +30,20 @@ class CacheDisciplineSpec extends SparkSpec {
       s"leftover cached RDDs: ${spark.sparkContext.getPersistentRDDs.values.map(_.name)}")
   }
 
-  test("minhashNearDups leaves no cached blocks after release") {
-    assertReleased(DedupOps.minhashNearDups(docs, "id", "text", threshold = 0.5).count())
+  test("minhashNearDupsPortable leaves no cached blocks after release") {
+    assertReleased(DedupOps.minhashNearDupsPortable(docs, "id", "text", threshold = 0.5).count())
   }
 
-  test("simhashNearDups leaves no cached blocks after release") {
-    assertReleased(DedupOps.simhashNearDups(docs, "id", "text").count())
+  test("simhashNearDupsPortable leaves no cached blocks after release") {
+    assertReleased(DedupOps.simhashNearDupsPortable(docs, "id", "text").count())
   }
 
   test("fingerprintOverlap leaves no cached blocks after release") {
     assertReleased(DedupOps.fingerprintOverlap(docs, "id", "text", minContainment = 0.5).count())
   }
 
-  test("embeddingNearDups leaves no cached blocks after release") {
-    assertReleased(SimilarityOps.embeddingNearDups(embeddings, minCosine = 0.8).count())
+  test("embeddingNearDupsPortable leaves no cached blocks after release") {
+    assertReleased(SimilarityOps.embeddingNearDupsPortable(embeddings, minCosine = 0.8).count())
   }
 
   test("releaseAll is idempotent and safe with nothing registered") {

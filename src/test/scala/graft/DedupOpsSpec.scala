@@ -23,22 +23,6 @@ class DedupOpsSpec extends SparkSpec {
     assert(out.length == 3) // {1,4,5}, {2}, {3}
   }
 
-  test("minhashNearDups finds the planted near-dup and nothing else") {
-    val pairs = DedupOps.minhashNearDups(docs, "id", "text", threshold = 0.5)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.contains((1L, 2L)))
-    assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
-    // exact dups found with jaccard 1.0
-    assert(pairs.contains((1L, 5L)))
-  }
-
-  test("simhashNearDups: identical docs at hamming 0, unrelated docs absent") {
-    val out = DedupOps.simhashNearDups(docs, "id", "text").collect()
-    val h15 = out.find(r => r.getAs[Long]("id_a") == 1L && r.getAs[Long]("id_b") == 5L)
-    assert(h15.isDefined && h15.get.getAs[Int]("hamming") == 0)
-    assert(!out.exists(r => r.getAs[Long]("id_a") == 3L || r.getAs[Long]("id_b") == 3L))
-  }
-
   test("minhashNearDupsPortable finds the planted near-dup and nothing else") {
     val pairs = DedupOps.minhashNearDupsPortable(docs, "id", "text", threshold = 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
@@ -76,8 +60,10 @@ class DedupOpsSpec extends SparkSpec {
   }
 
   test("minhash band rows: deterministic across runs, bands per doc") {
-    val a = DedupOps.minhashBandRows(docs, "id", "text", 3, 64, 16).collect()
-    val b = DedupOps.minhashBandRows(docs, "id", "text", 3, 64, 16).collect()
+    def bandRows = DedupOps.minhashBandRowsPortable(
+      DedupOps.hashedShingleRowsPortable(docs, "id", "text", 3), 64, 16).collect()
+    val a = bandRows
+    val b = bandRows
     assert(a.map(_.toString).sorted.toSeq == b.map(_.toString).sorted.toSeq)
     assert(a.length == 5 * 16)
   }
@@ -86,10 +72,11 @@ class DedupOpsSpec extends SparkSpec {
     // 50 identical docs all share every band bucket → bucket size 50;
     // with maxBucketSize=10 the guard must drop them all.
     val many = (1L to 50L).map(i => (i, base)).toDF("id", "text")
-    val cands = DedupOps.minhashCandidates(many, "id", "text", maxBucketSize = 10)
+    val hashed = DedupOps.hashedShingleRowsPortable(many, "id", "text", 3)
+    val cands = DedupOps.minhashCandidatesFromHashesPortable(hashed, maxBucketSize = 10)
     assert(cands.count() == 0)
     // and with a tolerant cap the self-join yields all pairs
-    val loose = DedupOps.minhashCandidates(many, "id", "text", maxBucketSize = 100)
+    val loose = DedupOps.minhashCandidatesFromHashesPortable(hashed, maxBucketSize = 100)
     assert(loose.count() == 50L * 49L / 2L)
   }
 

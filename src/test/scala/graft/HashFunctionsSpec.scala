@@ -1,54 +1,19 @@
 package graft
 
-import graft.functions.{HashFunctions => H, TextFunctions => T}
+import graft.functions.{HashFunctions => H}
 import org.apache.spark.sql.functions._
 
-/** Expression-form sketch utilities (the kernel twins are covered in
-  * DedupOpsSpec; these keep the Column API honest on small inputs).
+/** Column-form hash and similarity primitives (the sketch kernels are
+  * covered in DedupOpsSpec; these keep the Column API honest on small
+  * inputs).
   */
 class HashFunctionsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("wordShingles: n-grams, distinct, empty below n tokens") {
-    val out = Seq("a b c d", "a b", "a a a a").toDF("s")
-      .select(H.wordShingles(T.tokens(col("s")), 3).as("sh"))
-      .as[Seq[String]].collect()
-    assert(out(0) == Seq("a b c", "b c d"))
-    assert(out(1) == Seq.empty)
-    assert(out(2) == Seq("a a a")) // distinct collapses repeats
-  }
-
-  test("charShingles over cleaned text") {
-    val out = Seq("ab  cd").toDF("s")
-      .select(H.charShingles(col("s"), 3).as("sh")).as[Seq[String]].collect()
-    assert(out.head == Seq("ab ", "b c", " cd"))
-  }
-
-  test("minhashSignature: equal sets → equal signatures; empty → sentinel") {
-    val df = Seq(("a b c d e", "a b c d e"), ("", "x y z w v")).toDF("x", "y")
-      .select(
-        H.minhashSignature(H.wordShingles(T.tokens(col("x")), 2), 8).as("sx"),
-        H.minhashSignature(H.wordShingles(T.tokens(col("y")), 2), 8).as("sy"))
-    val rows = df.as[(Seq[Long], Seq[Long])].collect()
-    assert(rows(0)._1 == rows(0)._2)
-    assert(rows(1)._1 == Seq.fill(8)(Long.MaxValue))
-    assert(rows(1)._1 != rows(1)._2)
-  }
-
-  test("bandKeys: identical signatures collide in every band") {
-    val df = Seq("the quick brown fox jumps high").toDF("s")
-      .select(H.bandKeys(
-        H.minhashSignature(H.wordShingles(T.tokens(col("s")), 2), 8), 4, 2).as("bk"))
-    val bk = df.as[Seq[Long]].collect().head
-    assert(bk.length == 4 && bk.distinct.length >= 1)
-  }
-
-  test("simhash expression: identical tokens → hamming 0; hamming symmetric") {
-    val df = Seq(("a b c", "a b c"), ("a b c", "x y z")).toDF("x", "y")
-      .select(H.hamming(H.simhash(T.tokens(col("x"))),
-        H.simhash(T.tokens(col("y")))).as("h"))
-    val hs = df.as[Int].collect()
-    assert(hs(0) == 0 && hs(1) > 0)
+  test("hamming: identical sketches → 0; symmetric on differing bits") {
+    val df = Seq((0x5A5AL, 0x5A5AL), (0x0FL, 0xF0L), (0xF0L, 0x0FL), (-1L, 0L))
+      .toDF("x", "y").select(H.hamming(col("x"), col("y")).as("h"))
+    assert(df.as[Int].collect().toSeq == Seq(0, 8, 8, 64))
   }
 
   test("jaccard expression bounds and exact values") {

@@ -146,6 +146,20 @@ class PipelineJobsSpec extends SparkSpec {
     assert(state.completed.count() == 0)
   }
 
+  test("an unknown product type is rejected before any state is written") {
+    val work = mkWorkDir()
+    val pagesDir = s"$work/pages"
+    writeLifePages(pagesDir, Seq(Seq(("UIN1", "Alpha", 1))))
+    intercept[IllegalArgumentException](Jobs.scrape(spark, work, "x'y", pagesDir, 1))
+    intercept[IllegalArgumentException](Jobs.delta(spark, work, "x'y", pagesDir, 1))
+    intercept[IllegalArgumentException](Jobs.reset(spark, work, "x'y"))
+    val state = new StateStore(spark, s"$work/state")
+    assert(state.sessions.count() == 0)
+    // a quote in the key is data, not SQL, when a session row is built
+    state.startSession("o'brien", 3)
+    assert(state.sessions.collect().map(_.getAs[String]("product_type")).toSeq == Seq("o'brien"))
+  }
+
   test("status summary exposes sessions plus completed/failed counts (A3)") {
     val work = mkWorkDir()
     val pagesDir = s"$work/pages"

@@ -56,15 +56,6 @@ class SimilarityOpsSpec extends SparkSpec {
     assert(ivf == bf)
   }
 
-  test("embeddingNearDups finds scaled copies in the same LSH bucket") {
-    val scaled = corpus.unionByName(corpus.select(
-      (col("vec_id") + 100).as("vec_id"),
-      transform(col("embedding"), x => (x * lit(1.001f)).cast("float")).as("embedding")))
-    val pairs = SimilarityOps.embeddingNearDups(scaled, minCosine = 0.999, dim = dim)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    (0L until n.toLong).foreach(i => assert(pairs.contains((i, i + 100)), s"missing pair $i"))
-  }
-
   test("portable planes are in [-1,1) and the portable LSH finds planted dups") {
     val planes = SimilarityOps.portableHyperplanes(nbits = 16, dim = dim)
     assert(planes.length == 16 && planes.forall(_.length == dim))
