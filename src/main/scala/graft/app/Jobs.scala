@@ -50,15 +50,15 @@ object Jobs {
       ParsePipeline.parse(spark, pages, productType))
 
     // J1: only rows whose document_url is NOT already in the metadata CSV.
+    // A link-less row (null document_url) passes the anti-join unchanged:
+    // a null key equals nothing, so it is never matched and is re-appended
+    // on every run. One join over `parsed` keeps the scan and parse of each
+    // page to a single pass.
     // `fresh` MUST be pinned before the CSV append below mutates its input:
     // a lazy re-evaluation after the append would re-read the grown CSV and
     // see an empty delta (SURVEY §7.4 — checkpoint before side effects).
     val existing = CsvMeta.loadExistingUrls(spark, csvPath(workDir, productType), productType)
-    val fresh = DeltaOps.delta(
-      parsed.where(col("document_url").isNotNull),
-      existing,
-      "document_url")
-      .unionByName(parsed.where(col("document_url").isNull))
+    val fresh = DeltaOps.delta(parsed, existing, "document_url")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val freshCount = fresh.count()
 

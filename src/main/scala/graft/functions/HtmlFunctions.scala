@@ -27,15 +27,29 @@ object HtmlFunctions {
   private val CellRe  = new Regex("(?is)<(td|th)\\b([^>]*)>(.*?)</\\1>", "tag", "attrs", "body")
   private val ARe     = new Regex("(?is)<a\\b([^>]*)>(.*?)</a>", "attrs", "body")
   private val TagRe   = "(?s)<[^>]*>".r
+  private val WsRe    = "\\s+".r
+  private val TbodyRe = new Regex("(?is)<tbody\\b[^>]*>(.*?)</tbody>")
+  private val UlRe    = new Regex("(?is)<ul\\b([^>]*)>(.*?)</ul>", "attrs", "body")
+  private val LiRe    = new Regex("(?is)<li\\b([^>]*)>(.*?)</li>", "attrs", "body")
+  private val DocFileRe = new Regex("(?i)/([^/]+\\.(?:pdf|xlsx|xls))")
+  private val OnclickRe = new Regex("(?i)onclick\\s*=\\s*(\"([^\"]*)\"|'([^']*)')")
   private val OnclickUrlRe = new Regex("window\\.open\\(['\"]([^'\"]+)['\"]")
+  private val CurRe   = new Regex("_cur=(\\d+)")
 
-  /** Attribute value from a raw attribute string (handles ', ", bare). */
-  def attr(attrs: String, name: String): Option[String] = {
-    val re = new Regex("(?i)\\b" + Regex.quote(name) + "\\s*=\\s*(\"([^\"]*)\"|'([^']*)'|([^\\s>]+))")
+  /** Pattern for one attribute's value in a raw attribute string
+    * (handles ', ", bare).
+    */
+  private def attrRe(name: String): Regex =
+    new Regex("(?i)\\b" + Regex.quote(name) + "\\s*=\\s*(\"([^\"]*)\"|'([^']*)'|([^\\s>]+))")
+
+  private val ClassAttr = attrRe("class")
+  private val HrefAttr  = attrRe("href")
+
+  /** Value of the attribute matched by `re` (an [[attrRe]] pattern). */
+  private def attr(attrs: String, re: Regex): Option[String] =
     re.findFirstMatchIn(attrs).map { m =>
       Option(m.group(2)).orElse(Option(m.group(3))).getOrElse(m.group(4))
     }
-  }
 
   private val Entities = Seq(
     "&amp;" -> "&", "&lt;" -> "<", "&gt;" -> ">", "&quot;" -> "\"",
@@ -47,9 +61,10 @@ object HtmlFunctions {
   /** X1: tag-stripped text with single-space separators, collapsed
     * whitespace, trimmed — get_text(separator=" ", strip=True) + \s+ → " ".
     */
-  def getText(html: String): String =
-    decodeEntities(TagRe.replaceAllIn(html, " "))
-      .replaceAll("\\s+", " ").trim
+  def getText(html: String): String = {
+    val text = TagRe.replaceAllIn(html, " ")
+    WsRe.replaceAllIn(if (text.indexOf('&') < 0) text else decodeEntities(text), " ").trim
+  }
 
   /** G1: the data table — class contains "table", else first table inside a
     * div whose class contains "portlet".
@@ -57,10 +72,10 @@ object HtmlFunctions {
   def findDataTable(html: String): Option[String] = {
     val tables = TableRe.findAllMatchIn(html).toSeq
     val byClass = tables.find(m =>
-      attr(m.group("attrs"), "class").exists(_.toLowerCase.contains("table")))
+      attr(m.group("attrs"), ClassAttr).exists(_.toLowerCase.contains("table")))
     byClass.map(_.group("body")).orElse {
       DivRe.findAllMatchIn(html)
-        .find(d => attr(d.group("attrs"), "class").exists(_.toLowerCase.contains("portlet")))
+        .find(d => attr(d.group("attrs"), ClassAttr).exists(_.toLowerCase.contains("portlet")))
         .flatMap { d =>
           val after = html.substring(d.start)
           TableRe.findFirstMatchIn(after).map(_.group("body"))
@@ -77,12 +92,11 @@ object HtmlFunctions {
     * `<tr>` minus the header row; cells are `td`/`th` in document order.
     */
   def tableRows(tableBody: String): Seq[HtmlRow] = {
-    val tbody = new Regex("(?is)<tbody\\b[^>]*>(.*?)</tbody>")
-      .findFirstMatchIn(tableBody).map(_.group(1))
+    val tbody = TbodyRe.findFirstMatchIn(tableBody).map(_.group(1))
     val scope = tbody.getOrElse(tableBody)
     val all = TrRe.findAllMatchIn(scope).map { m =>
       HtmlRow(
-        attr(m.group("attrs"), "class").getOrElse(""),
+        attr(m.group("attrs"), ClassAttr).getOrElse(""),
         CellRe.findAllMatchIn(m.group("body")).map(_.group("body")).toSeq)
     }.toSeq
     if (tbody.isDefined) all else all.drop(1)
@@ -99,7 +113,7 @@ object HtmlFunctions {
 
   /** X3 driver/executor-side twin of TextFunctions.filenameFromUrl. */
   def filenameFromUrl(url: String): Option[String] = {
-    val m = new Regex("(?i)/([^/]+\\.(?:pdf|xlsx|xls))").findFirstMatchIn(url)
+    val m = DocFileRe.findFirstMatchIn(url)
     if (m.isDefined) Some(m.get.group(1))
     else url.split("/").reverseIterator.find(_.contains("."))
       .map(_.split("\\?")(0))
@@ -115,7 +129,7 @@ object HtmlFunctions {
     val exts = Seq(".pdf", ".xlsx", ".xls", "/documents/")
     val links = ARe.findAllMatchIn(cellHtml).toSeq
     links.iterator.flatMap { a =>
-      attr(a.group("attrs"), "href").filter(h => exts.exists(h.toLowerCase.contains)).map { href =>
+      attr(a.group("attrs"), HrefAttr).filter(h => exts.exists(h.toLowerCase.contains)).map { href =>
         val url = urljoin(baseUrl, href)
         val text = getText(a.group("body"))
         val filename = if (text.nonEmpty && text.length >= 3) Some(text)
@@ -124,8 +138,7 @@ object HtmlFunctions {
       }
     }.nextOption().getOrElse {
       // onclick fallback: any element with onclick= containing window.open
-      val onclick = new Regex("(?i)onclick\\s*=\\s*(\"([^\"]*)\"|'([^']*)')")
-        .findAllMatchIn(cellHtml)
+      val onclick = OnclickRe.findAllMatchIn(cellHtml)
         .map(m => Option(m.group(2)).getOrElse(m.group(3)))
         .flatMap(oc => OnclickUrlRe.findFirstMatchIn(oc).map(_.group(1)))
         .nextOption()
@@ -140,13 +153,11 @@ object HtmlFunctions {
 
   /** X6: active page number from the pagination `ul`, default 1. */
   def currentPage(html: String): Int = {
-    val ul = new Regex("(?is)<ul\\b([^>]*)>(.*?)</ul>", "attrs", "body")
-      .findAllMatchIn(html)
-      .find(m => attr(m.group("attrs"), "class").exists(_.toLowerCase.contains("pagination")))
+    val ul = UlRe.findAllMatchIn(html)
+      .find(m => attr(m.group("attrs"), ClassAttr).exists(_.toLowerCase.contains("pagination")))
     ul.flatMap { u =>
-      new Regex("(?is)<li\\b([^>]*)>(.*?)</li>", "attrs", "body")
-        .findAllMatchIn(u.group("body"))
-        .find(m => attr(m.group("attrs"), "class").exists(_.toLowerCase.contains("active")))
+      LiRe.findAllMatchIn(u.group("body"))
+        .find(m => attr(m.group("attrs"), ClassAttr).exists(_.toLowerCase.contains("active")))
         .map(m => getText(m.group("body")))
         .filter(t => t.nonEmpty && t.forall(_.isDigit))
         .map(_.toInt)
@@ -157,8 +168,8 @@ object HtmlFunctions {
   def maxPageFromPagination(html: String): Int = {
     val curs = for {
       a <- ARe.findAllMatchIn(html)
-      href <- attr(a.group("attrs"), "href").iterator
-      m <- new Regex("_cur=(\\d+)").findFirstMatchIn(href).iterator
+      href <- attr(a.group("attrs"), HrefAttr).iterator
+      m <- CurRe.findFirstMatchIn(href).iterator
     } yield m.group(1).toInt
     (Iterator(1) ++ curs).max
   }

@@ -49,7 +49,10 @@ object CsvMeta {
       "scraped_at"))
 
   /** S4: project the existing-URL set out of a metadata CSV
-    * (delta_download.py:41-51); empty/missing file → empty set.
+    * (delta_download.py:41-51); empty/missing file → empty set. The
+    * missing-file set is a local relation, so Catalyst knows it is empty
+    * and drops an anti-join against it: a first ingest plans no join and
+    * no shuffle.
     *
     * The CSV is read with the sink's own all-string schema for
     * `productType`, so no Spark job runs to infer the header;
@@ -70,7 +73,7 @@ object CsvMeta {
                            reader: DataFrameReader => DataFrameReader): DataFrame = {
     val fs = new Path(csvPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(csvPath)))
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      return spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
         StructType.fromDDL("document_url string"))
     reader(spark.read.option("header", "true")).csv(csvPath)
       .select("document_url")

@@ -17,8 +17,8 @@ import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
   *    page Dataset is built only for [startPage, endPage], so no fetch work
   *    is ever scheduled outside the window.
   *
-  * Spark shape: the driver enumerates page numbers (they are known up
-  * front), builds `Dataset[Int]`, and a pluggable `fetch` function runs in
+  * Spark shape: the page numbers are known up front, so the scan is a
+  * `spark.range` over them and a pluggable `fetch` function runs in
   * `mapPartitions` on executors — one HTTP GET per page, parallel across
   * partitions, no shuffle. `fetch` is pluggable so tests and the offline
   * harness read fixture files instead of the network.
@@ -45,23 +45,25 @@ object PageSource {
 
   /** S1: the page scan. `fetch(page)` returns the page HTML or throws; a
     * throwing page becomes an empty-HTML row (parity with base.py:127-133's
-    * continue-on-error). Pages ascend within partitions (O1); carry `page`
-    * downstream and sort explicitly where output order matters.
+    * continue-on-error).
+    *
+    * The pages come from `spark.range(startPage, endPage + 1)` split into
+    * `min(pages, defaultParallelism)` range partitions: each partition is
+    * one contiguous, ascending page run (O1), and the scan is one narrow
+    * stage — no sampling job and no exchange before the first page is
+    * read. Carry `page` downstream and sort explicitly where output order
+    * matters.
     */
   def scan(spark: SparkSession, productType: String,
            startPage: Int, endPage: Int,
-           fetch: Int => String,
-           numSlices: Int = 0): Dataset[PageHtml] = {
-    import spark.implicits._
-    val slices = if (numSlices > 0) numSlices
-                 else math.min(endPage - startPage + 1, spark.sparkContext.defaultParallelism)
-    val pages = spark.createDataset(startPage to endPage)
-      .repartitionByRange(math.max(slices, 1), $"value")
+           fetch: Int => String): Dataset[PageHtml] = {
+    val slices = math.min(endPage - startPage + 1, spark.sparkContext.defaultParallelism)
     implicit val enc = Encoders.product[PageHtml]
-    pages.mapPartitions { it =>
+    spark.range(startPage, endPage + 1L, 1L, math.max(slices, 1)).mapPartitions { it =>
       it.map { p =>
-        val html = try fetch(p) catch { case _: Exception => "" }
-        PageHtml(productType, p, html)
+        val page = p.intValue
+        val html = try fetch(page) catch { case _: Exception => "" }
+        PageHtml(productType, page, html)
       }
     }
   }

@@ -82,6 +82,16 @@ class CsvAppendSpec extends SparkSpec {
     assert(chain.exists(e => Option(e.getMessage).exists(_.toLowerCase.contains("header"))), err.toString)
   }
 
+  test("a missing CSV's URL set is empty and the delta anti-join against it is dropped") {
+    val existing = CsvMeta.loadExistingUrls(spark, tmpDir() + "/life_products.csv", "life")
+    assert(existing.isEmpty)
+    val current = Seq(("u1", "P1"), (null: String, "P2")).toDF("document_url", "product_name")
+    val fresh = graft.operators.DeltaOps.delta(current, existing, "document_url")
+    val plan = fresh.queryExecution.executedPlan.toString
+    assert(!plan.contains("Join") && !plan.contains("Exchange"), s"first ingest must not join:\n$plan")
+    assert(fresh.count() == 2)
+  }
+
   test("renameOverFallback: history survives every failure mode (never delete-then-hope)") {
     // the non-atomic replace path must keep a complete copy of dst's
     // prior content on disk at all times: a missing src (the trigger

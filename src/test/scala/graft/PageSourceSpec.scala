@@ -35,4 +35,21 @@ class PageSourceSpec extends SparkSpec {
     assert(out(2).html == "")
     assert(out.forall(_.productType == "life"))
   }
+
+  test("scan: one contiguous ascending page range per partition, no exchange (O1)") {
+    val dir = Files.createTempDirectory("graft-pages").toString
+    val n = 9
+    (1 to n).foreach(p => Files.writeString(Paths.get(dir, s"page_$p.html"), s"<p>$p</p>"))
+    val ds = PageSource.fixtureScan(spark, "life", dir, 1, n)
+    val parts = ds.rdd.glom().collect().map(_.toSeq).toSeq
+    assert(parts.size == math.min(n, spark.sparkContext.defaultParallelism))
+    for (part <- parts) {
+      val pages = part.map(_.page)
+      assert(pages.nonEmpty && pages == (pages.head to pages.last), s"not one ascending run: $pages")
+      assert(part.forall(p => p.html == s"<p>${p.page}</p>"))
+    }
+    assert(parts.flatten.map(_.page) == (1 to n))
+    val plan = ds.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), s"the page scan must not shuffle:\n$plan")
+  }
 }

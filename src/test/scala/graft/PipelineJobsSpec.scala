@@ -14,15 +14,18 @@ class PipelineJobsSpec extends SparkSpec {
   private def mkWorkDir(): String =
     Files.createTempDirectory("graft-jobs").toString
 
-  /** Write fixture life pages: `rows` (uin, name, docId) per page. */
+  /** Write fixture life pages: `rows` (uin, name, docId) per page; docId 0
+    * writes a row with no document link.
+    */
   private def writeLifePages(dir: String, pages: Seq[Seq[(String, String, Int)]]): Unit = {
     Files.createDirectories(Paths.get(dir))
     pages.zipWithIndex.foreach { case (rows, i) =>
       val trs = rows.map { case (uin, name, d) =>
+        val link = if (d == 0) "" else s"<a href='/documents/doc$d.pdf'>Doc $d</a>"
         s"""<tr><td><input/></td><td>Non-Archived</td><td>FY 2020</td>
            |<td>Acme Life</td><td>$name</td><td>$uin</td><td>Term</td>
            |<td></td><td></td><td>P</td><td>Par</td><td>Ind</td><td></td>
-           |<td><a href='/documents/doc$d.pdf'>Doc $d</a></td></tr>""".stripMargin.replace("\n", "")
+           |<td>$link</td></tr>""".stripMargin.replace("\n", "")
       }.mkString
       Files.writeString(Paths.get(dir, s"page_${i + 1}.html"),
         s"<table class='table'><tbody>$trs</tbody></table>")
@@ -52,6 +55,22 @@ class PipelineJobsSpec extends SparkSpec {
     val (n3, ok3, _) = Jobs.delta(spark, work, "life", pagesDir, 2)
     assert((n3, ok3) == (1L, 1L))
     assert(CsvMeta.count(spark, Jobs.csvPath(work, "life")) == 4L)
+  }
+
+  test("delta job: a link-less row passes every delta, linked rows land once (J1 null key)") {
+    val work = mkWorkDir()
+    val pagesDir = s"$work/pages"
+    writeLifePages(pagesDir, Seq(Seq(("UIN1", "Alpha", 1), ("UIN2", "Beta", 0), ("UIN3", "Gamma", 3))))
+
+    // the link-less row is fresh on both runs; only linked rows are fetched
+    assert(Jobs.delta(spark, work, "life", pagesDir, 1) == (3L, 2L, 0L))
+    assert(Jobs.delta(spark, work, "life", pagesDir, 1) == (1L, 0L, 0L))
+
+    val urls = spark.read.option("header", "true").csv(Jobs.csvPath(work, "life"))
+      .collect().map(r => Option(r.getAs[String]("document_url")).filter(_.nonEmpty)).toSeq
+    assert(urls.flatten.sorted == Seq("https://example.invalid/documents/doc1.pdf",
+      "https://example.invalid/documents/doc3.pdf"))
+    assert(urls.count(_.isEmpty) == 2) // once per run
   }
 
   test("downloaded files land at computed destinations with stub content") {
@@ -144,6 +163,23 @@ class PipelineJobsSpec extends SparkSpec {
     assert(CsvMeta.count(spark, Jobs.csvPath(work, "life")) == 2L)
     assert(!Files.exists(Paths.get(s"$work/downloads"))) // no fetch happened
     assert(state.completed.count() == 0)
+  }
+
+  test("metadata-only delta over an existing CSV reads each page once: bounded Spark jobs") {
+    val work = mkWorkDir()
+    val pagesDir = s"$work/pages"
+    writeLifePages(pagesDir, Seq(Seq(("UIN1", "Alpha", 1)), Seq(("UIN2", "Beta", 2))))
+    val state = new StateStore(spark, s"$work/state")
+    def run() = Jobs.runPipeline(spark, state, work, "life",
+      graft.sources.PageSource.fixtureScan(spark, "life", pagesDir, 1, 2),
+      Jobs.stubFetch, metadataOnly = true)
+    assert(run() == (2L, 0L, 0L))
+    writeLifePages(pagesDir, Seq(Seq(("UIN1", "Alpha", 1)), Seq(("UIN2", "Beta", 2), ("UIN3", "Gamma", 0))))
+    val (out, jobs) = jobsOf(run())
+    assert(out == (1L, 0L, 0L))
+    // 6 jobs here; the two-branch delta it replaced (link-less rows unioned
+    // back in a second scan and parse of every page) ran 8.
+    assert(jobs <= 6, s"metadata-only delta ran $jobs Spark jobs")
   }
 
   test("an unknown product type is rejected before any state is written") {

@@ -1,9 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{LongType, StringType, TimestampType}
 
@@ -22,37 +19,6 @@ class TablesSpec extends SparkSpec {
     val part = Files.list(parts).filter(_.getFileName.toString.endsWith(".parquet"))
       .findFirst().get()
     Files.move(part, dir.resolve(s"$name.parquet"), StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Runs `body` and returns its result with the number of Spark jobs it
-    * started. Listener delivery is async: a sentinel job posted after
-    * `body` is seen only once every earlier job start has been delivered.
-    */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"tables-spec-${System.nanoTime()}"
-    val jobs = new AtomicInteger(0)
-    val sentinel = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case g if g == s"$group-end" => sentinel.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "under test")
-      val out = body
-      sc.setJobGroup(s"$group-end", "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(sentinel.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
-      (out, jobs.get())
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
   }
 
   private def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
