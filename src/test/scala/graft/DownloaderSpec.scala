@@ -135,6 +135,98 @@ class DownloaderSpec extends SparkSpec {
     assert(order.last == order.head && order.count(_ == order.head) == 2, s"order: $order")
     assert(out.map(_.url).sorted.toSeq == Seq("u1", "u2", "u3", "u4") && out.forall(_.success))
   }
+
+  test("a stale truncated <dest>.part is refetched; the final file is whole, no .part left") {
+    // a task killed mid-write left a partial .part; skipExisting trusts
+    // only the final name, so the URL is fetched again
+    val dir = tmpDir
+    val dest = s"$dir/doc.pdf"
+    Files.write(Paths.get(s"$dest.part"), "trunc".getBytes("UTF-8"))
+    val body = Array.fill[Byte](4096)(7)
+    val out = Downloader.download(Seq(DownloadTask("u", dest)).toDS(), _ => body).collect()
+    assert(out.head.success && out.head.file_size == body.length.toLong)
+    assert(Files.readAllBytes(Paths.get(dest)).sameElements(body))
+    assert(!Files.exists(Paths.get(s"$dest.part")))
+  }
+
+  /** Fetch workers still alive in this JVM. */
+  private def fetchWorkers: Seq[String] =
+    Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread]).toSeq
+      .filter(t => t.isAlive && t.getName.startsWith("graft-fetch-")).map(_.getName)
+
+  test("a 404 is requested once and fails with the plain IOException text (S8)") {
+    val dir = tmpDir
+    val server = new TestHttpServer()((_, _) => (404, Nil))
+    try {
+      val url = s"${server.base}/missing.pdf"
+      val out = Downloader.download(Seq(DownloadTask(url, s"$dir/m.pdf")).toDS(),
+        Downloader.httpFetch(10), retryDelayMs = 2000).collect()
+      assert(server.requests("/missing.pdf").size == 1)
+      assert(!out.head.success && out.head.error == s"IOException: HTTP 404 for $url")
+    } finally server.close()
+  }
+
+  test("a 503 is retried: the URL succeeds on its second request (S8)") {
+    val dir = tmpDir
+    val server = new TestHttpServer()((_, n) => (if (n == 1) 503 else 200, Nil))
+    try {
+      val out = Downloader.download(Seq(DownloadTask(s"${server.base}/flaky.pdf", s"$dir/f.pdf")).toDS(),
+        Downloader.httpFetch(10), retryDelayMs = 50).collect()
+      assert(server.requests("/flaky.pdf").size == 2)
+      assert(out.head.success && new String(Files.readAllBytes(Paths.get(s"$dir/f.pdf")), "UTF-8") == "/flaky.pdf")
+    } finally server.close()
+  }
+
+  test("a 429 with Retry-After: 1 is retried no sooner than 1 s later") {
+    val dir = tmpDir
+    val server = new TestHttpServer()((_, n) =>
+      if (n == 1) (429, Seq("Retry-After" -> "1")) else (200, Nil))
+    try {
+      val out = Downloader.download(Seq(DownloadTask(s"${server.base}/busy.pdf", s"$dir/b.pdf")).toDS(),
+        Downloader.httpFetch(10), retryDelayMs = 10).collect()
+      val Seq(first, second) = server.requests("/busy.pdf")
+      assert(out.head.success)
+      assert(second - first >= 1000000000L, s"retry came ${(second - first) / 1e6} ms after the 429")
+    } finally server.close()
+  }
+
+  test("maxConcurrent requests stay in flight on fewer task slots; no worker outlives its task") {
+    // local[2] runs 2 tasks at a time: one fetch per slot would need
+    // 20 x 200 ms / 2 = 2 s; ten in flight need about 2 x 200 ms
+    val dir = tmpDir
+    val server = new TestHttpServer(latencyMs = 200, threads = 20)()
+    try {
+      val fetch = Downloader.httpFetch(10)
+      Downloader.download(Seq(DownloadTask(s"${server.base}/warm", s"$dir/warm")).toDS(), fetch).collect()
+      val tasks = (1 to 20).map(i => DownloadTask(s"${server.base}/d$i", s"$dir/d$i.pdf")).toDS()
+      val t0 = System.nanoTime()
+      val out = Downloader.download(tasks, fetch, maxConcurrent = 10, ratePerSec = 1000.0).collect()
+      val elapsedMs = (System.nanoTime() - t0) / 1e6
+      assert(out.length == 20 && out.forall(_.success))
+      assert(elapsedMs < 1200, s"20 fetches took ${elapsedMs} ms")
+      assert(server.peakInFlight <= 10, s"peak in flight ${server.peakInFlight}")
+      assert(fetchWorkers.isEmpty, s"alive after collect: $fetchWorkers")
+    } finally server.close()
+  }
+
+  test("a cancelled download stops its fetch workers") {
+    val dir = tmpDir
+    val sc = spark.sparkContext
+    val tasks = (1 to 4).map(i => DownloadTask(s"u$i", s"$dir/c$i.bin")).toDS()
+    val job = new Thread(() => {
+      sc.setJobGroup("downloader-cancel", "blocked fetch") // no interrupt on cancel
+      try Downloader.download(tasks, _ => { Thread.sleep(60000); Array.emptyByteArray }).collect()
+      catch { case _: Exception => () }
+    })
+    job.start()
+    val deadline = System.nanoTime() + 30000000000L
+    while (fetchWorkers.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(fetchWorkers.nonEmpty, "the fetch workers never started")
+    sc.cancelJobGroup("downloader-cancel")
+    job.join(30000)
+    while (fetchWorkers.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(fetchWorkers.isEmpty, s"alive after cancel: $fetchWorkers")
+  }
 }
 
 object DownloaderSpec {

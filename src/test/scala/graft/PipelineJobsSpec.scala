@@ -1,6 +1,7 @@
 package graft
 
 import graft.app.Jobs
+import graft.fetch.Downloader
 import graft.sources.CsvMeta
 import graft.state.StateStore
 import java.nio.file.{Files, Paths}
@@ -15,13 +16,15 @@ class PipelineJobsSpec extends SparkSpec {
     Files.createTempDirectory("graft-jobs").toString
 
   /** Write fixture life pages: `rows` (uin, name, docId) per page; docId 0
-    * writes a row with no document link.
+    * writes a row with no document link. Links are relative unless `base`
+    * names a host.
     */
-  private def writeLifePages(dir: String, pages: Seq[Seq[(String, String, Int)]]): Unit = {
+  private def writeLifePages(dir: String, pages: Seq[Seq[(String, String, Int)]],
+                             base: String = ""): Unit = {
     Files.createDirectories(Paths.get(dir))
     pages.zipWithIndex.foreach { case (rows, i) =>
       val trs = rows.map { case (uin, name, d) =>
-        val link = if (d == 0) "" else s"<a href='/documents/doc$d.pdf'>Doc $d</a>"
+        val link = if (d == 0) "" else s"<a href='$base/documents/doc$d.pdf'>Doc $d</a>"
         s"""<tr><td><input/></td><td>Non-Archived</td><td>FY 2020</td>
            |<td>Acme Life</td><td>$name</td><td>$uin</td><td>Term</td>
            |<td></td><td></td><td>P</td><td>Par</td><td>Ind</td><td></td>
@@ -116,9 +119,34 @@ class PipelineJobsSpec extends SparkSpec {
 
     // replay with a working fetch → DLQ drains, completed set grows
     val (rok, rbad) = Jobs.retryFailed(spark, work)
-    assert((rok, rbad) == (1L, 1L) || (rok, rbad) == (1L, 0L))
+    assert((rok, rbad) == (1L, 0L))
     assert(state.failed.count() == 0)
     assert(state.completed.count() == 2)
+  }
+
+  test("a permanent 404 lands in the DLQ after one request, inside the first backoff (S8)") {
+    val server = new TestHttpServer()((path, _) => (if (path.endsWith("doc2.pdf")) 404 else 200, Nil))
+    /** Wall time of one delta over a fresh work dir holding one page of `docs`. */
+    def timedDelta(docs: Seq[Int]): (String, (Long, Long, Long), Double) = {
+      val work = mkWorkDir()
+      writeLifePages(s"$work/pages", Seq(docs.map(d => (s"UIN$d", s"Name$d", d))), server.base)
+      val t0 = System.nanoTime()
+      val out = Jobs.delta(spark, work, "life", s"$work/pages", 1, Downloader.httpFetch(10))
+      (work, out, (System.nanoTime() - t0) / 1e6)
+    }
+    try {
+      val (_, clean, cleanMs) = timedDelta(Seq(3, 4))
+      val (work, out, elapsedMs) = timedDelta(Seq(1, 2))
+      assert(clean == (2L, 2L, 0L) && out == (2L, 1L, 1L))
+      val url = s"${server.base}/documents/doc2.pdf"
+      assert(server.requests("/documents/doc2.pdf").size == 1)
+      val dlq = new StateStore(spark, s"$work/state").failed.collect()
+      assert(dlq.map(_.getAs[String]("url")).toSeq == Seq(url))
+      assert(dlq.head.getAs[String]("error") == s"IOException: HTTP 404 for $url")
+      // a delta alone takes seconds here; a retried 404 would add at least
+      // the default 2000 ms backoff to the same delta without one
+      assert(elapsedMs < cleanMs + 2000, s"delta took $elapsedMs ms, $cleanMs ms without the 404")
+    } finally server.close()
   }
 
   test("CSV append: single file, one header, fixed column order, null→\"\" (K1/X14)") {
