@@ -17,9 +17,11 @@ import org.apache.spark.sql.functions._
   *  - retry-failed → cli.py:416-461  (DLQ replay)
   *  - reset        → cli.py:464-502
   *
-  * All jobs run offline against fixture pages (`--pages <dir>` with
-  * `page_<n>.html` files) and a stub fetch, or online by passing a real
-  * base URL and [[Downloader.httpFetch]] — the pipeline shape is identical.
+  * The jobs read their pages from a fixture directory (`page_<n>.html`
+  * files, [[PageSource.fixtureScan]]); the document fetch is pluggable
+  * (the CLI uses [[stubFetch]]; [[Downloader.httpFetch]] fetches over
+  * HTTP). [[runPipeline]] takes any page Dataset, so an online scan is
+  * [[PageSource.scan]] with a fetch over [[PageSource.buildPageUrl]].
   * Run via: spark-submit --class graft.app.Jobs <jar> <command> <workDir>
   * <productType> [pagesDir]
   */
@@ -86,8 +88,7 @@ object Jobs {
     val (ok, bad) = Downloader.splitResults(results)
     val (nOk, nBad) = outcomeCounts(results)
 
-    // T3/T4 state commits.
-    state.markCompleted(ok.select("url"))
+    // T4: failures go to the DLQ first; a re-run retries them either way.
     if (nBad > 0) state.markFailed(bad.select("url", "error"))
 
     // J3: enrich products with their download outcome, then K1 append.
@@ -98,6 +99,12 @@ object Jobs {
       "document_url", "file_size")
       .drop("file_size", "success")
     CsvMeta.append(enriched, productType, csvPath(workDir, productType))
+
+    // T3: mark URLs completed only once their rows are in the CSV. After a
+    // crash before the append the re-run derives the same rows, re-fetches
+    // them (skipExisting answers from the stored file) and appends their
+    // file paths; marked first, it would append an empty local_file_path.
+    state.markCompleted(ok.select("url"))
 
     results.unpersist()
     fresh.unpersist()

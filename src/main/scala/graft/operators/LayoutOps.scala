@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * kernel q101 hash-checks bit-exactly); this module adds the AUDIT
   * layer over any layout — per-file envelope stats and the
   * conservative pruning rule — plus manifest-level bin-packing plans
-  * (complementing [[graft.sources.Compaction.compactParquet]], which
-  * physically rewrites one directory: the plan here decides WHICH
+  * (complementing [[graft.sources.SnapshotTable.compact]], which
+  * physically rewrites one table: the plan here decides WHICH
   * files co-locate, per group, before any rewrite runs). Everything is
   * pure integer column arithmetic (codegen'd; no UDFs) so q242/q243's
   * DuckDB oracles replay it bit-for-bit.

@@ -74,8 +74,7 @@ object SketchOps {
     hllRegistersBy(rows, keyCol, Nil, p)
 
   /** The row-local HLL projection: (bucket, rho) columns for a key —
-    * exposed so streaming aggregations ([[graft.streaming.StreamingOps
-    * .streamingDistinct]]) can reuse the exact same sketch math.
+    * the sketch math [[hllRegistersBy]] reduces by max per register.
     */
   def hllBucketRho(key: org.apache.spark.sql.Column,
                    p: Int = 6): (org.apache.spark.sql.Column, org.apache.spark.sql.Column) = {

@@ -130,18 +130,9 @@ object CsvMeta {
     * append is unsupported (Hadoop's checksummed local FS, S3-style
     * stores) it falls back to a streamed copy-merge + atomic rename —
     * O(total history) per batch through one driver thread, but crash-safe
-    * (readers see old or new, never half). For high-frequency appends at
-    * scale prefer [[appendParts]], which keeps everything distributed.
-    *
-    * `atomicReplace = true` forces the copy-merge path even where
-    * `fs.append` works: a crashed in-place append can leave a torn
-    * partial batch in the file, while the rename commits all-or-nothing.
-    * The streaming sink's replay-idempotence protocol
-    * ([[graft.streaming.StreamingOps.idempotentCsvAppend]]) depends on
-    * the target only ever being observed in pre- or post-batch state.
+    * (readers see old or new, never half).
     */
-  def append(df: DataFrame, productType: String, csvPath: String,
-             atomicReplace: Boolean = false): Unit = {
+  def append(df: DataFrame, productType: String, csvPath: String): Unit = {
     val spark = df.sparkSession
     val cols = columns(productType)
     val ordered = df.select(cols.map(c =>
@@ -159,7 +150,7 @@ object CsvMeta {
     val parts = fs.listStatus(partsDir).map(_.getPath)
       .filter(_.getName.startsWith("part-")).sortBy(_.getName).toSeq
 
-    val appended = !atomicReplace && exists && appendInPlace(fs, target, parts)
+    val appended = exists && appendInPlace(fs, target, parts)
     if (!appended) {
       // Copy-merge fallback: stream history + new parts into a temp file,
       // atomic rename over the target.
@@ -245,31 +236,6 @@ object CsvMeta {
           (if (hadDst) s" — $dst restored from $bak" else ""))
     }
     if (hadDst) { fs.delete(bak, false); () } // best-effort cleanup
-  }
-
-  /** K1 at scale: directory-of-parts append — each batch lands as new
-    * part files via Spark's native distributed CSV sink; no bytes ever
-    * pass through the driver and no history is rewritten. Read back with
-    * [[readParts]]. This is the 100 TB shape; [[append]] exists for
-    * single-file parity with the reference.
-    */
-  def appendParts(df: DataFrame, productType: String, dir: String): Unit = {
-    val cols = columns(productType)
-    val ordered = df.select(cols.map(c =>
-      if (df.columns.contains(c)) coalesce(col(c).cast("string"), lit("")).as(c)
-      else lit("").as(c)): _*)
-    ordered.write.mode(SaveMode.Append)
-      .option("header", "false").option("emptyValue", "").option("nullValue", "")
-      .csv(dir)
-  }
-
-  /** Read a [[appendParts]] directory with the canonical column order. */
-  def readParts(spark: SparkSession, productType: String, dir: String): DataFrame = {
-    val cols = columns(productType)
-    // unquoted empty fields parse as null; restore the sink's
-    // ""-for-absent convention (X14) on the way back in
-    spark.read.schema(stringSchema(productType)).option("header", "false").csv(dir)
-      .select(cols.map(c => coalesce(col(c), lit("")).as(c)): _*)
   }
 
   /** K4: clear one metadata CSV (csv_writer.py:112-126). */

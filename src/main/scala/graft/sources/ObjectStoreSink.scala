@@ -16,6 +16,10 @@ import org.apache.spark.sql.functions._
   * tests and `s3a://bucket` (or any object store with an FS connector) in
   * production — upload parallelism comes from `foreachPartition`-style
   * distribution inside `mapPartitions`, one FileSystem handle per task.
+  *
+  * `graft.app.Jobs` does not call this sink yet, so the CSV's `r2_url`
+  * column stays empty; ReachabilitySpec allowlists it until the jobs wire
+  * it in (ROADMAP item 5).
   */
 object ObjectStoreSink {
 

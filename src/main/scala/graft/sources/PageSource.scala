@@ -68,16 +68,10 @@ object PageSource {
     }
   }
 
-  /** The fixture layout contract (`${dir}/page_${n}.html`, UTF-8) in ONE
-    * place — shared by [[fixtureScan]] and the DSv2 reader so the two
-    * scan surfaces can never diverge on it.
-    */
-  def readFixture(dir: String, page: Int): String =
-    new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, s"page_$page.html")), "UTF-8")
-
-  /** Offline fixture scan: pages read from `${dir}/page_${n}.html`. */
+  /** Offline fixture scan: pages read from `${dir}/page_${n}.html`, UTF-8. */
   def fixtureScan(spark: SparkSession, productType: String, dir: String,
                   startPage: Int, endPage: Int): Dataset[PageHtml] =
-    scan(spark, productType, startPage, endPage, p => readFixture(dir, p))
+    scan(spark, productType, startPage, endPage, p =>
+      new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(dir, s"page_$p.html")), "UTF-8"))
 }

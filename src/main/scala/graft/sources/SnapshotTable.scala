@@ -110,11 +110,11 @@ object SnapshotTable {
     * delivered batchId (empty/-1 when no stream has written). They
     * ride IN the manifest, so the watermark and the data it guards
     * commit in the same atomic rename — the snapshot table has no
-    * marker-trails-data ambiguity window at all (contrast
-    * StreamingOps.idempotentCsvAppend, which needs a
-    * (batchId, length) protocol to disambiguate a crash between the
-    * data rename and the marker move). Non-streaming commits carry
-    * their parent's watermark forward unchanged.
+    * marker-trails-data ambiguity window at all (a sink that keeps its
+    * delivery marker beside the data, such as a side file next to a
+    * CSV, needs a (batchId, length) protocol to disambiguate a crash
+    * between the data write and the marker move). Non-streaming
+    * commits carry their parent's watermark forward unchanged.
     */
   /** `cdc` lists the commit's materialized change files (delete/merge
     * only — an append's inserts ARE its added data files, so
@@ -998,7 +998,7 @@ object SnapshotTable {
     * detected and skipped. Returns the committed version, or -1 for a
     * skipped replay.
     *
-    * Lineage rule (the idempotentCsvAppend lesson): batchIds are
+    * Lineage rule: batchIds are
     * monotonic only within one checkpoint lineage. The watermark
     * records the streaming QUERY ID; a different id (fresh checkpoint,
     * batchIds restart at 0) re-baselines instead of treating early
@@ -1248,10 +1248,10 @@ object SnapshotTable {
     hit.map(i => files(order(i)).path).toSet
   }
 
-  /** Rewrite the current snapshot into ~targetBytes files (the
-    * [[Compaction]] op under snapshot isolation: readers of any
+  /** Small-file compaction: rewrite the current snapshot into
+    * ~targetBytes files under snapshot isolation. Readers of any
     * existing version are untouched; the compacted content commits as
-    * a NEW version whose logical rows are identical).
+    * a NEW version whose logical rows are identical.
     */
   def compact(spark: SparkSession, root: String,
               targetBytes: Long = 128L * 1024 * 1024): Int = {

@@ -14,9 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 surface for the snapshot table format — the
   * `spark.read.format(...)`/SQL ergonomics over [[SnapshotTable]]'s
-  * Scala API (the same split as graft-pages vs PageSource: the
-  * programmatic path stays; this wraps identical semantics for reader
-  * users):
+  * Scala API (the programmatic path stays; this wraps identical
+  * semantics for reader users):
   *
   * {{{
   *   spark.read.format("graft-snapshot")
@@ -41,8 +40,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * after — the same isolation [[SnapshotTable.read]] gives, now
   * holding across Spark's own re-planning.
   *
-  * Three pushdowns run below the optimizer, each the table-format
-  * analog of a graft-pages lever:
+  * Three pushdowns run below the optimizer:
   *
   *  - '''Envelope pruning into partition planning''' — range
   *    predicates (`=/</<=/>/>=/IN`) on the stats column AND on any
@@ -78,10 +76,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * granularity Spark's own parquet source plans, without a driver-side
   * listing (the manifest IS the listing). Readers decode via the
   * parquet example Group API per file — plumbing-level row
-  * materialization (no whole-stage codegen inside the reader), the
-  * DSv2 trade graft-pages also makes; supported leaf types are the
-  * table format's (boolean/integrals/float/double/string/binary/
-  * date/timestamp/decimal), loud on anything else.
+  * materialization (no whole-stage codegen inside the reader);
+  * supported leaf types are the table format's (boolean/integrals/
+  * float/double/string/binary/date/timestamp/decimal), loud on
+  * anything else.
   */
 class SnapshotTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-snapshot"
@@ -900,8 +898,7 @@ private[graft] case class SnapshotStreamOffset(version: Int) extends Offset {
 /** Micro-batch stream over commit versions: each trigger plans the
   * change legs of `(lastCommitted, available]`, rate-limited by
   * `maxVersionsPerTrigger` ([[SupportsTriggerAvailableNow]] so
-  * AvailableNow drains a snapshot of the backlog in capped batches —
-  * the PageMicroBatchStream admission-control discipline).
+  * AvailableNow drains a snapshot of the backlog in capped batches).
   */
 private[graft] class SnapshotChangesStream(
     root: String, startingVersion: Int, maxPerTrigger: Option[Int],
@@ -943,8 +940,8 @@ private[graft] class SnapshotChangesStream(
     val from = start.asInstanceOf[SnapshotStreamOffset].version
     def capAt(n: Long): Int = math.min(availableEnd().toLong, from + n).toInt
     // honor the ENGINE's limit argument (Trigger.Once passes
-    // ReadAllAvailable over the source's own default — the
-    // PageMicroBatchStream lesson). A COMPOSITE limit carries the
+    // ReadAllAvailable over the source's own default). A COMPOSITE
+    // limit carries the
     // engine's combination (e.g. maxRows + minRows): extract the
     // ReadMaxRows component; any limit kind this source cannot
     // interpret falls back to ITS OWN cap, never to draining the

@@ -20,9 +20,11 @@ import org.apache.spark.sql.functions._
   * so Catalyst broadcast-joins them against the big side automatically —
   * exactly how the reference uses its in-memory sets.
   *
-  * Writes go through a temp-dir + atomic-rename commit so a crashed job
-  * never leaves a half-written table (the same window the reference has
-  * between download success and _save_state is documented in SURVEY §7.4).
+  * Writes go through a temp-dir + rename commit so a crashed job never
+  * leaves a half-written table, and a crash between the old table's
+  * delete and the rename is rolled forward on the next read (the same
+  * window the reference has between download success and _save_state is
+  * documented in SURVEY §7.4).
   */
 class StateStore(spark: SparkSession, root: String) {
 
@@ -33,17 +35,29 @@ class StateStore(spark: SparkSession, root: String) {
   private val keySchema = "url string"
   private val failedSchema = "url string, error string, retries int, last_attempt timestamp"
 
+  /** Reads `<table>`. A missing table whose `<table>.tmp` holds a
+    * finished write (`_SUCCESS`) is a [[commit]] that crashed between
+    * its delete and its rename: the tmp is rolled forward first.
+    */
   private def readOrEmpty(table: String, schema: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(path(table))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(schema)).parquet(path(table))
+    val tmp = new org.apache.hadoop.fs.Path(path(table) + ".tmp")
+    val present = fs.exists(p) || {
+      val finished = fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))
+      if (finished) rename(fs, tmp, p)
+      finished
+    }
+    if (present) spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(schema)).parquet(path(table))
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL(schema))
   }
 
-  /** Atomic table replace: write to `<table>.tmp`, then rename over the
-    * old directory. Readers either see the old or the new table.
+  /** Table replace: write to `<table>.tmp`, delete the old directory, then
+    * rename the tmp into place. The delete and the rename are two steps: a
+    * crash between them leaves only the finished tmp, which [[readOrEmpty]]
+    * rolls forward.
     */
   private def commit(df: DataFrame, table: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(root)
@@ -52,8 +66,13 @@ class StateStore(spark: SparkSession, root: String) {
     val dst = new org.apache.hadoop.fs.Path(path(table))
     df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     if (fs.exists(dst)) fs.delete(dst, true)
-    fs.rename(tmp, dst)
+    rename(fs, tmp, dst)
   }
+
+  private def rename(fs: org.apache.hadoop.fs.FileSystem,
+                     src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
+    if (!fs.rename(src, dst))
+      throw new java.io.IOException(s"state commit: rename $src -> $dst returned false")
 
   // ---- T2: session offsets (resume support) ----
 

@@ -1,36 +1,7 @@
 package graft
 
-import graft.sources.Compaction
-import org.apache.spark.sql.functions._
-
 class CompactionSpec extends SparkSpec {
   import spark.implicits._
-
-  test("compactParquet collapses a many-small-files directory losslessly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString + "/t"
-    try {
-      // 40 tiny files
-      spark.range(4000L).select(col("id"), (col("id") % 7).as("k"))
-        .repartition(40).write.parquet(dir)
-      def parquetFiles = new java.io.File(dir).listFiles()
-        .count(f => f.isFile && f.getName.endsWith(".parquet"))
-      assert(parquetFiles >= 30, s"setup should fragment: $parquetFiles files")
-      val before = spark.read.parquet(dir)
-        .agg(count(lit(1)), sum("id"), sum("k")).collect().head
-      val n = Compaction.compactParquet(spark, dir, targetBytes = 512L * 1024)
-      assert(n == 1, s"tiny table should compact to one file, got $n")
-      assert(parquetFiles == 1, s"expected 1 data file, found $parquetFiles")
-      val after = spark.read.parquet(dir)
-        .agg(count(lit(1)), sum("id"), sum("k")).collect().head
-      assert(after == before, "compaction must not change the data")
-      // idempotent: compacting a compacted dir is a no-op shape
-      assert(Compaction.compactParquet(spark, dir, 512L * 1024) == 1)
-      assert(spark.read.parquet(dir).count() == 4000L)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        new java.io.File(dir).getParentFile)
-    }
-  }
 
   test("schema-evolved directories read with mergeSchema and null backfill") {
     val dir = java.nio.file.Files.createTempDirectory("graft-evolve").toString + "/t"

@@ -8,8 +8,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 
 /** K1 append cost-model paths: the O(batch) in-place `fs.append` stitch
-  * (append-capable FS), the copy-merge fallback (checksummed local FS),
-  * and the fully-distributed directory-of-parts mode.
+  * (append-capable FS) and the copy-merge fallback (checksummed local FS).
   */
 class CsvAppendSpec extends SparkSpec {
   import spark.implicits._
@@ -50,22 +49,6 @@ class CsvAppendSpec extends SparkSpec {
     val after = new String(
       Files.readAllBytes(java.nio.file.Paths.get(s"$dir/meta.csv")), "UTF-8")
     assert(before == after)
-  }
-
-  test("appendParts: distributed batches accumulate; readParts round-trips the column order") {
-    val dir = tmpDir() + "/parts"
-    val b1 = Seq(("u1", "P1")).toDF("document_url", "product_name")
-    val b2 = Seq(("u2", "P2"), ("u3", "P3")).toDF("document_url", "product_name")
-    CsvMeta.appendParts(b1, "life", dir)
-    CsvMeta.appendParts(b2, "life", dir)
-    val back = CsvMeta.readParts(spark, "life", dir)
-    assert(back.columns.toSeq == CsvMeta.columns("life"))
-    assert(back.count() == 3)
-    val urls = back.select("document_url").collect().map(_.getString(0)).toSet
-    assert(urls == Set("u1", "u2", "u3"))
-    // absent columns land as empty strings at the sink (X14)
-    val rems = back.select("remarks").collect().map(_.getString(0)).toSet
-    assert(rems == Set(""))
   }
 
   test("loadExistingUrls reads with the product type's schema; a foreign header fails") {

@@ -1,9 +1,13 @@
 package graft
 
+import graft.fetch.Downloader
 import graft.sources.PageSource
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
-/** S1-S3 paginated source tests (offline fixtures). */
+/** S1-S3 paginated source tests: offline fixtures, and one scan over a
+  * local HTTP server.
+  */
 class PageSourceSpec extends SparkSpec {
 
   test("buildPageUrl carries Liferay pagination params (S2, base.py:40-49)") {
@@ -34,6 +38,22 @@ class PageSourceSpec extends SparkSpec {
     assert(out(0).html == "<p>one</p>")
     assert(out(2).html == "")
     assert(out.forall(_.productType == "life"))
+  }
+
+  test("scan over HTTP fetches each page through the S2 URL builder; a 500 page is an empty row") {
+    def uri(p: Int) = PageSource.buildPageUrl("", "/life", "pA", p)
+    val server = new TestHttpServer()((u, _) => (if (u == uri(2)) 500 else 200, Nil))
+    try {
+      val base = server.base
+      val fetch = Downloader.httpFetch(5)
+      val out = PageSource.scan(spark, "life", 1, 3,
+        p => new String(fetch(PageSource.buildPageUrl(base, "/life", "pA", p)), UTF_8))
+        .collect().sortBy(_.page)
+      assert(out.map(_.page).toSeq == Seq(1, 2, 3))
+      // the server answers 2xx with the request URI as the body
+      assert(out.map(_.html).toSeq == Seq(uri(1), "", uri(3)))
+      assert((1 to 3).map(p => server.requests(uri(p)).size) == Seq(1, 1, 1))
+    } finally server.close()
   }
 
   test("scan: one contiguous ascending page range per partition, no exchange (O1)") {

@@ -86,6 +86,31 @@ class PipelineJobsSpec extends SparkSpec {
     assert(new String(Files.readAllBytes(f), "UTF-8").startsWith("CONTENT:"))
   }
 
+  test("a failed CSV append leaves its URLs pending: the re-run appends every row with its file (T3)") {
+    val work = mkWorkDir()
+    val pagesDir = s"$work/pages"
+    writeLifePages(pagesDir, Seq(Seq(("UIN1", "Alpha", 1), ("UIN2", "Beta", 2), ("UIN3", "Gamma", 0))))
+    // a regular file where the metadata directory belongs: the fetch
+    // succeeds, then the CSV append throws
+    val blocker = Paths.get(s"$work/metadata")
+    Files.writeString(blocker, "")
+    intercept[Exception](Jobs.delta(spark, work, "life", pagesDir, 1))
+    assert(Files.exists(Paths.get(s"$work/downloads/life/Doc-1")))
+    Files.delete(blocker)
+
+    assert(Jobs.delta(spark, work, "life", pagesDir, 1) == (3L, 2L, 0L))
+    val linked = spark.read.option("header", "true").csv(Jobs.csvPath(work, "life")).collect()
+      .filter(r => Option(r.getAs[String]("document_url")).exists(_.nonEmpty))
+    val urls = linked.map(_.getAs[String]("document_url")).toSeq
+    assert(urls.sorted == Seq("https://example.invalid/documents/doc1.pdf",
+      "https://example.invalid/documents/doc2.pdf"))
+    for (r <- linked) {
+      val path = Option(r.getAs[String]("local_file_path")).getOrElse("")
+      assert(path.nonEmpty, s"no file path for ${r.getAs[String]("document_url")}")
+      assert(Files.size(Paths.get(path)) == Jobs.stubFetch(r.getAs[String]("document_url")).length)
+    }
+  }
+
   test("scrape job resumes from last_completed_page (T2)") {
     val work = mkWorkDir()
     val pagesDir = s"$work/pages"

@@ -56,4 +56,16 @@ class StateStoreSpec extends SparkSpec {
     val pending = st.filterPending(Seq("a", "c").toDF("url"), "url")
     assert(pending.as[String].collect().toSeq == Seq("c"))
   }
+
+  test("a commit that crashed between its delete and its rename is rolled forward (K5)") {
+    val root = Files.createTempDirectory("graft-state").toString
+    new StateStore(spark, root).markCompleted(Seq("a", "b").toDF("url"))
+    // the finished tmp is all that is left of the table
+    val table = new java.io.File(s"$root/completed")
+    org.apache.commons.io.FileUtils.copyDirectory(table, new java.io.File(s"$root/completed.tmp"))
+    org.apache.commons.io.FileUtils.deleteDirectory(table)
+    val st = new StateStore(spark, root)
+    assert(st.completed.as[String].collect().toSet == Set("a", "b"))
+    assert(table.isDirectory && !new java.io.File(s"$root/completed.tmp").exists)
+  }
 }

@@ -6,11 +6,12 @@ import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Executors
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
-/** A local HTTP server for fetch specs. `answer(path, n)` gives the status
-  * and extra headers of the n-th request (from 1) for `path`; a 2xx answer
-  * carries the path as its body after `latencyMs`. The server logs each
-  * request's arrival (System.nanoTime) per path, and the peak number of
-  * requests it held at once.
+/** A local HTTP server for fetch specs. Requests are keyed by their raw
+  * URI, the path plus any query string (`/life?p_p_id=...`).
+  * `answer(uri, n)` gives the status and extra headers of the n-th request
+  * (from 1) for `uri`; a 2xx answer carries the URI as its body after
+  * `latencyMs`. The server logs each request's arrival (System.nanoTime)
+  * per URI, and the peak number of requests it held at once.
   */
 final class TestHttpServer(latencyMs: Long = 0, threads: Int = 4)(
     answer: (String, Int) => (Int, Seq[(String, String)]) = (_, _) => (200, Nil))
@@ -25,14 +26,14 @@ final class TestHttpServer(latencyMs: Long = 0, threads: Int = 4)(
     val now = inFlight.incrementAndGet()
     peak.accumulateAndGet(now, math.max)
     try {
-      val path = ex.getRequestURI.getPath
-      val log = arrivals.computeIfAbsent(path, _ => new ConcurrentLinkedQueue[Long]())
+      val uri = ex.getRequestURI.toString
+      val log = arrivals.computeIfAbsent(uri, _ => new ConcurrentLinkedQueue[Long]())
       val n = log.synchronized { log.add(System.nanoTime()); log.size }
       if (latencyMs > 0) Thread.sleep(latencyMs)
-      val (status, headers) = answer(path, n)
+      val (status, headers) = answer(uri, n)
       headers.foreach { case (k, v) => ex.getResponseHeaders.add(k, v) }
       if (status / 100 == 2) {
-        val body = path.getBytes("UTF-8")
+        val body = uri.getBytes("UTF-8")
         ex.sendResponseHeaders(status, body.length.toLong)
         ex.getResponseBody.write(body)
       } else ex.sendResponseHeaders(status, -1)
@@ -45,9 +46,9 @@ final class TestHttpServer(latencyMs: Long = 0, threads: Int = 4)(
 
   val base: String = s"http://127.0.0.1:${server.getAddress.getPort}"
 
-  /** Arrival times of the requests for `path`, in order. */
-  def requests(path: String): Seq[Long] =
-    Option(arrivals.get(path)).map(_.asScala.toSeq).getOrElse(Nil)
+  /** Arrival times of the requests for `uri`, in order. */
+  def requests(uri: String): Seq[Long] =
+    Option(arrivals.get(uri)).map(_.asScala.toSeq).getOrElse(Nil)
 
   def peakInFlight: Int = peak.get
 
