@@ -56,59 +56,64 @@ object Jobs {
     // a null key equals nothing, so it is never matched and is re-appended
     // on every run. One join over `parsed` keeps the scan and parse of each
     // page to a single pass.
+    // The CSV is first cut back to its committed length: the rows of a tail
+    // an earlier run appended but never committed are derived again here.
     // `fresh` MUST be pinned before the CSV append below mutates its input:
     // a lazy re-evaluation after the append would re-read the grown CSV and
     // see an empty delta (SURVEY §7.4 — checkpoint before side effects).
-    val existing = CsvMeta.loadExistingUrls(spark, csvPath(workDir, productType), productType)
+    val csv = csvPath(workDir, productType)
+    CsvMeta.truncateToCommitted(spark, csv)
+    val existing = CsvMeta.loadExistingUrls(spark, csv, productType)
     val fresh = DeltaOps.delta(parsed, existing, "document_url")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val freshCount = fresh.count()
+    try {
+      val freshCount = fresh.count()
 
-    if (metadataOnly) { // F6: skip the download stage entirely
-      CsvMeta.append(fresh, productType, csvPath(workDir, productType))
-      fresh.unpersist()
-      return (freshCount, 0L, 0L)
-    }
+      if (metadataOnly) { // F6: skip the download stage entirely
+        CsvMeta.append(fresh, productType, csv)
+        return (freshCount, 0L, 0L)
+      }
 
-    // F3 + X7/X9: downloadable rows → tasks with computed destinations.
-    val tasks = fresh.where(col("document_url").isNotNull)
-      .select(col("document_url").as("url"),
-        concat(lit(s"$workDir/downloads/$productType/"),
-          T.sanitizeFilename(coalesce(col("document_filename"),
-            T.filenameFromUrl(col("document_url")),
-            T.urlHash(col("document_url")).cast("string")))).as("destination"))
+      // F3 + X7/X9: downloadable rows → tasks with computed destinations.
+      val tasks = fresh.where(col("document_url").isNotNull)
+        .select(col("document_url").as("url"),
+          concat(lit(s"$workDir/downloads/$productType/"),
+            T.sanitizeFilename(coalesce(col("document_filename"),
+              T.filenameFromUrl(col("document_url")),
+              T.urlHash(col("document_url")).cast("string")))).as("destination"))
 
-    // J2: drop tasks already completed in a prior run (T3 exactly-once).
-    val pending = state.filterPending(tasks, "url")
-      .as(Encoders.product[DownloadTask])
+      // J2: drop tasks already completed in a prior run (T3 exactly-once).
+      val pending = state.filterPending(tasks, "url")
+        .as(Encoders.product[DownloadTask])
 
-    // S6-S8 fetch; checkpoint results BEFORE any join (SURVEY §7.4).
-    val results = Downloader.download(pending, fetch).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (ok, bad) = Downloader.splitResults(results)
-    val (nOk, nBad) = outcomeCounts(results)
+      // S6-S8 fetch; checkpoint results BEFORE any join (SURVEY §7.4).
+      val results = Downloader.download(pending, fetch).toDF()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val (ok, bad) = Downloader.splitResults(results)
+        val (nOk, nBad) = outcomeCounts(results)
 
-    // T4: failures go to the DLQ first; a re-run retries them either way.
-    if (nBad > 0) state.markFailed(bad.select("url", "error"))
+        // T4: failures go to the DLQ first; a re-run retries them either way.
+        if (nBad > 0) state.markFailed(bad.select("url", "error"))
 
-    // J3: enrich products with their download outcome, then K1 append.
-    val enriched = DeltaOps.enrich(
-      fresh,
-      results.select(col("url").as("document_url"), col("file_path").as("local_file_path"),
-        col("file_size"), col("success")),
-      "document_url", "file_size")
-      .drop("file_size", "success")
-    CsvMeta.append(enriched, productType, csvPath(workDir, productType))
+        // J3: enrich products with their download outcome, then K1 append.
+        val enriched = DeltaOps.enrich(
+          fresh,
+          results.select(col("url").as("document_url"), col("file_path").as("local_file_path"),
+            col("file_size"), col("success")),
+          "document_url", "file_size")
+          .drop("file_size", "success")
+        CsvMeta.append(enriched, productType, csv)
 
-    // T3: mark URLs completed only once their rows are in the CSV. After a
-    // crash before the append the re-run derives the same rows, re-fetches
-    // them (skipExisting answers from the stored file) and appends their
-    // file paths; marked first, it would append an empty local_file_path.
-    state.markCompleted(ok.select("url"))
-
-    results.unpersist()
-    fresh.unpersist()
-    (freshCount, nOk, nBad)
+        // T3: mark URLs completed only once their rows are committed to the
+        // CSV. After a crash before that commit the re-run derives the same
+        // rows, re-fetches them (skipExisting answers from the stored file)
+        // and appends their file paths; marked first, it would append an
+        // empty local_file_path.
+        if (nOk > 0) state.markCompleted(ok.select("url"))
+        (freshCount, nOk, nBad)
+      } finally results.unpersist()
+    } finally fresh.unpersist()
   }
 
   /** (successes, failures) of persisted fetch results, in one job. */
@@ -158,13 +163,16 @@ object Jobs {
       .as(Encoders.product[DownloadTask])
     val results = Downloader.download(tasks, fetch).toDF()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (ok, bad) = Downloader.splitResults(results)
-    val counts @ (_, nBad) = outcomeCounts(results)
-    state.markCompleted(ok.select("url"))
-    state.clearSucceeded(ok.select("url"))
-    if (nBad > 0) state.markFailed(bad.select("url", "error"))
-    results.unpersist()
-    counts
+    try {
+      val (ok, bad) = Downloader.splitResults(results)
+      val counts @ (nOk, nBad) = outcomeCounts(results)
+      if (nOk > 0) {
+        state.markCompleted(ok.select("url"))
+        state.clearSucceeded(ok.select("url"))
+      }
+      if (nBad > 0) state.markFailed(bad.select("url", "error"))
+      counts
+    } finally results.unpersist()
   }
 
   /** §3.3 reset: drop session state (and optionally the CSV). */

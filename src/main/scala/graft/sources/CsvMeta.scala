@@ -1,6 +1,10 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import java.io.IOException
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -17,9 +21,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   *
   * Fidelity note (SURVEY §7.4): the reference appends to ONE file with ONE
   * header. Spark's CSV sink writes a directory of part files with a header
-  * per part, so [[append]] writes parts distributed, then merges them into
-  * the single target file driver-side with a streamed Hadoop-FS copy (no
-  * `collect()` — bytes stream through a fixed buffer regardless of size).
+  * per part, so [[append]] writes parts distributed, then streams them onto
+  * the end of the single target file in place, driver-side (no `collect()`
+  * — bytes stream through a fixed buffer regardless of size).
   */
 object CsvMeta {
 
@@ -92,8 +96,8 @@ object CsvMeta {
     else spark.read.option("header", "true").csv(csvPath).count()
   }
 
-  private def streamCopy(fs: org.apache.hadoop.fs.FileSystem, src: Path,
-                         out: java.io.OutputStream, buf: Array[Byte]): Unit = {
+  private def streamCopy(fs: FileSystem, src: Path, out: java.io.OutputStream,
+                         buf: Array[Byte]): Unit = {
     val in = fs.open(src)
     try {
       var n = in.read(buf)
@@ -101,22 +105,83 @@ object CsvMeta {
     } finally in.close()
   }
 
-  /** In-place O(batch) append of `parts` onto `target` via `fs.append`.
-    * Returns false without touching the file when the FS doesn't support
-    * append (Hadoop's checksummed LocalFileSystem; object stores) — a
-    * mid-write IOException on a capable FS propagates instead, because
-    * silently retrying through another path could duplicate rows.
+  /** `<csv>.committed`: the CSV's committed byte length, as decimal text. */
+  private def lengthFile(target: Path) = new Path(target.toString + ".committed")
+
+  private def committedLength(fs: FileSystem, target: Path): Option[Long] = {
+    val p = lengthFile(target)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), UTF_8).trim.toLong) finally in.close()
+    }
+  }
+
+  /** Installs `len` as the committed length: written to a tmp file, then
+    * renamed over the sidecar in one atomic step (FileContext with
+    * `Options.Rename.OVERWRITE`: one rename(2) on the local FS, a single
+    * namespace op on HDFS).
     */
-  private[graft] def appendInPlace(fs: org.apache.hadoop.fs.FileSystem,
-                                   target: Path, parts: Seq[Path]): Boolean = {
-    val out =
-      try fs.append(target)
-      catch { case _: UnsupportedOperationException => return false }
-    try {
-      val buf = new Array[Byte](1 << 16)
-      parts.foreach(p => streamCopy(fs, p, out, buf))
-    } finally out.close()
-    true
+  private def commitLength(conf: Configuration, fs: FileSystem, target: Path, len: Long): Unit = {
+    val (tmp, dst) = (fs.makeQualified(new Path(lengthFile(target).toString + ".tmp")),
+      fs.makeQualified(lengthFile(target)))
+    val out = fs.create(tmp, true)
+    try out.write(len.toString.getBytes(UTF_8)) finally out.close()
+    FileContext.getFileContext(dst.toUri, conf).rename(tmp, dst, Options.Rename.OVERWRITE)
+  }
+
+  /** The FS that changes `target`'s bytes in place: under a checksummed FS
+    * (Hadoop's `file:` default) its raw FS, after the `.<name>.crc` sidecar
+    * is deleted — a checksum of the old bytes would fail every later read.
+    */
+  private def inPlaceFs(fs: FileSystem, target: Path): FileSystem = fs match {
+    case c: ChecksumFileSystem =>
+      val raw = c.getRawFileSystem
+      val crc = c.getChecksumFile(target)
+      if (raw.exists(crc) && !raw.delete(crc, false))
+        throw new IOException(s"could not delete the stale checksum $crc")
+      raw
+    case _ => fs
+  }
+
+  /** Runs the in-place `op` on `target`; an FS without it fails naming the path. */
+  private def inPlace[T](fs: FileSystem, target: Path, op: String)(f: FileSystem => T): T =
+    try f(inPlaceFs(fs, target)) catch {
+      case e: UnsupportedOperationException =>
+        throw new IOException(s"cannot $op $target in place: its file system has no $op", e)
+    }
+
+  /** Cuts the CSV back to its committed length and returns that length
+    * (0 for no CSV). A missing sidecar commits the whole file (a CSV from
+    * before the sidecar existed); a committed length of 0 deletes the file.
+    */
+  private def rollBack(fs: FileSystem, target: Path): Long = {
+    val actual = if (fs.exists(target)) fs.getFileStatus(target).getLen else 0L
+    committedLength(fs, target) match {
+      case None => actual
+      case Some(len) if len > actual =>
+        throw new IOException(
+          s"$target is $actual bytes, shorter than its committed length $len: committed rows are lost")
+      case Some(0L) =>
+        if (fs.exists(target) && !fs.delete(target, false))
+          throw new IOException(s"could not delete the uncommitted $target")
+        0L
+      case Some(len) =>
+        if (len < actual && !inPlace(fs, target, "truncate")(_.truncate(target, len)))
+          throw new IOException(s"truncate of $target to $len bytes has not finished")
+        len
+    }
+  }
+
+  /** Drops any bytes of `csvPath` past its committed length: the torn or
+    * uncommitted tail of an [[append]] that crashed before its length
+    * commit. Run before the existing URLs are read, so the rows of that
+    * tail are derived and appended again.
+    */
+  def truncateToCommitted(spark: SparkSession, csvPath: String): Unit = {
+    val target = new Path(csvPath)
+    rollBack(target.getFileSystem(spark.sparkContext.hadoopConfiguration), target)
+    ()
   }
 
   /** K1+X14: append `df` to a single CSV file at `csvPath` with the fixed
@@ -124,13 +189,23 @@ object CsvMeta {
     * doesn't exist yet; missing columns become empty strings
     * (extrasaction=ignore + None→"" parity, csv_writer.py:44-51, 79-94).
     *
-    * Cost model: parts are written distributed, then stitched onto the
-    * target. On an append-capable FS (HDFS and most HCFS) the stitch is
-    * `fs.append` — O(batch) like the reference's in-place append. Where
-    * append is unsupported (Hadoop's checksummed local FS, S3-style
-    * stores) it falls back to a streamed copy-merge + atomic rename —
-    * O(total history) per batch through one driver thread, but crash-safe
-    * (readers see old or new, never half).
+    * One path, O(batch): the batch is written as distributed part files,
+    * which are then streamed onto the end of the CSV in place — through the
+    * raw FS under a checksummed one, else the FS's own `append` — and the
+    * CSV's new byte length is committed to the `<csv>.committed` sidecar by
+    * an atomic rename. Bytes past the committed length are not part of the
+    * CSV: every append, and [[truncateToCommitted]], cuts them off first.
+    *
+    * Crash windows:
+    *  - during the part write: the CSV is untouched;
+    *  - during the stitch, or before the length commit: the tail past the
+    *    committed length is dropped by the next run, whose delta derives
+    *    those rows again (`Jobs.runPipeline` marks their URLs completed
+    *    only after this returns);
+    *  - a new CSV commits length 0 before its first byte, so a crash while
+    *    it is written deletes it on the next run.
+    * An FS that can neither append nor truncate fails here, naming the
+    * path. A committed length larger than the file fails loudly.
     */
   def append(df: DataFrame, productType: String, csvPath: String): Unit = {
     val spark = df.sparkSession
@@ -140,8 +215,8 @@ object CsvMeta {
       else lit("").as(c)): _*)
 
     val target = new Path(csvPath)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(target) && fs.getFileStatus(target).getLen > 0
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = target.getFileSystem(conf)
 
     val partsDir = new Path(csvPath + ".parts.tmp")
     ordered.write.mode(SaveMode.Overwrite)
@@ -150,99 +225,26 @@ object CsvMeta {
     val parts = fs.listStatus(partsDir).map(_.getPath)
       .filter(_.getName.startsWith("part-")).sortBy(_.getName).toSeq
 
-    val appended = exists && appendInPlace(fs, target, parts)
-    if (!appended) {
-      // Copy-merge fallback: stream history + new parts into a temp file,
-      // atomic rename over the target.
+    val base = rollBack(fs, target)
+    if (!fs.exists(lengthFile(target))) commitLength(conf, fs, target, base)
+    val out =
+      if (base == 0) inPlaceFs(fs, target).create(target, true)
+      else inPlace(fs, target, "append")(_.append(target))
+    try {
+      if (base == 0) out.write((cols.mkString(",") + "\n").getBytes(UTF_8))
       val buf = new Array[Byte](1 << 16)
-      val merged = new Path(csvPath + ".merged.tmp")
-      val out = fs.create(merged, true)
-      try {
-        if (exists) streamCopy(fs, target, out, buf)
-        else out.write((cols.mkString(",") + "\n").getBytes("UTF-8"))
-        parts.foreach(p => streamCopy(fs, p, out, buf))
-      } finally out.close()
-      renameOver(spark.sparkContext.hadoopConfiguration, fs, merged, target)
-    }
+      parts.foreach(p => streamCopy(fs, p, out, buf))
+    } finally out.close()
+    commitLength(conf, fs, target, fs.getFileStatus(target).getLen)
     fs.delete(partsDir, true)
     ()
-  }
-
-  /** Rename `src` over `dst`, preferring the ATOMIC overwrite rename
-    * (FileContext + Options.Rename.OVERWRITE — java.nio REPLACE_EXISTING
-    * on the local FS, a single namespace op on HDFS). The non-atomic
-    * fallback is only used where the FileContext path itself fails —
-    * which includes `UnsupportedFileSystemException` (an IOException,
-    * NOT an UnsupportedOperationException: thrown when the scheme has
-    * no AbstractFileSystem binding, the s3a-style case this fallback
-    * exists for). A failed FileContext rename leaves src and dst intact
-    * (the op is all-or-nothing), so attempting the fallback after ANY
-    * failure is safe — but the failure may also mean src is MISSING or
-    * the FS is transiently down, and the fallback must never pay for
-    * that with dst (the sink's entire history). See
-    * [[renameOverFallback]] for the invariant.
-    */
-  private[graft] def renameOver(conf: org.apache.hadoop.conf.Configuration,
-                                fs: org.apache.hadoop.fs.FileSystem,
-                                src: Path, dst: Path): Unit = {
-    val (qSrc, qDst) = (fs.makeQualified(src), fs.makeQualified(dst))
-    try {
-      org.apache.hadoop.fs.FileContext.getFileContext(qDst.toUri, conf)
-        .rename(qSrc, qDst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case e @ (_: UnsupportedOperationException | _: java.io.IOException) =>
-        renameOverFallback(fs, src, dst, e)
-    }
-  }
-
-  /** Non-atomic replace with the HISTORY-SURVIVES-EVERYTHING invariant:
-    * at every step some complete copy of dst's prior content exists on
-    * disk (as `dst` or as `dst.bak`), and the method only reports
-    * success once the NEW data is at dst. The earlier form deleted dst
-    * before renaming src over it — if the triggering failure was
-    * actually a missing/unreadable src or a transient FS error (not
-    * the unsupported-scheme case this path targets), the delete
-    * destroyed the sink's entire history and the follow-up rename had
-    * nothing to install. Now: (1) a missing src rethrows the original
-    * failure with dst untouched; (2) dst is set ASIDE to a `.bak`
-    * sidecar, never deleted; (3) a failed src→dst rename restores the
-    * sidecar; (4) the sidecar is removed only after the new data is in
-    * place (best-effort — a stale sidecar is cleared on the next call).
-    * Every `fs.rename`/`fs.delete` boolean is checked — a discarded
-    * `false` would report success while the data sits under the wrong
-    * name.
-    */
-  private[graft] def renameOverFallback(fs: org.apache.hadoop.fs.FileSystem,
-                                        src: Path, dst: Path,
-                                        cause: Throwable = null): Unit = {
-    if (!fs.exists(src))
-      throw new java.io.IOException(
-        s"renameOver: atomic rename failed and $src does not exist — " +
-          s"$dst left untouched", cause)
-    val bak = new Path(dst.toString + ".bak")
-    if (fs.exists(bak) && !fs.delete(bak, false))
-      throw new java.io.IOException(s"renameOver: could not clear stale $bak")
-    val hadDst = fs.exists(dst)
-    if (hadDst && !fs.rename(dst, bak))
-      throw new java.io.IOException(
-        s"renameOver: could not set $dst aside to $bak — history intact at $dst")
-    if (!fs.rename(src, dst)) {
-      if (hadDst && !fs.rename(bak, dst))
-        throw new java.io.IOException(
-          s"renameOver: rename $src -> $dst returned false AND the restore " +
-            s"failed — history preserved at $bak")
-      throw new java.io.IOException(
-        s"renameOver: rename $src -> $dst returned false" +
-          (if (hadDst) s" — $dst restored from $bak" else ""))
-    }
-    if (hadDst) { fs.delete(bak, false); () } // best-effort cleanup
   }
 
   /** K4: clear one metadata CSV (csv_writer.py:112-126). */
   def clear(spark: SparkSession, csvPath: String): Unit = {
     val target = new Path(csvPath)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(target)) fs.delete(target, false)
-    ()
+    // the checksummed FS deletes a file's `.crc` with it
+    Seq(target, lengthFile(target)).foreach(p => if (fs.exists(p)) fs.delete(p, false))
   }
 }

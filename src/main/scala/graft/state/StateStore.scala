@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   *  - `sessions/`  — per product type: status, last_completed_page,
   *                   total_pages, total_products  (reference:
   *                   storage/state.py:92-117, models.py:92-99)
-  *  - `completed/` — the exactly-once-per-key URL set (state.py:133-140)
+  *  - `completed/` — the exactly-once-per-key URL set (state.py:133-140),
+  *                   append-only: one file per batch of new URLs
   *  - `failed/`    — dead-letter queue: url, error, retries, last_attempt
   *                   (state.py:142-167, models.py:102-108)
   *
@@ -20,11 +21,13 @@ import org.apache.spark.sql.functions._
   * so Catalyst broadcast-joins them against the big side automatically —
   * exactly how the reference uses its in-memory sets.
   *
-  * Writes go through a temp-dir + rename commit so a crashed job never
-  * leaves a half-written table, and a crash between the old table's
-  * delete and the rename is rolled forward on the next read (the same
-  * window the reference has between download success and _save_state is
-  * documented in SURVEY §7.4).
+  * `sessions` and `failed` are replaced whole through a temp-dir + rename
+  * commit, so a crashed job never leaves a half-written table, and a crash
+  * between the old table's delete and the rename is rolled forward on the
+  * next read (the same window the reference has between download success
+  * and _save_state is documented in SURVEY §7.4). `completed` only grows:
+  * [[markCompleted]] renames one new file into it, so a crash leaves the
+  * batch either wholly in the table or not in it at all.
   */
 class StateStore(spark: SparkSession, root: String) {
 
@@ -126,10 +129,35 @@ class StateStore(spark: SparkSession, root: String) {
 
   def completed: DataFrame = readOrEmpty("completed", keySchema)
 
-  /** Idempotent batch insert (U3; state.py:137-140 set-add, batched). */
-  def markCompleted(urls: DataFrame): Unit =
-    commit(completed.unionByName(urls.select(col(urls.columns.head).as("url")))
-      .distinct(), "completed")
+  /** Idempotent batch insert (U3; state.py:137-140 set-add, batched),
+    * append-only: the batch's distinct URLs not yet in the set are written
+    * as one new file beside the table's existing files, which are never
+    * rewritten. The table stays a set, and a call writes O(batch) bytes.
+    *
+    * The file is written to `completed.tmp`, then renamed into
+    * `completed/` (the first batch renames the whole directory). Spark's
+    * own Append into `completed/` would make the cache manager drop and
+    * re-plan every persisted frame that scans the table — the fetch
+    * results, through [[filterPending]] — so a later read of those results
+    * would fetch the documents again.
+    */
+  def markCompleted(urls: DataFrame): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new org.apache.hadoop.fs.Path(path("completed") + ".tmp")
+    val dst = new org.apache.hadoop.fs.Path(path("completed"))
+    // the batch is small: one task dedupes it with no shuffle; the second
+    // coalesce keeps one file should the anti-join shuffle a large set
+    urls.select(col(urls.columns.head).as("url")).coalesce(1).distinct()
+      .join(completed, Seq("url"), "left_anti")
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    if (!fs.exists(dst)) rename(fs, tmp, dst)
+    else {
+      fs.listStatus(tmp).map(_.getPath).filter(_.getName.startsWith("part-"))
+        .foreach(f => rename(fs, f, new org.apache.hadoop.fs.Path(dst, f.getName)))
+      fs.delete(tmp, true)
+    }
+  }
 
   /** J2 guard: tasks not yet completed (cli.py:101-103). */
   def filterPending(tasks: DataFrame, urlCol: String): DataFrame =

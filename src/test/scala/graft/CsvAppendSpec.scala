@@ -1,55 +1,21 @@
 package graft
 
-import java.net.URI
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import graft.sources.CsvMeta
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.Path
 
-/** K1 append cost-model paths: the O(batch) in-place `fs.append` stitch
-  * (append-capable FS) and the copy-merge fallback (checksummed local FS).
+import scala.jdk.CollectionConverters._
+
+/** K1 sink files: the existing-URL scan, the in-place append over a CSV
+  * with a checksum sidecar, and clear. The crash windows of the append
+  * are in IngestCrashSpec.
   */
 class CsvAppendSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmpDir(): String =
     Files.createTempDirectory("csvappend").toString
-
-  test("appendInPlace stitches parts onto the target via fs.append (O(batch))") {
-    // RawLocalFileSystem supports append (the checksummed LocalFileSystem
-    // Spark uses by default does not — that exercises the fallback).
-    val fs = new RawLocalFileSystem()
-    fs.initialize(URI.create("file:///"), new Configuration())
-    val dir = tmpDir()
-    val target = new Path(s"$dir/meta.csv")
-    val out = fs.create(target)
-    out.write("h1,h2\na,b\n".getBytes("UTF-8")); out.close()
-    val part = new Path(s"$dir/part-0001")
-    val pOut = fs.create(part)
-    pOut.write("c,d\n".getBytes("UTF-8")); pOut.close()
-
-    assert(CsvMeta.appendInPlace(fs, target, Seq(part)))
-    val content = new String(
-      Files.readAllBytes(java.nio.file.Paths.get(s"$dir/meta.csv")), "UTF-8")
-    assert(content == "h1,h2\na,b\nc,d\n")
-  }
-
-  test("appendInPlace declines (returns false, file untouched) where append is unsupported") {
-    val dir = tmpDir()
-    val target = new Path(s"file:$dir/meta.csv")
-    // Spark's default local FS is the checksummed LocalFileSystem
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(target)
-    out.write("h1,h2\na,b\n".getBytes("UTF-8")); out.close()
-
-    val before = new String(
-      Files.readAllBytes(java.nio.file.Paths.get(s"$dir/meta.csv")), "UTF-8")
-    assert(!CsvMeta.appendInPlace(fs, target, Seq.empty))
-    val after = new String(
-      Files.readAllBytes(java.nio.file.Paths.get(s"$dir/meta.csv")), "UTF-8")
-    assert(before == after)
-  }
 
   test("loadExistingUrls reads with the product type's schema; a foreign header fails") {
     val csv = tmpDir() + "/health_products.csv"
@@ -75,56 +41,41 @@ class CsvAppendSpec extends SparkSpec {
     assert(fresh.count() == 2)
   }
 
-  test("renameOverFallback: history survives every failure mode (never delete-then-hope)") {
-    // the non-atomic replace path must keep a complete copy of dst's
-    // prior content on disk at all times: a missing src (the trigger
-    // may be a transient FS error, not the unsupported-scheme case)
-    // must rethrow with dst untouched, and the happy path must go
-    // through a .bak sidecar that is only removed after the new data
-    // is in place
-    val fs = new RawLocalFileSystem()
-    fs.initialize(URI.create("file:///"), new Configuration())
+  test("a CSV written through the checksummed FS is appended in place and reads back") {
     val dir = tmpDir()
-    val dst = new Path(s"$dir/history.csv")
-    val out = fs.create(dst)
-    out.write("h\nold\n".getBytes("UTF-8")); out.close()
+    val csv = s"$dir/health_products.csv"
+    val target = new Path(s"file:$csv")
+    // Hadoop's default local FS writes a `.health_products.csv.crc` beside
+    // the file; a checksum of the old bytes fails every read after the
+    // in-place append unless the append removes it
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val cols = CsvMeta.columns("health")
+    val out = fs.create(target)
+    out.write((cols.mkString(",") + "\n" +
+      cols.map(c => if (c == "document_url") "u1" else "").mkString(",") + "\n").getBytes("UTF-8"))
+    out.close()
+    val crc = Paths.get(dir, ".health_products.csv.crc")
+    assert(Files.exists(crc))
 
-    // (1) src missing: rethrow, dst intact — the old code deleted dst
-    // here and left NO recoverable copy
-    intercept[java.io.IOException] {
-      CsvMeta.renameOverFallback(fs, new Path(s"$dir/nope.tmp"), dst)
-    }
-    assert(new String(Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/history.csv")), "UTF-8") == "h\nold\n",
-      "a missing src must not cost the sink its history")
+    CsvMeta.append(Seq(("u2", "P2")).toDF("document_url", "product_name"), "health", csv)
+    assert(!Files.exists(crc))
+    assert(spark.read.option("header", "true").csv(csv).count() == 2)
+    assert(CsvMeta.loadExistingUrls(spark, csv, "health").as[String].collect().sorted.toSeq ==
+      Seq("u1", "u2"))
+    assert(CsvMeta.loadExistingUrls(spark, csv).as[String].collect().sorted.toSeq == Seq("u1", "u2"))
+  }
 
-    // (2) normal replace: new content lands, sidecar cleaned up
-    val src = new Path(s"$dir/new.tmp")
-    val sOut = fs.create(src)
-    sOut.write("h\nnew\n".getBytes("UTF-8")); sOut.close()
-    CsvMeta.renameOverFallback(fs, src, dst)
-    assert(new String(Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/history.csv")), "UTF-8") == "h\nnew\n")
-    assert(!fs.exists(new Path(s"$dir/history.csv.bak")),
-      "the sidecar is removed once the new data is in place")
-
-    // (3) a stale sidecar from a crashed prior call is cleared, not fatal
-    val bOut = fs.create(new Path(s"$dir/history.csv.bak"))
-    bOut.write("stale".getBytes("UTF-8")); bOut.close()
-    val src2 = new Path(s"$dir/new2.tmp")
-    val s2 = fs.create(src2)
-    s2.write("h\nnewer\n".getBytes("UTF-8")); s2.close()
-    CsvMeta.renameOverFallback(fs, src2, dst)
-    assert(new String(Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/history.csv")), "UTF-8") == "h\nnewer\n")
-
-    // (4) first contact (no dst yet): plain rename, no sidecar involved
-    val fresh = new Path(s"$dir/fresh.csv")
-    val src3 = new Path(s"$dir/new3.tmp")
-    val s3 = fs.create(src3)
-    s3.write("h\nfirst\n".getBytes("UTF-8")); s3.close()
-    CsvMeta.renameOverFallback(fs, src3, fresh)
-    assert(new String(Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/fresh.csv")), "UTF-8") == "h\nfirst\n")
+  test("clear removes the CSV, its checksum and its committed length") {
+    val dir = tmpDir()
+    val csv = s"$dir/life_products.csv"
+    CsvMeta.append(Seq(("u1", "P1")).toDF("document_url", "product_name"), "life", csv)
+    assert(Files.exists(Paths.get(s"$csv.committed")))
+    CsvMeta.clear(spark, csv)
+    assert(Files.list(Paths.get(dir)).iterator.asScala.map(_.getFileName.toString).toSeq.isEmpty)
+    // the next append starts a new CSV, header first
+    CsvMeta.append(Seq(("u2", "P2")).toDF("document_url", "product_name"), "life", csv)
+    val ui = CsvMeta.columns("life").indexOf("document_url")
+    assert(Files.readAllLines(Paths.get(csv)).asScala.toSeq.map(_.split(",", -1)(ui)) ==
+      Seq("document_url", "u2"))
   }
 }

@@ -15,25 +15,8 @@ class PipelineJobsSpec extends SparkSpec {
   private def mkWorkDir(): String =
     Files.createTempDirectory("graft-jobs").toString
 
-  /** Write fixture life pages: `rows` (uin, name, docId) per page; docId 0
-    * writes a row with no document link. Links are relative unless `base`
-    * names a host.
-    */
   private def writeLifePages(dir: String, pages: Seq[Seq[(String, String, Int)]],
-                             base: String = ""): Unit = {
-    Files.createDirectories(Paths.get(dir))
-    pages.zipWithIndex.foreach { case (rows, i) =>
-      val trs = rows.map { case (uin, name, d) =>
-        val link = if (d == 0) "" else s"<a href='$base/documents/doc$d.pdf'>Doc $d</a>"
-        s"""<tr><td><input/></td><td>Non-Archived</td><td>FY 2020</td>
-           |<td>Acme Life</td><td>$name</td><td>$uin</td><td>Term</td>
-           |<td></td><td></td><td>P</td><td>Par</td><td>Ind</td><td></td>
-           |<td>$link</td></tr>""".stripMargin.replace("\n", "")
-      }.mkString
-      Files.writeString(Paths.get(dir, s"page_${i + 1}.html"),
-        s"<table class='table'><tbody>$trs</tbody></table>")
-    }
-  }
+                             base: String = ""): Unit = LifePages.write(dir, pages, base)
 
   test("delta job: first run ingests all, second run is an empty delta (T3)") {
     val work = mkWorkDir()
@@ -94,8 +77,11 @@ class PipelineJobsSpec extends SparkSpec {
     // succeeds, then the CSV append throws
     val blocker = Paths.get(s"$work/metadata")
     Files.writeString(blocker, "")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     intercept[Exception](Jobs.delta(spark, work, "life", pagesDir, 1))
     assert(Files.exists(Paths.get(s"$work/downloads/life/Doc-1")))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persisted
+    assert(leaked.isEmpty, s"the failed delta left RDDs $leaked persisted")
     Files.delete(blocker)
 
     assert(Jobs.delta(spark, work, "life", pagesDir, 1) == (3L, 2L, 0L))

@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
   * `DataSourceRegister` provider is also reached when another main file
   * uses its `shortName` string (`format("graft-snapshot")`). Code that
   * only its own spec calls fails here; the exceptions are the mains that
-  * [[EntryPointsSpec]] pins and the allowlisted sink below.
+  * [[EntryPointsSpec]] pins.
   */
 class ReachabilitySpec extends AnyFunSuite {
 
@@ -20,11 +20,10 @@ class ReachabilitySpec extends AnyFunSuite {
   private val ShortName = """def\s+shortName\s*\(\s*\)\s*:\s*String\s*=\s*("[^"]*")""".r
 
   /** Names relative to the `graft` package that no other file has to
-    * reach: the mains, and `sources.ObjectStoreSink`, the paper's object
-    * store sink, which `Jobs` does not call yet (ROADMAP item 5).
+    * reach: the mains.
     */
   private val allowed = Set("app.Jobs", "Bench", "Verify", "DumpPlans",
-    "tools.PlanSnap", "tools.ScaleGen", "sources.ObjectStoreSink")
+    "tools.PlanSnap", "tools.ScaleGen")
 
   /** `src` without its comments; string and char literals are kept, so a
     * `//` inside a URL string is not a comment and a `shortName` string

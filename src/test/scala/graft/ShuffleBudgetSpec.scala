@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * shuffle-write bytes must stay a small fraction of its payload size —
   * a regression that starts shuffling text/embeddings (a dropped
   * partial-agg, a widened projection before an exchange) fails here
-  * even while results stay correct.
+  * even while results stay correct. Three sketch-merge queries also
+  * return the same rows at 1 and 7 shuffle partitions.
   */
 class ShuffleBudgetSpec extends SparkSpec {
 
@@ -113,4 +114,29 @@ class ShuffleBudgetSpec extends SparkSpec {
       s"q278 shuffled $pairs bytes vs $textBytes of text — " +
         "document payloads are leaking into an exchange")
   }
+
+  /** `name`'s rows, sorted, at `partitions` shuffle partitions. The cache
+    * is cleared first, so no frame persisted at another setting is reused.
+    */
+  private def rowsAt(name: String, partitions: Int): Seq[String] = {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    GraftCache.releaseAll(spark)
+    spark.catalog.clearCache()
+    spark.conf.set(key, partitions.toString)
+    try q(name).collect().map(_.toString).sorted.toSeq
+    finally {
+      spark.conf.set(key, prior)
+      GraftCache.releaseAll(spark)
+      spark.catalog.clearCache()
+    }
+  }
+
+  // results do not depend on the shuffle-partition count
+  for (name <- Seq("q241_mg_merge", "q186_hll_merge", "q251_kmv_intersect"))
+    test(s"$name: the same rows at 1 and 7 shuffle partitions") {
+      val one = rowsAt(name, 1)
+      assert(one.nonEmpty)
+      assert(rowsAt(name, 7) == one)
+    }
 }

@@ -3,6 +3,8 @@ package graft
 import graft.state.StateStore
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 /** Direct state-store semantics (T2-T4) beyond the job-level coverage. */
 class StateStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -67,5 +69,37 @@ class StateStoreSpec extends SparkSpec {
     val st = new StateStore(spark, root)
     assert(st.completed.as[String].collect().toSet == Set("a", "b"))
     assert(table.isDirectory && !new java.io.File(s"$root/completed.tmp").exists)
+  }
+
+  test("markCompleted adds one file of new URLs and leaves the table's files untouched (T3)") {
+    val root = Files.createTempDirectory("graft-state").toString
+    val st = new StateStore(spark, root)
+    val dir = java.nio.file.Paths.get(s"$root/completed")
+    def dataFiles(): Map[String, Seq[Byte]] =
+      Files.list(dir).iterator.asScala.filter(_.getFileName.toString.startsWith("part-"))
+        .map(f => f.getFileName.toString -> Files.readAllBytes(f).toSeq).toMap
+    st.markCompleted(Seq("a", "b").toDF("url"))
+    val before = dataFiles()
+    st.markCompleted(Seq("b", "c", "c").toDF("url"))
+    val after = dataFiles()
+    assert(before.forall { case (name, bytes) => after.get(name).contains(bytes) })
+    val added = after.keySet -- before.keySet
+    assert(added.size == 1)
+    assert(spark.read.parquet(dir.resolve(added.head).toString).as[String].collect().toSeq == Seq("c"))
+    assert(st.completed.as[String].collect().sorted.toSeq == Seq("a", "b", "c"))
+  }
+
+  test("markCompleted keeps a persisted frame that scans completed/ cached") {
+    val st = store()
+    st.markCompleted(Seq("a").toDF("url"))
+    // the shape of runPipeline's fetch results: persisted over filterPending
+    val pending = st.filterPending(Seq("a", "b").toDF("url"), "url").persist()
+    try {
+      assert(pending.count() == 1)
+      val cached = spark.sparkContext.getPersistentRDDs.keySet
+      st.markCompleted(Seq("b").toDF("url"))
+      val dropped = cached -- spark.sparkContext.getPersistentRDDs.keySet
+      assert(dropped.isEmpty, s"markCompleted dropped the cached RDDs $dropped")
+    } finally pending.unpersist()
   }
 }

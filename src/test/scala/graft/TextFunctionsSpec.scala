@@ -77,6 +77,19 @@ class TextFunctionsSpec extends SparkSpec {
     assert(e("https://x.test/get/plain") == ".pdf")
   }
 
+  test("r2Key, publicUrl and contentType derive an object's key, URL and MIME type (X10/X11)") {
+    def k(path: String) = run1(T.r2Key(lit("life"), col("s")), path)
+    assert(k("\\2020\\a.pdf") == "life/2020/a.pdf")
+    assert(k("//2020/a.pdf") == "life/2020/a.pdf")
+    assert(run1(T.publicUrl(lit("bucket.example.dev"), col("s")), "life/2020/a.pdf") ==
+      "https://bucket.example.dev/life/2020/a.pdf")
+    def ct(path: String) = run1(T.contentType(col("s")), path)
+    assert(ct("life/2020/a.pdf") == "application/pdf")
+    assert(ct("life/2020/b.XLSX") ==
+      "application/vnd.openxmlformats-officedocument.spreadsheetml.sheet")
+    assert(ct("life/2020/c") == "application/octet-stream")
+  }
+
   test("tokens/tokenCount handle empty and blank input") {
     val counts = Seq("", "   ", "a b  c").toDF("s")
       .select(T.tokenCount(col("s")).as("n")).collect().map(_.getLong(0))
