@@ -3,11 +3,12 @@ package graft.sources
 import java.io.IOException
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import graft.state.FileCommit
 
 /** CSV metadata source + append sink (SURVEY §2.1 S4/S5, §2.9 K1/K4,
   * §2.4 X14).
@@ -118,16 +119,13 @@ object CsvMeta {
   }
 
   /** Installs `len` as the committed length: written to a tmp file, then
-    * renamed over the sidecar in one atomic step (FileContext with
-    * `Options.Rename.OVERWRITE`: one rename(2) on the local FS, a single
-    * namespace op on HDFS).
+    * installed over the sidecar by [[FileCommit.install]].
     */
-  private def commitLength(conf: Configuration, fs: FileSystem, target: Path, len: Long): Unit = {
-    val (tmp, dst) = (fs.makeQualified(new Path(lengthFile(target).toString + ".tmp")),
-      fs.makeQualified(lengthFile(target)))
+  private def commitLength(fs: FileSystem, target: Path, len: Long): Unit = {
+    val tmp = new Path(lengthFile(target).toString + ".tmp")
     val out = fs.create(tmp, true)
     try out.write(len.toString.getBytes(UTF_8)) finally out.close()
-    FileContext.getFileContext(dst.toUri, conf).rename(tmp, dst, Options.Rename.OVERWRITE)
+    FileCommit.install(fs, tmp, lengthFile(target))
   }
 
   /** The FS that changes `target`'s bytes in place: under a checksummed FS
@@ -215,8 +213,7 @@ object CsvMeta {
       else lit("").as(c)): _*)
 
     val target = new Path(csvPath)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = target.getFileSystem(conf)
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     val partsDir = new Path(csvPath + ".parts.tmp")
     ordered.write.mode(SaveMode.Overwrite)
@@ -226,7 +223,7 @@ object CsvMeta {
       .filter(_.getName.startsWith("part-")).sortBy(_.getName).toSeq
 
     val base = rollBack(fs, target)
-    if (!fs.exists(lengthFile(target))) commitLength(conf, fs, target, base)
+    if (!fs.exists(lengthFile(target))) commitLength(fs, target, base)
     val out =
       if (base == 0) inPlaceFs(fs, target).create(target, true)
       else inPlace(fs, target, "append")(_.append(target))
@@ -235,7 +232,7 @@ object CsvMeta {
       val buf = new Array[Byte](1 << 16)
       parts.foreach(p => streamCopy(fs, p, out, buf))
     } finally out.close()
-    commitLength(conf, fs, target, fs.getFileStatus(target).getLen)
+    commitLength(fs, target, fs.getFileStatus(target).getLen)
     fs.delete(partsDir, true)
     ()
   }

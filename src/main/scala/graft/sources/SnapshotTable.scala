@@ -864,12 +864,20 @@ object SnapshotTable {
 
   /** Commit already-written data files as one streaming micro-batch —
     * the driver half of the DSv2 STREAMING sink
-    * (`writeStream.format("graft-snapshot")`): same manifest-internal
-    * (queryId, batchId) watermark as [[streamingAppend]], so delivery
-    * is exactly-once per checkpoint lineage with no marker-trails-data
-    * window. Returns -1 for a detected replay — the caller deletes the
-    * staged files it had installed (they are unreferenced, so eager
-    * delete and [[vacuum]] are equally correct).
+    * (`writeStream.format("graft-snapshot")`). The (queryId, batchId)
+    * watermark commits INSIDE the manifest, atomically with the data it
+    * guards, so delivery is exactly-once per checkpoint lineage with no
+    * marker-trails-data window: a crash before the manifest rename
+    * delivers nothing (the replay re-delivers); after it, the replay is
+    * detected and skipped. Returns -1 for a detected replay — the caller
+    * deletes the staged files it had installed (they are unreferenced,
+    * so eager delete and [[vacuum]] are equally correct).
+    *
+    * Lineage rule: batchIds are monotonic only within one checkpoint
+    * lineage. A different query id (fresh checkpoint, batchIds restart
+    * at 0) re-baselines instead of treating early batches as already
+    * delivered — at-least-once across a discarded checkpoint, since
+    * silently dropping data would be worse than a duplicate.
     */
   private[graft] def streamingAppendFiles(spark: SparkSession, root: String,
                                           metas: Seq[DataFileMeta],
@@ -988,62 +996,6 @@ object SnapshotTable {
       throw new java.io.IOException(s"concurrent create at $root")
     1
   }
-
-  /** Exactly-once streaming delivery into the snapshot table (the
-    * foreachBatch sink body): the (queryId, batchId) watermark commits
-    * INSIDE the manifest, atomically with the data it guards, so the
-    * marker-trails-data crash window of file-sink protocols does not
-    * exist here — a crash anywhere before the manifest rename delivers
-    * nothing (the replay re-delivers); after it, the replay is
-    * detected and skipped. Returns the committed version, or -1 for a
-    * skipped replay.
-    *
-    * Lineage rule: batchIds are
-    * monotonic only within one checkpoint lineage. The watermark
-    * records the streaming QUERY ID; a different id (fresh checkpoint,
-    * batchIds restart at 0) re-baselines instead of treating early
-    * batches as already-delivered — at-least-once across a discarded
-    * checkpoint is the only achievable semantics, and silently
-    * dropping data would be strictly worse than a duplicate.
-    */
-  def streamingAppend(spark: SparkSession, root: String, df: DataFrame,
-                      batchId: Long): Int = {
-    val rp = new Path(root)
-    val fs = fsOf(spark, rp)
-    val queryId = Option(spark.sparkContext.getLocalProperty(
-      org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY))
-      .getOrElse("")
-    def replayed(m: Manifest): Boolean =
-      m.streamId.nonEmpty && m.streamId == queryId && batchId <= m.streamBatch
-    val base = readManifest(fs, rp, latestVersion(fs, rp))
-    if (replayed(base)) return -1
-    require(schemaJson(df) == base.schemaJson,
-      s"streaming append schema mismatch at $root")
-    val newFiles = writeDataFiles(spark, rp, df, base.statsCol)
-    commitLoop(spark, fs, rp, "streamingAppend") { pm =>
-      if (replayed(pm)) None // a racer of the same lineage delivered it
-      else if (pm.schemaJson != base.schemaJson)
-        throw new IllegalStateException(
-          s"streamingAppend at $root lost a race to a schema evolution " +
-          s"(validated against v${base.version}'s schema; tip v${pm.version} " +
-          "differs) — restart the stream against the widened schema")
-      else Some(Manifest(pm.version + 1, pm.version, "append", base.statsCol,
-        base.schemaJson, pm.files ++ newFiles, queryId, batchId,
-        addedPaths = Some(newFiles.map(_.path).toSet)))
-    }
-  }
-
-  /** `writeStream` terminal for a snapshot-table sink:
-    * {{{ snapshotSink(stream, root, ckpt).trigger(...).start() }}}
-    */
-  def snapshotSink(stream: DataFrame, root: String,
-                   checkpointDir: String): org.apache.spark.sql.streaming.DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
-        streamingAppend(batch.sparkSession, root, batch.toDF(), batchId): Unit
-      }
 
   /** Delete all rows with statsCol in [lo, hi], copy-on-write at file
     * granularity: files whose envelope misses the range are carried

@@ -1,7 +1,9 @@
 package graft.state
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Incremental-pipeline state (SURVEY §2.10 T2-T4, §2.6 A3/A4), persisted
   * as three small parquet tables under one root directory:
@@ -21,13 +23,17 @@ import org.apache.spark.sql.functions._
   * so Catalyst broadcast-joins them against the big side automatically —
   * exactly how the reference uses its in-memory sets.
   *
-  * `sessions` and `failed` are replaced whole through a temp-dir + rename
-  * commit, so a crashed job never leaves a half-written table, and a crash
-  * between the old table's delete and the rename is rolled forward on the
-  * next read (the same window the reference has between download success
-  * and _save_state is documented in SURVEY §7.4). `completed` only grows:
-  * [[markCompleted]] renames one new file into it, so a crash leaves the
-  * batch either wholly in the table or not in it at all.
+  * Every commit installs one file by one atomic rename
+  * ([[FileCommit.install]], the same step that commits the metadata
+  * CSV's length). Spark writes the table's new content through
+  * `coalesce(1)` as one file under `<table>.tmp`; that file is installed
+  * into `<table>/`, and the tmp is dropped. `sessions` and `failed` hold
+  * exactly one data file, and the new one is installed over it, so a
+  * reader sees the old table or the new one. `completed` only grows: its
+  * batch file is installed beside the existing ones under its own unique
+  * name. A tmp left by a crash before its install is ignored by reads and
+  * replaced by the next commit; a missing or empty table directory reads
+  * as empty.
   */
 class StateStore(spark: SparkSession, root: String) {
 
@@ -38,44 +44,31 @@ class StateStore(spark: SparkSession, root: String) {
   private val keySchema = "url string"
   private val failedSchema = "url string, error string, retries int, last_attempt timestamp"
 
-  /** Reads `<table>`. A missing table whose `<table>.tmp` holds a
-    * finished write (`_SUCCESS`) is a [[commit]] that crashed between
-    * its delete and its rename: the tmp is rolled forward first.
-    */
+  private val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
   private def readOrEmpty(table: String, schema: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path(table))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path(table) + ".tmp")
-    val present = fs.exists(p) || {
-      val finished = fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"))
-      if (finished) rename(fs, tmp, p)
-      finished
-    }
-    if (present) spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(schema)).parquet(path(table))
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schema))
+    val st = StructType.fromDDL(schema)
+    if (fs.exists(new Path(path(table)))) spark.read.schema(st).parquet(path(table))
+    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st)
   }
 
-  /** Table replace: write to `<table>.tmp`, delete the old directory, then
-    * rename the tmp into place. The delete and the rename are two steps: a
-    * crash between them leaves only the finished tmp, which [[readOrEmpty]]
-    * rolls forward.
+  private def dataFiles(dir: Path): Seq[Path] =
+    fs.listStatus(dir).map(_.getPath).filter(_.getName.startsWith("part-")).toSeq
+
+  /** Writes `df` as one file under `<table>.tmp` and installs it into
+    * `<table>/`: over the table's one data file when `replace`, else
+    * beside the table's files under its own name.
     */
-  private def commit(df: DataFrame, table: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path(table) + ".tmp")
-    val dst = new org.apache.hadoop.fs.Path(path(table))
+  private def commit(df: DataFrame, table: String, replace: Boolean = true): Unit = {
+    val (tmp, dir) = (new Path(path(table) + ".tmp"), new Path(path(table)))
     df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (fs.exists(dst)) fs.delete(dst, true)
-    rename(fs, tmp, dst)
+    val part = dataFiles(tmp).head
+    fs.mkdirs(dir)
+    val existing = if (replace) dataFiles(dir) else Nil
+    require(existing.size <= 1, s"state table $dir holds ${existing.size} data files, not one")
+    FileCommit.install(fs, part, existing.headOption.getOrElse(new Path(dir, part.getName)))
+    fs.delete(tmp, true)
   }
-
-  private def rename(fs: org.apache.hadoop.fs.FileSystem,
-                     src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"state commit: rename $src -> $dst returned false")
 
   // ---- T2: session offsets (resume support) ----
 
@@ -134,30 +127,16 @@ class StateStore(spark: SparkSession, root: String) {
     * as one new file beside the table's existing files, which are never
     * rewritten. The table stays a set, and a call writes O(batch) bytes.
     *
-    * The file is written to `completed.tmp`, then renamed into
-    * `completed/` (the first batch renames the whole directory). Spark's
-    * own Append into `completed/` would make the cache manager drop and
-    * re-plan every persisted frame that scans the table — the fetch
-    * results, through [[filterPending]] — so a later read of those results
-    * would fetch the documents again.
+    * The file is installed by [[commit]], not by Spark's own Append into
+    * `completed/`: that would make the cache manager drop and re-plan
+    * every persisted frame that scans the table — the fetch results,
+    * through [[filterPending]] — so a later read of those results would
+    * fetch the documents again.
     */
-  def markCompleted(urls: DataFrame): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path("completed") + ".tmp")
-    val dst = new org.apache.hadoop.fs.Path(path("completed"))
-    // the batch is small: one task dedupes it with no shuffle; the second
-    // coalesce keeps one file should the anti-join shuffle a large set
-    urls.select(col(urls.columns.head).as("url")).coalesce(1).distinct()
-      .join(completed, Seq("url"), "left_anti")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (!fs.exists(dst)) rename(fs, tmp, dst)
-    else {
-      fs.listStatus(tmp).map(_.getPath).filter(_.getName.startsWith("part-"))
-        .foreach(f => rename(fs, f, new org.apache.hadoop.fs.Path(dst, f.getName)))
-      fs.delete(tmp, true)
-    }
-  }
+  def markCompleted(urls: DataFrame): Unit =
+    // the batch is small: one task dedupes it with no shuffle
+    commit(urls.select(col(urls.columns.head).as("url")).coalesce(1).distinct()
+      .join(completed, Seq("url"), "left_anti"), "completed", replace = false)
 
   /** J2 guard: tasks not yet completed (cli.py:101-103). */
   def filterPending(tasks: DataFrame, urlCol: String): DataFrame =

@@ -11,13 +11,14 @@ import org.apache.commons.io.FileUtils
 
 import scala.jdk.CollectionConverters._
 
-/** Crash-point matrix of the batch ingest path (K1/K5/T3). Each case starts
-  * from a committed `Jobs.delta`, grows the page by two linked rows, sets
-  * up the state a crash at one boundary leaves behind, then runs the delta
-  * again. Afterwards every linked URL is in the CSV exactly once, each
-  * fetched one with its full-length file; the page's link-less row is in
-  * it once per run that committed; no torn bytes remain; and the DLQ holds
-  * exactly the permanently failing URL.
+/** Crash-point matrix of the batch ingest path (K1/K5/T3). Cases (a)-(d)
+  * start from a committed `Jobs.delta`, grow the page by two linked rows,
+  * set up the state a crash at one boundary leaves behind, then run the
+  * delta again; case (e) crashes the first delta's DLQ commit. Afterwards
+  * every linked URL is in the CSV exactly once, each fetched one with its
+  * full-length file; the page's link-less row is in it once per run that
+  * committed; no torn bytes remain; and the DLQ holds exactly the
+  * permanently failing URL, with one retry.
   */
 class IngestCrashSpec extends SparkSpec {
 
@@ -105,6 +106,21 @@ class IngestCrashSpec extends SparkSpec {
   test("(d) a leftover <dest>.part is replaced by the full download") {
     val work = committed()
     Files.writeString(Paths.get(s"$work/downloads/life/Doc-3.part"), "CONT")
+    assert(delta(work) == (3L, 2L, 0L))
+    assertRecovered(work, linklessRuns = 2)
+  }
+
+  test("(e) a failed.tmp left by an interrupted DLQ commit is ignored; the DLQ stays exact") {
+    import spark.implicits._
+    val work = Files.createTempDirectory("graft-crash").toString
+    LifePages.write(s"$work/pages", Seq(firstPage))
+    // the first delta's DLQ commit wrote its tmp, then crashed before the install
+    Seq((failing, "HTTP 404", 1, new java.sql.Timestamp(0L)))
+      .toDF("url", "error", "retries", "last_attempt")
+      .coalesce(1).write.parquet(s"$work/state/failed.tmp")
+    assert(delta(work) == (4L, 2L, 1L))
+    assert(!Files.exists(Paths.get(s"$work/state/failed.tmp")))
+    LifePages.write(s"$work/pages", Seq(grownPage))
     assert(delta(work) == (3L, 2L, 0L))
     assertRecovered(work, linklessRuns = 2)
   }

@@ -414,32 +414,35 @@ class SnapshotDsv2Spec extends SparkSpec {
     assert(SnapshotTable.read(spark, root).count() == 30)
   }
 
+  /** An empty sink table for the change feed of [[rows]]. */
+  private def sinkTable(): String = {
+    val dst = freshRoot()
+    SnapshotTable.createEmpty(spark, dst, org.apache.spark.sql.types.StructType.fromDDL(
+      "k long, v long, change_type string, _commit_version long"), "k")
+    dst
+  }
+
+  /** An AvailableNow drain of `src`'s change feed into `dst`, one source
+    * version per micro-batch.
+    */
+  private def drainChanges(src: String, dst: String, ckpt: String): Unit = {
+    val q = spark.readStream.format("graft-snapshot")
+      .option("path", src).option("mode", "changes")
+      .option("maxVersionsPerTrigger", "1").load()
+      .writeStream.format("graft-snapshot")
+      .option("path", dst).option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+  }
+
   test("streaming sink: exactly-once delivery across AvailableNow restarts") {
     val src = freshRoot()
-    val dst = freshRoot()
+    val dst = sinkTable()
     val ckpt = graft.queries.Fixtures.scratchIndexDir("snap-sink-ckpt")
     SnapshotTable.create(spark, src, rows(40), "k")
     SnapshotTable.append(spark, src, rows(10, 100))
-    val sinkSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("k",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("v",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("change_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("_commit_version",
-        org.apache.spark.sql.types.LongType)))
-    SnapshotTable.createEmpty(spark, dst, sinkSchema, "k")
-    def drain(): Unit = {
-      val q = spark.readStream.format("graft-snapshot")
-        .option("path", src).option("mode", "changes")
-        .option("maxVersionsPerTrigger", "1").load()
-        .writeStream.format("graft-snapshot")
-        .option("path", dst).option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    def drain(): Unit = drainChanges(src, dst, ckpt)
     drain()
     assert(SnapshotTable.read(spark, dst).count() == 50,
       "first drain delivers both commits' insert legs")
@@ -457,6 +460,31 @@ class SnapshotDsv2Spec extends SparkSpec {
       "the restart delivers exactly the new commit's leg")
     assert(out.groupBy("k").count().where(col("count") > 1).count() == 0,
       "no key was ever delivered twice")
+  }
+
+  test("streaming sink: a replayed batch is skipped by the manifest watermark; a fresh checkpoint re-delivers") {
+    val src = freshRoot()
+    val dst = sinkTable()
+    val ckpt = graft.queries.Fixtures.scratchIndexDir("snap-sink-ckpt")
+    SnapshotTable.create(spark, src, rows(40), "k")
+    SnapshotTable.append(spark, src, rows(10, 100))
+    drainChanges(src, dst, ckpt)
+    assert(SnapshotTable.read(spark, dst).count() == 50)
+    // a crash after the sink's manifest commit, before the checkpoint's
+    // own commit: the restart runs the last batch again with its batchId
+    val commits = new java.io.File(s"$ckpt/commits")
+    val last = commits.list().filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    Seq(last, s".$last.crc").foreach(n => new java.io.File(commits, n).delete())
+    // a non-streaming commit in between carries the watermark forward
+    SnapshotTable.appendEvolved(spark, dst,
+      rows(1, 300).withColumn("change_type", lit("insert")).withColumn("_commit_version", lit(9L)))
+    drainChanges(src, dst, ckpt)
+    assert(SnapshotTable.read(spark, dst).count() == 51, "the replayed batch must be skipped")
+    // a fresh checkpoint is a new lineage whose batchIds restart at 0: it
+    // re-delivers the feed (at-least-once) rather than dropping it as
+    // already delivered against the old lineage's watermark
+    drainChanges(src, dst, graft.queries.Fixtures.scratchIndexDir("snap-sink-ckpt"))
+    assert(SnapshotTable.read(spark, dst).count() == 101)
   }
 
   test("change stream after expire: default start is the retention boundary; numeric pre-boundary stays loud") {

@@ -188,67 +188,6 @@ class SnapshotTableSpec extends SparkSpec {
       "cluster is a lossless rewrite")
   }
 
-  test("streamingAppend: replay skipped, next batch delivered, fresh lineage re-baselines") {
-    val root = freshRoot()
-    SnapshotTable.create(spark, root, rows(10), "k")
-    val key = org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY
-    val sc = spark.sparkContext
-    try {
-      sc.setLocalProperty(key, "lineage-1")
-      assert(SnapshotTable.streamingAppend(spark, root, rows(5, 100), 0L) == 2)
-      // foreachBatch replay of the SAME batch: detected via the
-      // watermark committed atomically with the data — skipped
-      assert(SnapshotTable.streamingAppend(spark, root, rows(5, 100), 0L) == -1)
-      assert(SnapshotTable.read(spark, root).count() == 15)
-      assert(SnapshotTable.streamingAppend(spark, root, rows(5, 200), 1L) == 3)
-      // a NON-streaming commit carries the watermark forward…
-      SnapshotTable.append(spark, root, rows(1, 300))
-      // …so a later replay of batch 1 is still detected
-      assert(SnapshotTable.streamingAppend(spark, root, rows(5, 200), 1L) == -1)
-      // fresh checkpoint lineage: batchIds restart at 0 — must
-      // RE-DELIVER (at-least-once), never silently drop as "already
-      // delivered" against the old lineage's high-water mark
-      sc.setLocalProperty(key, "lineage-2")
-      assert(SnapshotTable.streamingAppend(spark, root, rows(5, 400), 0L) == 5)
-      assert(SnapshotTable.read(spark, root).count() == 26)
-    } finally sc.setLocalProperty(key, null)
-  }
-
-  test("snapshotSink end-to-end: restart from the same checkpoint neither drops nor duplicates") {
-    val dir = freshRoot()
-    val src = s"$dir/src"
-    val root = s"$dir/table"
-    val ckpt = s"$dir/ckpt"
-    import org.apache.spark.sql.streaming.Trigger
-    def runOnce(): Unit = {
-      val stream = spark.readStream
-        .schema("k LONG, v LONG")
-        .option("maxFilesPerTrigger", "1") // several micro-batches per run
-        .parquet(src)
-      val q = SnapshotTable.snapshotSink(stream, root, ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    rows(100).coalesce(1).write.mode("append").parquet(src)
-    rows(50, 100).coalesce(1).write.mode("append").parquet(src)
-    // first run must bootstrap the table (streaming writer against an
-    // absent table creates version 1 from the stream schema)
-    SnapshotTable.create(spark, root,
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL("k LONG, v LONG")), "k")
-    runOnce()
-    assert(SnapshotTable.read(spark, root).count() == 150)
-    // restart with NO new data: the checkpoint replays nothing
-    runOnce()
-    assert(SnapshotTable.read(spark, root).count() == 150)
-    // new data after restart: exactly the new rows arrive
-    rows(30, 150).coalesce(1).write.mode("append").parquet(src)
-    runOnce()
-    assert(SnapshotTable.read(spark, root).count() == 180)
-    assert(SnapshotTable.read(spark, root).select("k").distinct().count() == 180,
-      "every key exactly once — no drop, no duplicate, by CONTENT")
-  }
-
   test("appendEvolved widens the schema; old files read null; time travel keeps each version's schema") {
     val root = freshRoot()
     SnapshotTable.create(spark, root, rows(10), "k")

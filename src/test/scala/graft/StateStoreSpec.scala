@@ -1,7 +1,10 @@
 package graft
 
 import graft.state.StateStore
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
+import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
 
@@ -59,16 +62,91 @@ class StateStoreSpec extends SparkSpec {
     assert(pending.as[String].collect().toSeq == Seq("c"))
   }
 
-  test("a commit that crashed between its delete and its rename is rolled forward (K5)") {
+  test("a finished <table>.tmp left by a crash before its install is ignored (K5)") {
     val root = Files.createTempDirectory("graft-state").toString
-    new StateStore(spark, root).markCompleted(Seq("a", "b").toDF("url"))
-    // the finished tmp is all that is left of the table
-    val table = new java.io.File(s"$root/completed")
-    org.apache.commons.io.FileUtils.copyDirectory(table, new java.io.File(s"$root/completed.tmp"))
-    org.apache.commons.io.FileUtils.deleteDirectory(table)
     val st = new StateStore(spark, root)
-    assert(st.completed.as[String].collect().toSet == Set("a", "b"))
-    assert(table.isDirectory && !new java.io.File(s"$root/completed.tmp").exists)
+    st.startSession("life", 10)
+    st.updateProgress("life", 3, 30)
+    st.markFailed(Seq(("u1", "timeout")).toDF("url", "error"))
+    val (sessions, failed) = (st.sessions.collect().toSeq, st.failed.collect().toSeq)
+    // what a commit that crashed before its install leaves: a finished write
+    st.sessions.withColumn("last_completed_page", lit(9))
+      .coalesce(1).write.parquet(s"$root/sessions.tmp")
+    st.failed.withColumn("retries", col("retries") + 6)
+      .coalesce(1).write.parquet(s"$root/failed.tmp")
+    assert(st.sessions.collect().toSeq == sessions)
+    assert(st.failed.collect().toSeq == failed)
+    // the next commits replace the tmp, commit normally and leave no tmp
+    st.updateProgress("life", 4, 10)
+    st.markFailed(Seq(("u2", "dns")).toDF("url", "error"))
+    assert(st.resumePage("life") == 5)
+    assert(st.failed.collect().map(r => r.getAs[String]("url") -> r.getAs[Int]("retries")).toMap ==
+      Map("u1" -> 1, "u2" -> 1))
+    assert(Seq("sessions", "failed").forall(t => !Files.exists(Paths.get(s"$root/$t.tmp"))))
+  }
+
+  test("a crash inside an install leaves the old table or the new one, readable (K5)") {
+    val root = Files.createTempDirectory("graft-state").toString
+    val st = new StateStore(spark, root)
+    st.markFailed(Seq(("u1", "timeout")).toDF("url", "error"))
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .asInstanceOf[ChecksumFileSystem]
+    val raw = fs.getRawFileSystem
+    def urls = st.failed.select("url").as[String].collect().toSet
+    def part(dir: String) = new Path(s"$root/$dir/${dataFiles(root, dir).head}")
+    // crashed after deleting the old .crc: the old table, read unchecked
+    raw.delete(fs.getChecksumFile(part("failed")), false)
+    assert(urls == Set("u1"))
+    // crashed after the data rename, before its .crc followed it: the new table
+    st.failed.unionByName(Seq(("u2", "dns", 1, new java.sql.Timestamp(0L)))
+        .toDF("url", "error", "retries", "last_attempt"))
+      .coalesce(1).write.parquet(s"$root/failed.tmp")
+    assert(raw.rename(part("failed.tmp"), part("failed")))
+    assert(urls == Set("u1", "u2"))
+    // the next commit installs normally: one checksummed data file, no tmp
+    st.markFailed(Seq(("u3", "http 404")).toDF("url", "error"))
+    assert(urls == Set("u1", "u2", "u3"))
+    assert(dataFiles(root, "failed").size == 1 && fs.exists(fs.getChecksumFile(part("failed"))))
+    assert(!Files.exists(Paths.get(s"$root/failed.tmp")))
+  }
+
+  /** The names of the table's data files: not `_SUCCESS`, not a `.crc`. */
+  private def dataFiles(root: String, table: String): Seq[String] =
+    Files.list(Paths.get(s"$root/$table")).iterator.asScala.map(_.getFileName.toString)
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSeq
+
+  test("failed/ stays one plain parquet file that spark.read.parquet reads as the DLQ") {
+    val root = Files.createTempDirectory("graft-state").toString
+    val st = new StateStore(spark, root)
+    st.startSession("life", 10)
+    st.markFailed(Seq(("u1", "timeout"), ("u2", "dns")).toDF("url", "error"))
+    st.markFailed(Seq(("u1", "http 500")).toDF("url", "error"))
+    st.clearSucceeded(Seq("u2").toDF("url"))
+    st.markFailed(Seq(("u3", "http 404")).toDF("url", "error"))
+    val plain = spark.read.parquet(s"$root/failed")
+    assert(plain.collect().toSet == st.failed.collect().toSet)
+    assert(plain.select("url", "retries").as[(String, Int)].collect().toMap ==
+      Map("u1" -> 2, "u3" -> 1))
+    assert(dataFiles(root, "sessions").size == 1 && dataFiles(root, "failed").size == 1)
+  }
+
+  test("a table written as one part file plus _SUCCESS gains no duplicate rows on its next commit") {
+    val root = Files.createTempDirectory("graft-state").toString
+    Seq(("life", "in_progress", 3, 10, 30L))
+      .toDF("product_type", "status", "last_completed_page", "total_pages", "total_products")
+      .coalesce(1).write.parquet(s"$root/sessions")
+    Seq(("u1", "timeout", 1, new java.sql.Timestamp(0L)))
+      .toDF("url", "error", "retries", "last_attempt")
+      .coalesce(1).write.parquet(s"$root/failed")
+    assert(Files.exists(Paths.get(s"$root/failed/_SUCCESS")))
+    val st = new StateStore(spark, root)
+    st.updateProgress("life", 4, 10)
+    st.markFailed(Seq(("u2", "dns")).toDF("url", "error"))
+    assert(st.sessions.select("product_type", "last_completed_page", "total_products")
+      .as[(String, Int, Long)].collect().toSeq == Seq(("life", 4, 40L)))
+    assert(st.failed.select("url", "retries").as[(String, Int)].collect().sorted.toSeq ==
+      Seq(("u1", 1), ("u2", 1)))
+    assert(dataFiles(root, "sessions").size == 1 && dataFiles(root, "failed").size == 1)
   }
 
   test("markCompleted adds one file of new URLs and leaves the table's files untouched (T3)") {
