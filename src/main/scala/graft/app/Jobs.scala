@@ -86,43 +86,42 @@ object Jobs {
       val pending = state.filterPending(tasks, "url")
         .as(Encoders.product[DownloadTask])
 
-      // S6-S8 fetch; checkpoint results BEFORE any join (SURVEY §7.4).
-      val results = Downloader.download(pending, fetch).toDF()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val (ok, bad) = Downloader.splitResults(results)
-        val (nOk, nBad) = outcomeCounts(results)
+      // S6-S8 fetch. Its results are collected, one small row per fetched
+      // URL: the DLQ, the CSV and `completed` read them on the driver, and
+      // a collected result can never be fetched again (SURVEY §7.4).
+      val results = Downloader.download(pending, fetch).collect().toSeq
+      val (ok, bad) = results.partition(_.success)
 
-        // T4: failures go to the DLQ first; a re-run retries them either way.
-        if (nBad > 0) state.markFailed(bad.select("url", "error"))
+      // T4: failures go to the DLQ first; a re-run retries them either way.
+      if (bad.nonEmpty) state.markFailed(failures(spark, bad))
 
-        // J3: enrich products with their download outcome, then K1 append.
-        val enriched = DeltaOps.enrich(
-          fresh,
-          results.select(col("url").as("document_url"), col("file_path").as("local_file_path"),
-            col("file_size"), col("success")),
-          "document_url", "file_size")
-          .drop("file_size", "success")
-        CsvMeta.append(enriched, productType, csv)
+      // J3: enrich products with their download outcome, then K1 append.
+      val enriched = DeltaOps.enrich(
+        fresh,
+        spark.createDataFrame(results).select(col("url").as("document_url"),
+          col("file_path").as("local_file_path"), col("file_size"), col("success")),
+        "document_url", "file_size")
+        .drop("file_size", "success")
+      CsvMeta.append(enriched, productType, csv)
 
-        // T3: mark URLs completed only once their rows are committed to the
-        // CSV. After a crash before that commit the re-run derives the same
-        // rows, re-fetches them (skipExisting answers from the stored file)
-        // and appends their file paths; marked first, it would append an
-        // empty local_file_path.
-        if (nOk > 0) state.markCompleted(ok.select("url"))
-        (freshCount, nOk, nBad)
-      } finally results.unpersist()
+      // T3: mark URLs completed only once their rows are committed to the
+      // CSV. After a crash before that commit the re-run derives the same
+      // rows, re-fetches them (skipExisting answers from the stored file)
+      // and appends their file paths; marked first, it would append an
+      // empty local_file_path. They passed `filterPending` above, so none
+      // is in the set yet.
+      if (ok.nonEmpty) state.markCompleted(ok.map(_.url))
+      (freshCount, ok.size.toLong, bad.size.toLong)
     } finally fresh.unpersist()
   }
 
-  /** (successes, failures) of persisted fetch results, in one job. */
-  private def outcomeCounts(results: DataFrame): (Long, Long) = {
-    val row = results.agg(count(when(col("success"), 1)), count(when(!col("success"), 1))).head()
-    (row.getLong(0), row.getLong(1))
-  }
+  /** The DLQ rows (url, error) of failed fetch results. */
+  private def failures(spark: SparkSession, bad: Seq[Downloader.DownloadResult]): DataFrame =
+    spark.createDataFrame(bad.map(r => (r.url, r.error))).toDF("url", "error")
 
-  /** §3.1 scrape: resume from state, scan [resume..totalPages]. */
+  /** §3.1 scrape: resume from state, scan [resume..totalPages]. A scrape
+    * with no page left to scan leaves its session completed.
+    */
   def scrape(spark: SparkSession, workDir: String, productType: String,
              pagesDir: String, totalPages: Int,
              fetch: String => Array[Byte] = stubFetch): (Long, Long, Long) = {
@@ -130,7 +129,10 @@ object Jobs {
     val state = new StateStore(spark, s"$workDir/state")
     state.startSession(productType, totalPages)
     val start = state.resumePage(productType)
-    if (start > totalPages) return (0L, 0L, 0L)
+    if (start > totalPages) {
+      state.completeSession(productType)
+      return (0L, 0L, 0L)
+    }
     val pages = PageSource.fixtureScan(spark, productType, pagesDir, start, totalPages)
     val out = runPipeline(spark, state, workDir, productType, pages, fetch)
     state.updateProgress(productType, totalPages, out._1)
@@ -161,18 +163,15 @@ object Jobs {
         coalesce(T.filenameFromUrl(col("url")),
           concat(lit("file_"), T.urlHash(col("url")).cast("string")))).as("destination"))
       .as(Encoders.product[DownloadTask])
-    val results = Downloader.download(tasks, fetch).toDF()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val (ok, bad) = Downloader.splitResults(results)
-      val counts @ (nOk, nBad) = outcomeCounts(results)
-      if (nOk > 0) {
-        state.markCompleted(ok.select("url"))
-        state.clearSucceeded(ok.select("url"))
-      }
-      if (nBad > 0) state.markFailed(bad.select("url", "error"))
-      counts
-    } finally results.unpersist()
+    val results = Downloader.download(tasks, fetch).collect().toSeq
+    val (ok, bad) = results.partition(_.success)
+    if (ok.nonEmpty) {
+      val urls = spark.createDataFrame(ok.map(r => Tuple1(r.url))).toDF("url")
+      state.markCompleted(urls)
+      state.clearSucceeded(urls)
+    }
+    if (bad.nonEmpty) state.markFailed(failures(spark, bad))
+    (ok.size.toLong, bad.size.toLong)
   }
 
   /** §3.3 reset: drop session state (and optionally the CSV). */

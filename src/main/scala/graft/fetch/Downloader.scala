@@ -5,8 +5,7 @@ import java.util.concurrent.{DelayQueue, Delayed, LinkedBlockingQueue, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
 import org.apache.spark.TaskContext
 import org.apache.spark.graftbridge.TaskThreads
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, Encoders}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.OptionConverters._
 import scala.util.control.NonFatal
@@ -20,9 +19,10 @@ import scala.util.control.NonFatal
   *
   * Spark shape: `mapPartitions` over a task Dataset — the fetch is a
   * side-effecting, non-deterministic operator, so it must NOT sit under a
-  * join/aggregate Catalyst could re-execute; callers checkpoint the result
-  * (write it out, e.g. to the state store) BEFORE the enrichment join
-  * (SURVEY §7.4).
+  * join/aggregate Catalyst could re-execute; callers collect the result
+  * (one small row per URL) BEFORE anything reads it, so no later plan can
+  * run the fetch again (SURVEY §7.4). Success and failure (F5,
+  * cli.py:116-143) split on the driver.
   *
   * In-flight pool: the tasks go to `numExecutors` partitions, and each
   * partition runs `ceil(maxConcurrent / numExecutors)` blocking fetch
@@ -248,8 +248,4 @@ object Downloader {
         out.iterator
       }
   }
-
-  /** F5: split results into (successes, failures) — cli.py:116-143. */
-  def splitResults(results: DataFrame): (DataFrame, DataFrame) =
-    (results.where(col("success")), results.where(!col("success")))
 }

@@ -4,7 +4,7 @@ import java.io.IOException
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -22,9 +22,10 @@ import graft.state.FileCommit
   *
   * Fidelity note (SURVEY §7.4): the reference appends to ONE file with ONE
   * header. Spark's CSV sink writes a directory of part files with a header
-  * per part, so [[append]] writes parts distributed, then streams them onto
-  * the end of the single target file in place, driver-side (no `collect()`
-  * — bytes stream through a fixed buffer regardless of size).
+  * per part, so [[append]] formats the rows with Spark's own CSV generator
+  * (`to_csv`, the sink's options) and streams them from one partition to
+  * the driver, which appends them to the end of the single target file in
+  * place. The driver holds at most one batch of lines.
   */
 object CsvMeta {
 
@@ -95,15 +96,6 @@ object CsvMeta {
     val fs = new Path(csvPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(csvPath))) 0L
     else spark.read.option("header", "true").csv(csvPath).count()
-  }
-
-  private def streamCopy(fs: FileSystem, src: Path, out: java.io.OutputStream,
-                         buf: Array[Byte]): Unit = {
-    val in = fs.open(src)
-    try {
-      var n = in.read(buf)
-      while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-    } finally in.close()
   }
 
   /** `<csv>.committed`: the CSV's committed byte length, as decimal text. */
@@ -187,19 +179,21 @@ object CsvMeta {
     * doesn't exist yet; missing columns become empty strings
     * (extrasaction=ignore + None→"" parity, csv_writer.py:44-51, 79-94).
     *
-    * One path, O(batch): the batch is written as distributed part files,
-    * which are then streamed onto the end of the CSV in place — through the
-    * raw FS under a checksummed one, else the FS's own `append` — and the
-    * CSV's new byte length is committed to the `<csv>.committed` sidecar by
-    * an atomic rename. Bytes past the committed length are not part of the
-    * CSV: every append, and [[truncateToCommitted]], cuts them off first.
+    * One path, O(batch), with no Spark write job: each row is formatted by
+    * `to_csv` — the CSV writer's own generator and options, so the bytes
+    * are those `df.write.csv` would write — and the lines are streamed from
+    * one partition (`toLocalIterator`) onto the end of the CSV in place,
+    * through the raw FS under a checksummed one, else the FS's own
+    * `append`. The CSV's new byte length is then committed to the
+    * `<csv>.committed` sidecar by an atomic rename. Bytes past the
+    * committed length are not part of the CSV: every append, and
+    * [[truncateToCommitted]], cuts them off first.
     *
     * Crash windows:
-    *  - during the part write: the CSV is untouched;
-    *  - during the stitch, or before the length commit: the tail past the
-    *    committed length is dropped by the next run, whose delta derives
-    *    those rows again (`Jobs.runPipeline` marks their URLs completed
-    *    only after this returns);
+    *  - while the rows stream, or before the length commit: the tail past
+    *    the committed length is dropped by the next run, whose delta
+    *    derives those rows again (`Jobs.runPipeline` marks their URLs
+    *    completed only after this returns);
     *  - a new CSV commits length 0 before its first byte, so a crash while
     *    it is written deletes it on the next run.
     * An FS that can neither append nor truncate fails here, naming the
@@ -208,20 +202,14 @@ object CsvMeta {
   def append(df: DataFrame, productType: String, csvPath: String): Unit = {
     val spark = df.sparkSession
     val cols = columns(productType)
-    val ordered = df.select(cols.map(c =>
-      if (df.columns.contains(c)) coalesce(col(c).cast("string"), lit("")).as(c)
-      else lit("").as(c)): _*)
+    // X14: a null or empty value is written as nothing
+    val lines = df.select(to_csv(struct(cols.map(c =>
+        if (df.columns.contains(c)) coalesce(col(c).cast("string"), lit("")).as(c)
+        else lit("").as(c)): _*), java.util.Map.of("emptyValue", "", "nullValue", "")))
+      .as(Encoders.STRING).coalesce(1).toLocalIterator()
 
     val target = new Path(csvPath)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-    val partsDir = new Path(csvPath + ".parts.tmp")
-    ordered.write.mode(SaveMode.Overwrite)
-      .option("header", "false").option("emptyValue", "").option("nullValue", "")
-      .csv(partsDir.toString)
-    val parts = fs.listStatus(partsDir).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName).toSeq
-
     val base = rollBack(fs, target)
     if (!fs.exists(lengthFile(target))) commitLength(fs, target, base)
     val out =
@@ -229,12 +217,9 @@ object CsvMeta {
       else inPlace(fs, target, "append")(_.append(target))
     try {
       if (base == 0) out.write((cols.mkString(",") + "\n").getBytes(UTF_8))
-      val buf = new Array[Byte](1 << 16)
-      parts.foreach(p => streamCopy(fs, p, out, buf))
+      lines.forEachRemaining(l => out.write((l + "\n").getBytes(UTF_8)))
     } finally out.close()
     commitLength(fs, target, fs.getFileStatus(target).getLen)
-    fs.delete(partsDir, true)
-    ()
   }
 
   /** K4: clear one metadata CSV (csv_writer.py:112-126). */

@@ -1,9 +1,20 @@
 package graft.state
 
+import java.util.UUID
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetFileWriter
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
+import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.MICROS
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 
 /** Incremental-pipeline state (SURVEY §2.10 T2-T4, §2.6 A3/A4), persisted
   * as three small parquet tables under one root directory:
@@ -18,61 +29,106 @@ import org.apache.spark.sql.types.StructType
   *
   * Design departures from the reference, on purpose (state.py:49-83
   * rewrites the FULL state JSON after every row mutation — its scalability
-  * defect): mutations here are BATCH-level DataFrame writes. Each table is
-  * tiny relative to the corpus (thousands of rows per million documents),
-  * so Catalyst broadcast-joins them against the big side automatically —
-  * exactly how the reference uses its in-memory sets.
+  * defect): mutations here are BATCH-level. Each table is tiny relative to
+  * the corpus (thousands of rows per million documents), so Catalyst
+  * broadcast-joins them against the big side automatically — exactly how
+  * the reference uses its in-memory sets.
   *
   * Every commit installs one file by one atomic rename
   * ([[FileCommit.install]], the same step that commits the metadata
-  * CSV's length). Spark writes the table's new content through
-  * `coalesce(1)` as one file under `<table>.tmp`; that file is installed
-  * into `<table>/`, and the tmp is dropped. `sessions` and `failed` hold
-  * exactly one data file, and the new one is installed over it, so a
+  * CSV's length). The table's new content, one batch of small rows, is
+  * collected to the driver and written by parquet-hadoop's writer through
+  * the table's own FileSystem as one file at `<table>.tmp` — no Spark
+  * write job, so no planning, output committer or `_SUCCESS` per commit —
+  * and that file is installed into `<table>/`. `sessions` and `failed`
+  * hold exactly one data file, and the new one is installed over it, so a
   * reader sees the old table or the new one. `completed` only grows: its
   * batch file is installed beside the existing ones under its own unique
-  * name. A tmp left by a crash before its install is ignored by reads and
-  * replaced by the next commit; a missing or empty table directory reads
-  * as empty.
+  * name. The files are plain parquet that `spark.read.parquet` reads with
+  * the tables' own types. A `<table>.tmp` left by a crash before its
+  * install (a file, or a directory from Spark-written commits) is ignored
+  * by reads and replaced by the next commit; a missing or empty table
+  * directory reads as empty.
   */
 class StateStore(spark: SparkSession, root: String) {
 
   private def path(table: String) = s"$root/$table"
 
-  private val sessionSchema = "product_type string, status string, " +
-    "last_completed_page int, total_pages int, total_products long"
-  private val keySchema = "url string"
-  private val failedSchema = "url string, error string, retries int, last_attempt timestamp"
+  private val schemas = Map(
+    "sessions" -> StructType.fromDDL("product_type string, status string, " +
+      "last_completed_page int, total_pages int, total_products long"),
+    "completed" -> StructType.fromDDL("url string"),
+    "failed" -> StructType.fromDDL("url string, error string, retries int, last_attempt timestamp"))
 
-  private val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val conf = spark.sparkContext.hadoopConfiguration
+  private val fs = new Path(root).getFileSystem(conf)
 
-  private def readOrEmpty(table: String, schema: String): DataFrame = {
-    val st = StructType.fromDDL(schema)
+  private def readOrEmpty(table: String): DataFrame = {
+    val st = schemas(table)
     if (fs.exists(new Path(path(table)))) spark.read.schema(st).parquet(path(table))
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], st)
+    else spark.createDataFrame(java.util.List.of[Row](), st)
   }
 
   private def dataFiles(dir: Path): Seq[Path] =
     fs.listStatus(dir).map(_.getPath).filter(_.getName.startsWith("part-")).toSeq
 
-  /** Writes `df` as one file under `<table>.tmp` and installs it into
-    * `<table>/`: over the table's one data file when `replace`, else
-    * beside the table's files under its own name.
+  /** The parquet schema of `st`: every column optional, as Spark writes
+    * it, and a timestamp as INT64 microseconds adjusted to UTC, which
+    * Spark reads back as `TimestampType`.
+    */
+  private def parquetSchema(st: StructType): MessageType = {
+    val b = Types.buildMessage()
+    st.fields.foreach { f =>
+      f.dataType match {
+        case StringType => b.optional(BINARY).as(LogicalTypeAnnotation.stringType()).named(f.name)
+        case IntegerType => b.optional(INT32).named(f.name)
+        case LongType => b.optional(INT64).named(f.name)
+        case TimestampType =>
+          b.optional(INT64).as(LogicalTypeAnnotation.timestampType(true, MICROS)).named(f.name)
+      }
+    }
+    b.named("spark_schema")
+  }
+
+  /** Writes `df`'s rows as one parquet file at `<table>.tmp` and installs
+    * it into `<table>/`: over the table's one data file when `replace`,
+    * else beside the table's files under its own name.
     */
   private def commit(df: DataFrame, table: String, replace: Boolean = true): Unit = {
-    val (tmp, dir) = (new Path(path(table) + ".tmp"), new Path(path(table)))
-    df.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val part = dataFiles(tmp).head
+    val st = schemas(table)
+    commit(df.select(st.fieldNames.toSeq.map(col): _*).collect().toSeq, table, replace)
+  }
+
+  private def commit(rows: Seq[Row], table: String, replace: Boolean): Unit = {
+    val (tmp, dir, st) = (new Path(path(table) + ".tmp"), new Path(path(table)), schemas(table))
+    fs.delete(tmp, true)
+    val schema = parquetSchema(st)
+    val groups = new SimpleGroupFactory(schema)
+    val out = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf).withType(schema).withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    try rows.foreach { r =>
+      val g = groups.newGroup()
+      st.fields.indices.filterNot(r.isNullAt).foreach { i =>
+        st.fields(i).dataType match {
+          case StringType => g.add(i, r.getString(i))
+          case IntegerType => g.add(i, r.getInt(i))
+          case LongType => g.add(i, r.getLong(i))
+          case TimestampType => g.add(i, DateTimeUtils.fromJavaTimestamp(r.getTimestamp(i)))
+        }
+      }
+      out.write(g)
+    } finally out.close()
     fs.mkdirs(dir)
     val existing = if (replace) dataFiles(dir) else Nil
     require(existing.size <= 1, s"state table $dir holds ${existing.size} data files, not one")
-    FileCommit.install(fs, part, existing.headOption.getOrElse(new Path(dir, part.getName)))
-    fs.delete(tmp, true)
+    FileCommit.install(fs, tmp,
+      existing.headOption.getOrElse(new Path(dir, s"part-${UUID.randomUUID()}.snappy.parquet")))
   }
 
   // ---- T2: session offsets (resume support) ----
 
-  def sessions: DataFrame = readOrEmpty("sessions", sessionSchema)
+  def sessions: DataFrame = readOrEmpty("sessions")
 
   /** Start (or restart) a session row for a product type
     * (state.py:99-106). The row is built with the typed API, like
@@ -120,7 +176,7 @@ class StateStore(spark: SparkSession, root: String) {
 
   // ---- T3: completed-key set (exactly-once-per-URL) ----
 
-  def completed: DataFrame = readOrEmpty("completed", keySchema)
+  def completed: DataFrame = readOrEmpty("completed")
 
   /** Idempotent batch insert (U3; state.py:137-140 set-add, batched),
     * append-only: the batch's distinct URLs not yet in the set are written
@@ -129,14 +185,19 @@ class StateStore(spark: SparkSession, root: String) {
     *
     * The file is installed by [[commit]], not by Spark's own Append into
     * `completed/`: that would make the cache manager drop and re-plan
-    * every persisted frame that scans the table — the fetch results,
-    * through [[filterPending]] — so a later read of those results would
-    * fetch the documents again.
+    * every persisted frame that scans the table through [[filterPending]].
     */
   def markCompleted(urls: DataFrame): Unit =
     // the batch is small: one task dedupes it with no shuffle
     commit(urls.select(col(urls.columns.head).as("url")).coalesce(1).distinct()
       .join(completed, Seq("url"), "left_anti"), "completed", replace = false)
+
+  /** [[markCompleted]] for a driver-side batch of URLs that passed
+    * [[filterPending]] earlier in the same run, so none is in the set yet:
+    * the batch's distinct URLs are committed with no Spark job.
+    */
+  def markCompleted(urls: Seq[String]): Unit =
+    commit(urls.distinct.map(Row(_)), "completed", replace = false)
 
   /** J2 guard: tasks not yet completed (cli.py:101-103). */
   def filterPending(tasks: DataFrame, urlCol: String): DataFrame =
@@ -144,23 +205,21 @@ class StateStore(spark: SparkSession, root: String) {
 
   // ---- T4: dead-letter queue + replay ----
 
-  def failed: DataFrame = readOrEmpty("failed", failedSchema)
+  def failed: DataFrame = readOrEmpty("failed")
 
   /** Record failures; a url already in the DLQ gets retries+1 and the new
-    * error (state.py:142-156).
+    * error (state.py:142-156). The DLQ and the batch are small: they are
+    * merged on the driver, so the commit reads the table once.
     */
   def markFailed(failures: DataFrame): Unit = {
-    val incoming = failures.select(
-      col("url").cast("string"),
-      col("error").cast("string"),
-      current_timestamp().as("last_attempt"))
-    val prior = failed.select(col("url"), col("retries").as("prior_retries"))
-    val merged = incoming.join(prior, Seq("url"), "left")
-      .select(col("url"), col("error"),
-        (coalesce(col("prior_retries"), lit(0)) + 1).as("retries"),
-        col("last_attempt"))
-    commit(failed.join(incoming.select("url"), Seq("url"), "left_anti")
-      .unionByName(merged), "failed")
+    val now = java.sql.Timestamp.from(java.time.Instant.now())
+    val incoming = failures.select(col("url").cast("string"), col("error").cast("string")).collect()
+    val prior = failed.collect().toSeq
+    val retries = prior.map(r => r.getString(0) -> r.getInt(2)).toMap
+    val urls = incoming.map(_.getString(0)).toSet
+    commit(prior.filterNot(r => urls(r.getString(0))) ++ incoming.map(r =>
+      Row(r.getString(0), r.getString(1), retries.getOrElse(r.getString(0), 0) + 1, now)),
+      "failed", replace = true)
   }
 
   /** J4: remove urls that have since succeeded (state.py:162-167). */

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import graft.sources.CsvMeta
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.Row
 
 import scala.jdk.CollectionConverters._
 
@@ -63,6 +64,31 @@ class CsvAppendSpec extends SparkSpec {
     assert(CsvMeta.loadExistingUrls(spark, csv, "health").as[String].collect().sorted.toSeq ==
       Seq("u1", "u2"))
     assert(CsvMeta.loadExistingUrls(spark, csv).as[String].collect().sorted.toSeq == Seq("u1", "u2"))
+  }
+
+  test("append adds, byte for byte, what Spark's CSV writer writes for the same rows") {
+    val dir = tmpDir()
+    val csv = s"$dir/health_products.csv"
+    val cols = CsvMeta.columns("health")
+    val values = Seq("a,b", "say \"hi\"", "\"", "back\\slash\\", "line1\nline2", "cr\r\nlf", "lone\r",
+      "tab\there", "  edge spaces  ", " ", "", null, "Ünïcødé — 保険 ✓", "\\\"mixed,\n\"")
+    // each value in every column, and each beside its neighbour
+    val rows = values.indices.map(i => Row.fromSeq(cols.indices.map(c => values((i + c) % values.size))))
+    val df = spark.createDataFrame(rows.asJava,
+      org.apache.spark.sql.types.StructType.fromDDL(cols.map(c => s"`$c` string").mkString(", ")))
+    val written = s"$dir/written"
+    df.coalesce(1).write.option("header", "false").option("emptyValue", "").option("nullValue", "")
+      .csv(written)
+    val expected = Files.list(Paths.get(written)).iterator.asScala.toSeq
+      .filter(_.getFileName.toString.startsWith("part-")).sortBy(_.getFileName.toString)
+      .flatMap(p => Files.readAllBytes(p).toSeq)
+
+    CsvMeta.append(Seq(("u0", "P0")).toDF("document_url", "product_name"), "health", csv)
+    val before = Files.size(Paths.get(csv)).toInt
+    CsvMeta.append(df, "health", csv)
+    val added = Files.readAllBytes(Paths.get(csv)).toSeq.drop(before)
+    assert(added.nonEmpty && added == expected,
+      s"appended:\n${new String(added.toArray, "UTF-8")}\nwritten:\n${new String(expected.toArray, "UTF-8")}")
   }
 
   test("clear removes the CSV, its checksum and its committed length") {

@@ -44,10 +44,10 @@ class DownloaderSpec extends SparkSpec {
     val results = Downloader.download(tasks,
       url => if (url == "bad") throw new IllegalStateException("nope")
              else "x".getBytes("UTF-8"),
-      retryAttempts = 2, retryDelayMs = 1).toDF()
-    val (ok, bad) = Downloader.splitResults(results)
-    assert(ok.count() == 1 && bad.count() == 1)
-    val err = bad.collect().head.getAs[String]("error")
+      retryAttempts = 2, retryDelayMs = 1).collect()
+    val (ok, bad) = results.partition(_.success)
+    assert(ok.length == 1 && bad.length == 1)
+    val err = bad.head.error
     assert(err.contains("IllegalStateException") && err.contains("nope"))
   }
 

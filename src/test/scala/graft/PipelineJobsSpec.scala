@@ -5,6 +5,10 @@ import graft.fetch.Downloader
 import graft.sources.CsvMeta
 import graft.state.StateStore
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 /** End-to-end incremental pipeline tests: T3 delta idempotence, T2 resume,
   * T4 DLQ replay, K1 append fidelity — SURVEY §5's "minimum slice" test
@@ -109,6 +113,9 @@ class PipelineJobsSpec extends SparkSpec {
     assert(state.resumePage("life") == 3)
     val (n2, _, _) = Jobs.scrape(spark, work, "life", pagesDir, 2)
     assert(n2 == 0L)
+    // the re-run had nothing to scan: the session stays completed
+    assert(Jobs.status(spark, work).select("status").collect().map(_.getString(0)).toSeq ==
+      Seq("completed"))
   }
 
   test("failures land in the DLQ and retry-failed recovers them (T4/J4)") {
@@ -158,6 +165,46 @@ class PipelineJobsSpec extends SparkSpec {
       // the default 2000 ms backoff to the same delta without one
       assert(elapsedMs < cleanMs + 2000, s"delta took $elapsedMs ms, $cleanMs ms without the 404")
     } finally server.close()
+  }
+
+  test("each pending URL is fetched once though its result feeds the DLQ, the CSV and completed") {
+    import PipelineJobsSpec.fetches
+    val work = mkWorkDir()
+    val pagesDir = s"$work/pages"
+    writeLifePages(pagesDir, Seq(Seq(("UIN1", "Alpha", 1), ("UIN2", "Beta", 2), ("UIN0", "Zero", 0)),
+      Seq(("UIN3", "Gamma", 3))))
+    fetches.clear()
+    val counting: String => Array[Byte] = url => {
+      fetches.computeIfAbsent(url, _ => new AtomicInteger()).incrementAndGet()
+      if (url.contains("doc2")) throw new Downloader.HttpStatusException(url, 404, None)
+      else Jobs.stubFetch(url)
+    }
+    assert(Jobs.delta(spark, work, "life", pagesDir, 2, counting) == (4L, 2L, 1L))
+    val linked = Seq(1, 2, 3).map(d => s"https://example.invalid/documents/doc$d.pdf")
+    assert(fetches.asScala.view.mapValues(_.get).toMap == linked.map(_ -> 1).toMap)
+    val state = new StateStore(spark, s"$work/state")
+    assert(state.failed.select("url").collect().map(_.getString(0)).toSeq == Seq(linked(1)))
+    assert(state.completed.collect().map(_.getString(0)).sorted.toSeq == Seq(linked(0), linked(2)))
+    val paths = spark.read.option("header", "true").csv(Jobs.csvPath(work, "life")).collect()
+      .map(r => r.getAs[String]("document_url") -> Option(r.getAs[String]("local_file_path"))).toMap
+    assert(paths(linked(0)).exists(_.endsWith("Doc-1")) && paths(linked(2)).exists(_.endsWith("Doc-3")))
+    assert(paths(linked(1)).isEmpty)
+  }
+
+  test("a delta that fetches runs a bounded number of Spark jobs") {
+    val work = mkWorkDir()
+    val pagesDir = s"$work/pages"
+    writeLifePages(pagesDir, Seq(Seq(("UIN1", "Alpha", 1)), Seq(("UIN2", "Beta", 2))))
+    assert(Jobs.delta(spark, work, "life", pagesDir, 2) == (2L, 2L, 0L))
+    writeLifePages(pagesDir, Seq(Seq(("UIN1", "Alpha", 1)), Seq(("UIN2", "Beta", 2), ("UIN3", "Gamma", 3))))
+    val failOn3: String => Array[Byte] = url =>
+      if (url.contains("doc3")) throw new Downloader.HttpStatusException(url, 404, None)
+      else Jobs.stubFetch(url)
+    val (out, jobs) = jobsOf(Jobs.delta(spark, work, "life", pagesDir, 2, failOn3))
+    assert(out == (1L, 0L, 1L))
+    // 12 jobs here, none of them a write; the same delta committing through
+    // Spark write jobs (DLQ, CSV part files, completed) ran 14.
+    assert(jobs <= 12, s"a fetching delta ran $jobs Spark jobs")
   }
 
   test("CSV append: single file, one header, fixed column order, null→\"\" (K1/X14)") {
@@ -247,4 +294,11 @@ class PipelineJobsSpec extends SparkSpec {
     assert(row.getAs[String]("status") == "completed")
     assert(row.getAs[Long]("completed_downloads") == 1L)
   }
+}
+
+object PipelineJobsSpec {
+  /** Fetch calls per URL. The fetch runs inside Spark tasks, in this JVM
+    * under local mode, so a closure reaches the counts through this object.
+    */
+  val fetches = new ConcurrentHashMap[String, AtomicInteger]()
 }

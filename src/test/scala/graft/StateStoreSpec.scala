@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.fs.{ChecksumFileSystem, Path}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import scala.jdk.CollectionConverters._
 
@@ -128,6 +129,39 @@ class StateStoreSpec extends SparkSpec {
     assert(plain.select("url", "retries").as[(String, Int)].collect().toMap ==
       Map("u1" -> 2, "u3" -> 1))
     assert(dataFiles(root, "sessions").size == 1 && dataFiles(root, "failed").size == 1)
+  }
+
+  test("plain spark.read.parquet reads the state files with the tables' types") {
+    val root = Files.createTempDirectory("graft-state").toString
+    val st = new StateStore(spark, root)
+    val t0 = System.currentTimeMillis()
+    st.startSession("life", 10)
+    st.markFailed(Seq(("u1", "timeout")).toDF("url", "error"))
+    st.markCompleted(Seq("a").toDF("url"))
+    st.markCompleted(Seq("b", "c", "b"))
+    def schema(p: String) = spark.read.parquet(s"$root/$p").schema
+    assert(schema("sessions") == StructType.fromDDL("product_type string, status string, " +
+      "last_completed_page int, total_pages int, total_products long"))
+    assert(schema("failed") ==
+      StructType.fromDDL("url string, error string, retries int, last_attempt timestamp"))
+    val batches = dataFiles(root, "completed")
+    assert(batches.size == 2 && batches.forall(f => schema(s"completed/$f") == StructType.fromDDL("url string")))
+    assert(st.completed.as[String].collect().sorted.toSeq == Seq("a", "b", "c"))
+    // the DLQ's timestamp keeps its instant, to the microsecond Spark stores
+    val attempt = spark.read.parquet(s"$root/failed").head().getAs[java.sql.Timestamp]("last_attempt")
+    assert(attempt.getTime >= t0 - 1000 && attempt.getTime <= System.currentTimeMillis() + 1000)
+    assert(st.failed.head().getAs[java.sql.Timestamp]("last_attempt") == attempt)
+  }
+
+  test("a leftover <table>.tmp file is ignored by reads and replaced by the next commit (K5)") {
+    val root = Files.createTempDirectory("graft-state").toString
+    val st = new StateStore(spark, root)
+    st.markFailed(Seq(("u1", "timeout")).toDF("url", "error"))
+    Files.writeString(Paths.get(s"$root/failed.tmp"), "torn")
+    assert(st.failed.select("url").as[String].collect().toSeq == Seq("u1"))
+    st.markFailed(Seq(("u2", "dns")).toDF("url", "error"))
+    assert(st.failed.select("url").as[String].collect().sorted.toSeq == Seq("u1", "u2"))
+    assert(!Files.exists(Paths.get(s"$root/failed.tmp")) && dataFiles(root, "failed").size == 1)
   }
 
   test("a table written as one part file plus _SUCCESS gains no duplicate rows on its next commit") {

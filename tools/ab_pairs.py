@@ -14,9 +14,11 @@ BENCHMARK.json). For each --claim metric it also checks the 9-of-10 rule:
 the change wins at least 9/10 of the pairs and its median beats the base
 median by more than the base's inter-quartile range. The host's CPU steal
 during each run is printed next to it: a run on a stolen host reads slow
-for reasons outside the program. --out writes every run record and the
-summary as JSON, with each checkout's commit (and whether its tree was
-edited) in place of its path.
+for reasons outside the program, so each --claim verdict is printed a
+second time over only the pairs whose two runs' steal differs by at most
+STEAL_GAP points, with the number of such pairs. --out writes every run
+record and the summary as JSON, with each checkout's commit (and whether
+its tree was edited) in place of its path.
 """
 import argparse
 import json
@@ -28,6 +30,7 @@ import subprocess
 import sys
 
 STEAL = re.compile(r"host CPU steal during the run ([0-9.]+)%")
+STEAL_GAP = 2.0  # percentage points
 
 
 def seed_list(spec):
@@ -97,6 +100,19 @@ def summarize(pairs, better, claims):
     return rows, verdicts
 
 
+def steal_matched(pairs):
+    """The pairs whose two runs' host CPU steal differs by at most STEAL_GAP
+    points; a pair missing either figure is left out."""
+    return [(b, c) for b, c in pairs
+            if b.get("steal_pct") is not None and c.get("steal_pct") is not None
+            and abs(b["steal_pct"] - c["steal_pct"]) <= STEAL_GAP]
+
+
+def verdict_line(name, v):
+    return (f"claim {name}: wins {v['wins']} (need {v['need']}), median gap {v['gap']:.4g} "
+            f"vs base IQR {v['base_iqr']:.4g} -> {'MET' if v['met'] else 'NOT met'}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--base", required=True, help="checkout measured as the parent")
@@ -127,7 +143,10 @@ def main():
                   f"correct {rec.get('correct')} {shown or rec.get('error', '')}", flush=True)
         pairs.append((got["base"], got["change"]))
 
-    rows, verdicts = summarize(pairs, directions(sides["change"]), set(a.claim))
+    better = directions(sides["change"])
+    rows, verdicts = summarize(pairs, better, set(a.claim))
+    matched = steal_matched(pairs)
+    _, matched_verdicts = summarize(matched, better, set(a.claim))
     print(f"\n{a.workload}: {n} pairs, medians [q1, q3], base -> change")
     for r in rows:
         b, c = r["base"], r["change"]
@@ -135,14 +154,19 @@ def main():
         print(f"  {r['metric']:13s} {b[1]:.4g} [{b[0]:.4g}, {b[2]:.4g}] -> "
               f"{c[1]:.4g} [{c[0]:.4g}, {c[2]:.4g}]  {move}  wins {r['wins']}/{r['pairs']}")
     for name, v in verdicts.items():
-        print(f"claim {name}: wins {v['wins']} (need {v['need']}), median gap {v['gap']:.4g} "
-              f"vs base IQR {v['base_iqr']:.4g} -> {'MET' if v['met'] else 'NOT met'}")
+        print(verdict_line(name, v))
+    if a.claim:
+        print(f"{len(matched)} of {n} pairs have steal within {STEAL_GAP:g} points of each other")
+    for name, v in matched_verdicts.items():
+        print(f"  over those pairs, {verdict_line(name, v)}")
     if a.out:
         with open(a.out, "w") as fh:
             json.dump({"workload": a.workload, "seconds": a.seconds, "trace": a.trace,
                        "base": revision(sides["base"]), "change": revision(sides["change"]),
                        "pairs": [{"base": b, "change": c} for b, c in pairs],
-                       "summary": rows, "claims": verdicts}, fh, indent=1)
+                       "summary": rows, "claims": verdicts,
+                       "steal_matched": {"max_gap_points": STEAL_GAP, "pairs": len(matched),
+                                         "claims": matched_verdicts}}, fh, indent=1)
 
 
 if __name__ == "__main__":
