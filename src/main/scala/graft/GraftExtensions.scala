@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.expressions.{CosineSimilarity, ParseHtmlTable}
-import graft.functions.{TextFunctions => T}
+import graft.functions.{HtmlFunctions, TextFunctions => T}
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -49,7 +49,7 @@ object GraftFunctions {
     new ExpressionInfo(classOf[ParseHtmlTable].getName, ParseTableName),
     (children: Seq[Expression]) => children match {
       case Seq(h) => ParseHtmlTable(h,
-        org.apache.spark.sql.catalyst.expressions.Literal("https://example.invalid"))
+        org.apache.spark.sql.catalyst.expressions.Literal(HtmlFunctions.DefaultBaseUrl))
       case Seq(h, b) => ParseHtmlTable(h, b)
       case _ => throw new IllegalArgumentException(
         s"$ParseTableName expects 1 or 2 arguments, got ${children.size}")

@@ -63,7 +63,7 @@ object Jobs {
     // see an empty delta (SURVEY §7.4 — checkpoint before side effects).
     val csv = csvPath(workDir, productType)
     CsvMeta.truncateToCommitted(spark, csv)
-    val existing = CsvMeta.loadExistingUrls(spark, csv, productType)
+    val existing = CsvMeta.existingUrlRows(spark, csv, productType)
     val fresh = DeltaOps.delta(parsed, existing, "document_url")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -106,7 +106,7 @@ object Jobs {
 
       // T3: mark URLs completed only once their rows are committed to the
       // CSV. After a crash before that commit the re-run derives the same
-      // rows, re-fetches them (skipExisting answers from the stored file)
+      // rows, re-fetches them (a stored file answers with no download)
       // and appends their file paths; marked first, it would append an
       // empty local_file_path. They passed `filterPending` above, so none
       // is in the set yet.

@@ -24,16 +24,13 @@ import scala.util.control.NonFatal
   * run the fetch again (SURVEY §7.4). Success and failure (F5,
   * cli.py:116-143) split on the driver.
   *
-  * In-flight pool: the tasks go to `numExecutors` partitions, and each
-  * partition runs `ceil(maxConcurrent / numExecutors)` blocking fetch
-  * workers, so `maxConcurrent` requests are in flight (the reference's
-  * semaphore ≤10) however many task slots the cluster has. A partition's
-  * workers pull from one queue ordered by not-before time; a retry
-  * re-enters it at its backoff deadline, so a URL backing off holds no
-  * worker. The rate limiter is per-JVM and shared by every worker in it;
-  * [[download]]'s `numExecutors` parameter splits the cluster-global
-  * `ratePerSec` budget across executors (each JVM's bucket enforces
-  * `ratePerSec / numExecutors`).
+  * In-flight pool: the tasks go to one partition, which runs
+  * `maxConcurrent` blocking fetch workers, so `maxConcurrent` requests are
+  * in flight (the reference's semaphore ≤10) however many task slots the
+  * cluster has. The workers pull from one queue ordered by not-before
+  * time; a retry re-enters it at its backoff deadline, so a URL backing
+  * off holds no worker. The rate limiter is per-JVM and shared by every
+  * worker in it, so the one fetch task enforces `ratePerSec`.
   *
   * `fetch` is pluggable (url → bytes) so tests and the zero-egress harness
   * stub it; [[httpFetch]] is the production java.net.http implementation.
@@ -135,9 +132,9 @@ object Downloader {
     * The bytes go to `<destination>.part` first and are moved onto
     * `destination` atomically, so a task killed mid-write never leaves a
     * truncated file under the final name. Exactly-once mitigation (SURVEY
-    * §7.4): if `skipExisting` and the destination file already exists, the
-    * fetch is skipped and reported as success — re-executed partitions
-    * (task retry, AQE replan) do not re-download.
+    * §7.4): if the destination file already exists, the fetch is skipped
+    * and reported as success — re-executed partitions (task retry, AQE
+    * replan) do not re-download.
     *
     * Retries: a task whose k-th attempt fails with a retryable error
     * (408, 429, 5xx or any non-HTTP exception) is attempted again no
@@ -148,32 +145,17 @@ object Downloader {
     * permanent 404 would otherwise wait out the whole backoff chain before
     * it reaches the DLQ.
     *
-    * `ratePerSec` is the CLUSTER-GLOBAL budget: the per-JVM token bucket
-    * enforces `ratePerSec / numExecutors`, so with E executors each
-    * running one of the E fetch partitions the aggregate request rate stays
-    * ≤ the budget (SURVEY §7.4 — the reference's limiter is per-process
-    * because it IS one process; a distributed fetch must split the
-    * budget). Default `numExecutors = 1` is exact on local mode. The
-    * static split is deliberately simple — a coordination-free upper
-    * bound; executors that finish early leave their share unused rather
-    * than rebalancing (no cross-executor token traffic).
-    *
     * The fetch workers are threads of the partition's task: they start
     * when it does and are interrupted and joined before it returns or
     * fails, so none outlives its task.
     */
   def download(tasks: Dataset[DownloadTask], fetch: String => Array[Byte],
                maxConcurrent: Int = 10, ratePerSec: Double = 10.0,
-               retryAttempts: Int = 3, retryDelayMs: Long = 2000,
-               skipExisting: Boolean = true,
-               numExecutors: Int = 1): Dataset[DownloadResult] = {
-    require(numExecutors >= 1, s"numExecutors must be >= 1, got $numExecutors")
+               retryAttempts: Int = 3, retryDelayMs: Long = 2000): Dataset[DownloadResult] = {
     require(maxConcurrent >= 1, s"maxConcurrent must be >= 1, got $maxConcurrent")
-    val perJvmRate = ratePerSec / numExecutors
-    val workers = (maxConcurrent + numExecutors - 1) / numExecutors
     implicit val enc = Encoders.product[DownloadResult]
     tasks
-      .repartition(numExecutors)
+      .repartition(1)
       .mapPartitions { it =>
         val ctx = TaskContext.get()
         val out = ArrayBuffer.empty[DownloadResult]
@@ -181,7 +163,7 @@ object Downloader {
         val start = System.nanoTime()
         it.foreach { task =>
           val dest = Paths.get(task.destination)
-          if (skipExisting && Files.exists(dest))
+          if (Files.exists(dest))
             out += DownloadResult(task.url, success = true, task.destination, Files.size(dest), null)
           else queue.put(Pending(task, 0, start, queue.size.toLong))
         }
@@ -192,7 +174,7 @@ object Downloader {
 
         def attempt(task: DownloadTask): Either[Throwable, DownloadResult] =
           try {
-            RateLimiter.acquire(perJvmRate)
+            RateLimiter.acquire(ratePerSec)
             val bytes = fetch(task.url)
             val dest = Paths.get(task.destination)
             if (dest.getParent != null) Files.createDirectories(dest.getParent)
@@ -223,7 +205,7 @@ object Downloader {
             case t: Throwable => done.put(Left(t))
           }
 
-        val threads = (0 until math.min(workers, fetches)).map { i =>
+        val threads = (0 until math.min(maxConcurrent, fetches)).map { i =>
           val t = new Thread(() => TaskThreads.withContext(ctx)(work()),
             s"graft-fetch-${ctx.partitionId()}-$i")
           t.setDaemon(true)

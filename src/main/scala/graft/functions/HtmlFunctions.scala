@@ -1,5 +1,6 @@
 package graft.functions
 
+import scala.util.Try
 import scala.util.matching.Regex
 
 /** Minimal, dependency-free HTML table extraction — the Scala analog of the
@@ -9,6 +10,7 @@ import scala.util.matching.Regex
   *  - G1 findDataTable   — parser.py:16-25
   *  - G2 tableRows       — parser.py:27-34
   *  - G3 cells           — parser.py:36-38
+  *  - G4 parseRows       — base.py:93-112 (one `Try` per row)
   *  - X1 getText         — parser.py:40-46 (get_text(separator=" ", strip))
   *  - X2 extractDocumentLink — parser.py:48-76
   *  - X3 filenameFromUrl — parser.py:78-89
@@ -20,6 +22,11 @@ import scala.util.matching.Regex
   * for Liferay-style tables (no nested `<table>` in the reference pages).
   */
 object HtmlFunctions {
+
+  /** The base URL relative document links resolve against when the caller
+    * names none.
+    */
+  val DefaultBaseUrl = "https://example.invalid"
 
   private val TableRe = new Regex("(?is)<table\\b([^>]*)>(.*?)</table>", "attrs", "body")
   private val DivRe   = new Regex("(?is)<div\\b([^>]*)>", "attrs")
@@ -106,6 +113,35 @@ object HtmlFunctions {
   def pageRows(html: String): Seq[HtmlRow] =
     findDataTable(html).map(tableRows).getOrElse(Seq.empty)
 
+  /** One parsed data row: its index in the table, class attribute and
+    * cleaned cell texts, plus the document links pre-extracted from the
+    * last and second-to-last cells (covering every per-type rule).
+    */
+  case class ParsedRow(
+      rowIdx: Int, rowClass: String, cells: Seq[String],
+      docUrlLast: Option[String], docFilenameLast: Option[String],
+      docUrlPrev: Option[String], docFilenamePrev: Option[String])
+
+  /** G1-G4: a page's data rows. A row whose extraction throws is dropped
+    * (error isolation, base.py:104-110); a page with no recognizable table
+    * yields no rows (base.py:97-99). The one per-row body of both parse
+    * surfaces, `ParsePipeline.explodeRows` and the `graft_parse_table`
+    * generator.
+    */
+  def parseRows(html: String, baseUrl: String): Iterator[ParsedRow] =
+    pageRows(html).iterator.zipWithIndex.flatMap { case (row, i) =>
+      Try {
+        val cellsHtml = row.cellsHtml
+        def link(fromEnd: Int) =
+          if (cellsHtml.size >= fromEnd)
+            extractDocumentLink(cellsHtml(cellsHtml.size - fromEnd), baseUrl)
+          else (None, None)
+        val (ul, fl) = link(1)
+        val (up, fp) = link(2)
+        ParsedRow(i, row.rowClass, row.cellsText, ul, fl, up, fp)
+      }.toOption
+    }
+
   /** urljoin: absolutize `href` against `base` (java.net.URI.resolve). */
   def urljoin(base: String, href: String): String =
     try new java.net.URI(base).resolve(href.trim).toString
@@ -124,7 +160,7 @@ object HtmlFunctions {
     * absolutized URL + link text (or URL-derived filename when the text is
     * shorter than 3 chars); fallback: `window.open('...')` in any onclick.
     */
-  def extractDocumentLink(cellHtml: String, baseUrl: String = "https://example.invalid")
+  def extractDocumentLink(cellHtml: String, baseUrl: String = DefaultBaseUrl)
       : (Option[String], Option[String]) = {
     val exts = Seq(".pdf", ".xlsx", ".xls", "/documents/")
     val links = ARe.findAllMatchIn(cellHtml).toSeq

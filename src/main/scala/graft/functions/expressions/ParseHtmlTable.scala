@@ -9,15 +9,13 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import scala.util.Try
-
 /** SQL-facing page→rows explosion (SURVEY §2.11's optional Generator
-  * surface): the exact G1–G4 pipeline of
-  * [[graft.operators.ParsePipeline.explodeRows]] — locate the data table,
-  * split rows/cells, pre-extract the document link from the last and
-  * second-to-last cells, isolate per-row parse errors — as a native
-  * Catalyst [[Generator]], so a SQL user can run the whole parse with
-  * `LATERAL VIEW graft_parse_table(html, base_url) t`.
+  * surface): the G1–G4 per-row body [[graft.functions.HtmlFunctions.parseRows]]
+  * that [[graft.operators.ParsePipeline.explodeRows]] also runs — locate
+  * the data table, split rows/cells, pre-extract the document link from
+  * the last and second-to-last cells, isolate per-row parse errors — as a
+  * native Catalyst [[Generator]], so a SQL user can run the whole parse
+  * with `LATERAL VIEW graft_parse_table(html, base_url) t`.
   *
   * One output row per parsed table row:
   * (row_idx, row_class, cells, doc_url_last, doc_filename_last,
@@ -62,26 +60,13 @@ case class ParseHtmlTable(html: Expression, baseUrl: Expression)
     if (h == null) Iterator.empty
     else {
       val base = Option(baseUrl.eval(input)).map(_.toString)
-        .getOrElse("https://example.invalid")
-      HtmlFunctions.pageRows(h.toString).iterator.zipWithIndex.flatMap {
-        case (row, i) =>
-          Try {
-            val cellsHtml = row.cellsHtml
-            val (ul, fl) =
-              if (cellsHtml.nonEmpty)
-                HtmlFunctions.extractDocumentLink(cellsHtml.last, base)
-              else (None, None)
-            val (up, fp) =
-              if (cellsHtml.size >= 2)
-                HtmlFunctions.extractDocumentLink(cellsHtml(cellsHtml.size - 2), base)
-              else (None, None)
-            InternalRow(
-              i,
-              utf8(row.rowClass),
-              new GenericArrayData(row.cellsText.map(utf8)),
-              utf8OrNull(ul), utf8OrNull(fl), utf8OrNull(up), utf8OrNull(fp))
-          }.toOption
-      }
+        .getOrElse(HtmlFunctions.DefaultBaseUrl)
+      HtmlFunctions.parseRows(h.toString, base).map(r => InternalRow(
+        r.rowIdx,
+        utf8(r.rowClass),
+        new GenericArrayData(r.cells.map(utf8)),
+        utf8OrNull(r.docUrlLast), utf8OrNull(r.docFilenameLast),
+        utf8OrNull(r.docUrlPrev), utf8OrNull(r.docFilenamePrev)))
     }
   }
 

@@ -12,13 +12,18 @@ import org.apache.spark.sql.functions._
   *  - J4 DLQ removal:         storage/state.py:162-167
   *  - U2/U3 set ops:          delta_download.py:191, state.py:137-140
   *
-  * Scale notes: all four joins are single-key equi-joins where one side is
-  * state (small relative to the corpus). Catalyst auto-broadcasts under
-  * the threshold; at 100 TB state that outgrows broadcast becomes a
-  * shuffled hash join on the same plan — no code change. The critical
-  * ordering invariant from the reference (anti-join BEFORE the expensive
-  * fetch) is preserved by construction: these produce the task set that
-  * feeds [[graft.fetch.Downloader]].
+  * Scale notes: J1, J2 and J4 are one relational operator, the
+  * single-key `left_anti` of [[delta]], and J3 is a single-key left join;
+  * in each one side is state (small relative to the corpus). Catalyst
+  * auto-broadcasts under the threshold; at 100 TB state that outgrows
+  * broadcast becomes a shuffled hash join on the same plan — no code
+  * change. The anti-join's build side is not de-duplicated: a duplicate
+  * key cannot change which rows of `current` find a match, and a
+  * `distinct()` there costs an aggregate (a shuffle stage, one more Spark
+  * job) before the broadcast. The critical ordering invariant from the
+  * reference (anti-join BEFORE the expensive fetch) is preserved by
+  * construction: these produce the task set that feeds
+  * [[graft.fetch.Downloader]].
   *
   * T5 changed-data semantics (SURVEY §2.10, delta_download.py:191): the
   * delta is INSERT-ONLY on the key — a changed document at an unchanged
@@ -29,13 +34,13 @@ import org.apache.spark.sql.functions._
   */
 object DeltaOps {
 
-  /** J1: rows of `current` whose key is absent from `existing`. */
+  /** J1: rows of `current` whose key is absent from `existing`. The same
+    * anti-join is the J2 completed-set guard (tasks against the completed
+    * keys) and the J4 DLQ removal (failures against the succeeded keys).
+    * A null key in `current` matches nothing, so its row is kept.
+    */
   def delta(current: DataFrame, existing: DataFrame, key: String): DataFrame =
-    current.join(existing.select(key).distinct(), Seq(key), "left_anti")
-
-  /** J2: drop tasks already present in the completed-key state. */
-  def filterCompleted(tasks: DataFrame, completed: DataFrame, key: String): DataFrame =
-    tasks.join(completed.select(key).distinct(), Seq(key), "left_anti")
+    current.join(existing.select(key), Seq(key), "left_anti")
 
   /** J3: enrich products with one download result per key.
     * The reference builds `{r.url: r}` over results in order — last write
@@ -57,12 +62,9 @@ object DeltaOps {
     products.join(picked, Seq(key), "left")
   }
 
-  /** J4: remove keys that have since succeeded from the dead-letter set. */
-  def clearSucceeded(failed: DataFrame, succeeded: DataFrame, key: String): DataFrame =
-    failed.join(succeeded.select(key).distinct(), Seq(key), "left_anti")
-
   /** U3: idempotent insert into a distinct key set. */
   def addCompleted(completed: DataFrame, newKeys: DataFrame, key: String): DataFrame =
+    // a set union: the result is the key set, so it is de-duplicated
     completed.select(key).union(newKeys.select(key)).distinct()
 
   /** T5 upgrade — CHANGED-CONTENT delta. [[delta]] is insert-only on the
@@ -87,10 +89,10 @@ object DeltaOps {
     */
   def deltaByContent(current: DataFrame, existing: DataFrame, key: String,
                      hashCol: String): DataFrame = {
-    val seenPairs = existing.select(col(key), col(hashCol)).distinct()
+    // feeds a left join, where a duplicate key would duplicate the row
     val knownKeys = existing.select(col(key)).distinct()
       .withColumn("_known", lit(true))
-    current.join(seenPairs, Seq(key, hashCol), "left_anti")
+    current.join(existing.select(col(key), col(hashCol)), Seq(key, hashCol), "left_anti")
       .join(knownKeys, Seq(key), "left")
       .withColumn("change_type",
         when(col("_known"), lit("changed")).otherwise(lit("new")))
@@ -139,8 +141,7 @@ object DeltaOps {
       udf((s: String) => s != null && bfB.value.mightContainString(s))
     val flagged = current.withColumn("_maybe", mightContain(col(key).cast("string")))
     val definitelyNew = flagged.where(!col("_maybe")).drop("_maybe")
-    val verified = flagged.where(col("_maybe")).drop("_maybe")
-      .join(existing.select(key).distinct(), Seq(key), "left_anti")
+    val verified = delta(flagged.where(col("_maybe")).drop("_maybe"), existing, key)
     definitelyNew.unionByName(verified)
   }
 }

@@ -4,8 +4,6 @@ import graft.functions.HtmlFunctions
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import scala.util.Try
-
 /** Page-HTML → typed product rows: the reference's core ingest path.
   *
   * Reference (/root/reference/src/irdai_scraper):
@@ -39,27 +37,25 @@ object ParsePipeline {
       docUrlLast: Option[String], docFilenameLast: Option[String],
       docUrlPrev: Option[String], docFilenamePrev: Option[String])
 
-  /** G1-G4: pages → raw rows. A throwing row is dropped (error isolation,
-    * base.py:104-110); a page with no recognizable table yields no rows
-    * (base.py:97-99).
+  /** G1-G4: pages → raw rows, one [[HtmlFunctions.parseRows]] per page. A
+    * throwing row is dropped (error isolation, base.py:104-110); a page
+    * with no recognizable table yields no rows (base.py:97-99).
+    *
+    * NOTE: this stays a typed `flatMap`, not a `Generate` over the
+    * `graft_parse_table` generator. The generator gives identical rows but
+    * measured slower: on the `ingest_monthly` benchmark catalog (seed 7)
+    * at local[4] on a 4-core host, its warm parse was 13–18% slower in 3 of
+    * 4 alternating JVM pairs, and its cold first pass no faster.
+    * `Generate` over a `CodegenFallback` generator runs outside
+    * whole-stage codegen, and each page's HTML is serialized into an
+    * `UnsafeRow` and decoded again.
     */
-  def explodeRows(pages: Dataset[PageHtml], baseUrl: String = "https://example.invalid")
-      : Dataset[RawRow] = {
+  def explodeRows(pages: Dataset[PageHtml]): Dataset[RawRow] = {
     implicit val enc = Encoders.product[RawRow]
     pages.flatMap { p =>
-      HtmlFunctions.pageRows(p.html).zipWithIndex.flatMap { case (row, i) =>
-        Try {
-          val cellsHtml = row.cellsHtml
-          val (ul, fl) =
-            if (cellsHtml.nonEmpty) HtmlFunctions.extractDocumentLink(cellsHtml.last, baseUrl)
-            else (None, None)
-          val (up, fp) =
-            if (cellsHtml.size >= 2)
-              HtmlFunctions.extractDocumentLink(cellsHtml(cellsHtml.size - 2), baseUrl)
-            else (None, None)
-          RawRow(p.productType, p.page, i, row.rowClass, row.cellsText, ul, fl, up, fp)
-        }.toOption
-      }
+      HtmlFunctions.parseRows(p.html, HtmlFunctions.DefaultBaseUrl).map(r =>
+        RawRow(p.productType, p.page, r.rowIdx, r.rowClass, r.cells,
+          r.docUrlLast, r.docFilenameLast, r.docUrlPrev, r.docFilenamePrev))
     }
   }
 
@@ -169,9 +165,8 @@ object ParsePipeline {
   }
 
   /** Convenience: full page→product pipeline for one product type. */
-  def parse(spark: SparkSession, pages: Dataset[PageHtml], productType: String,
-            baseUrl: String = "https://example.invalid"): DataFrame = {
-    val raw = explodeRows(pages, baseUrl).toDF()
+  def parse(spark: SparkSession, pages: Dataset[PageHtml], productType: String): DataFrame = {
+    val raw = explodeRows(pages).toDF()
     productType match {
       case "life"      => life(raw)
       case "life_list" => lifeList(raw)

@@ -128,7 +128,7 @@ object SimilarityOps {
   }
 
   /** Public per-row argmin assignment against precomputed centroids
-    * (e.g. from [[kmeansCentroids]]) — zero joins, zero shuffles.
+    * (e.g. from [[trainCentroids]]) — zero joins, zero shuffles.
     */
   def assignTo(vec: Column, centroids: Seq[(Long, Seq[Double])]): Column =
     nearestCentroid(vec.cast("array<double>"), centroids)
@@ -164,39 +164,6 @@ object SimilarityOps {
     assigned.join(broadcast(means), "cid")
       .select(col("vec_id"), col("cid"), col("dist_e4"), col("mean_e4"),
         (col("dist_e4") * ratioDen > col("mean_e4") * ratioNum).as("is_outlier"))
-  }
-
-  /** Lloyd's k-means over the corpus, returning k centroids.
-    *
-    * Deterministic: init = the k lowest-id vectors; each iteration assigns
-    * per-row with the literal-centroid argmin (zero shuffles), then takes
-    * the element-wise mean per cluster via a posexplode → partial-agg
-    * groupBy — the shuffle carries k × dim partial sums per map task, not
-    * vectors. Only k × dim × iters doubles ever reach the driver, so the
-    * loop scales to any corpus size.
-    */
-  def kmeansCentroids(corpus: DataFrame, k: Int, iters: Int = 5,
-                      idCol: String = "vec_id", vecCol: String = "embedding")
-      : Seq[(Long, Seq[Double])] = {
-    var cents = collectCentroids(corpus, k, idCol, vecCol)
-    val vecs = corpus.select(col(vecCol).cast("array<double>").as("v"))
-    for (_ <- 1 to iters) {
-      val assigned = vecs.withColumn("cid", nearestCentroid(col("v"), cents))
-      val means = assigned
-        .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("cid", "pos").agg(avg("x").as("m"))
-        .groupBy("cid").agg(map_from_arrays(
-          collect_list(col("pos")), collect_list(col("m"))).as("byPos"))
-        .collect()
-        .map { r =>
-          val m = r.getMap[Int, Double](1)
-          (r.getLong(0), (0 until m.size).map(m(_)))
-        }
-        .toMap
-      // clusters that lost every member keep their previous centroid
-      cents = cents.map { case (cid, prev) => (cid, means.getOrElse(cid, prev)) }
-    }
-    cents
   }
 
   /** Materialize the IVF index: the assigned corpus written

@@ -54,7 +54,7 @@ object DeltaQueries {
 
     // J2: completed-set guard.
     "q37_filter_completed" -> ((s, d) =>
-      DeltaOps.filterCompleted(
+      DeltaOps.delta(
         Tables.part(s, d).select("p_partkey", "p_name"),
         Tables.lineitem(s, d).where(col("l_quantity") > 49)
           .select(col("l_partkey").as("p_partkey")),
@@ -64,7 +64,7 @@ object DeltaQueries {
     // J4: DLQ anti-membership delete (keyed by event, so the result is
     // non-empty and the anti-join is actually exercised).
     "q38_clear_succeeded" -> ((s, d) =>
-      DeltaOps.clearSucceeded(
+      DeltaOps.delta(
         Tables.events(s, d).where(col("value") < 0.1).select("event_id", "user_id"),
         Tables.events(s, d)
           .where(col("value") < 0.1 && pmod(col("user_id"), lit(3)) === 0)

@@ -54,29 +54,37 @@ object CsvMeta {
       "local_file_path", "r2_url", "type_of_product", "archive_status",
       "scraped_at"))
 
-  /** S4: project the existing-URL set out of a metadata CSV
-    * (delta_download.py:41-51); empty/missing file → empty set. The
-    * missing-file set is a local relation, so Catalyst knows it is empty
-    * and drops an anti-join against it: a first ingest plans no join and
-    * no shuffle.
+  /** S4: the existing-URL set of a metadata CSV (delta_download.py:41-51);
+    * empty/missing file → empty set.
+    */
+  def loadExistingUrls(spark: SparkSession, csvPath: String, productType: String): DataFrame =
+    // S4's set; the ingest's anti-join reads `existingUrlRows` instead
+    existingUrlRows(spark, csvPath, productType).distinct()
+
+  /** [[loadExistingUrls]] for a CSV of unknown product type: infers the
+    * header, which costs a Spark job per call.
+    */
+  def loadExistingUrls(spark: SparkSession, csvPath: String): DataFrame =
+    urlRows(spark, csvPath, identity).distinct()
+
+  /** The document URL of each linked row of a metadata CSV: the build side
+    * of the ingest's delta anti-join ([[graft.operators.DeltaOps.delta]]),
+    * so the URLs are not de-duplicated — a duplicate changes no anti-join
+    * result. The missing-file set is a local relation, so Catalyst knows
+    * it is empty and drops an anti-join against it: a first ingest plans
+    * no join and no shuffle.
     *
     * The CSV is read with the sink's own all-string schema for
     * `productType`, so no Spark job runs to infer the header;
     * `enforceSchema=false` still checks the file's header against that
     * schema and fails on a mismatch.
     */
-  def loadExistingUrls(spark: SparkSession, csvPath: String, productType: String): DataFrame =
-    existingUrls(spark, csvPath,
+  def existingUrlRows(spark: SparkSession, csvPath: String, productType: String): DataFrame =
+    urlRows(spark, csvPath,
       _.schema(stringSchema(productType)).option("enforceSchema", "false"))
 
-  /** [[loadExistingUrls]] for a CSV of unknown product type: infers the
-    * header, which costs a Spark job per call.
-    */
-  def loadExistingUrls(spark: SparkSession, csvPath: String): DataFrame =
-    existingUrls(spark, csvPath, identity)
-
-  private def existingUrls(spark: SparkSession, csvPath: String,
-                           reader: DataFrameReader => DataFrameReader): DataFrame = {
+  private def urlRows(spark: SparkSession, csvPath: String,
+                      reader: DataFrameReader => DataFrameReader): DataFrame = {
     val fs = new Path(csvPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(csvPath)))
       return spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](),
@@ -84,7 +92,6 @@ object CsvMeta {
     reader(spark.read.option("header", "true")).csv(csvPath)
       .select("document_url")
       .where(col("document_url").isNotNull && col("document_url") =!= "")
-      .distinct()
   }
 
   /** Every column of `productType` as a string, in sink order. */

@@ -576,21 +576,6 @@ object SnapshotTable {
 
   private def cdcDir(root: Path) = new Path(root, "cdc")
 
-  /** Per-file (rows, nullCount, min, max) of `statsCol`, read from the
-    * parquet FOOTER — row-group statistics the writer already
-    * computed, so the stats read-back that used to re-SCAN the staged
-    * batch (a full second pass of every commit's data) becomes
-    * driver-side metadata, O(files). Returns None when any row group
-    * lacks statistics for the column (stats disabled, unsupported
-    * physical type) — the caller falls back to the scan path rather
-    * than guessing.
-    */
-  private def footerStats(conf: org.apache.hadoop.conf.Configuration,
-                          file: Path, statsCol: String): Option[(Long, Long, Long, Long)] = {
-    val (rows, envs) = footerEnvelopes(conf, file, Set(statsCol))
-    envs.get(statsCol).map { case (nulls, lo, hi) => (rows, nulls, lo, hi) }
-  }
-
   /** One footer open, many columns: per-column (nullCount, min, max)
     * over the file's row groups, restricted to columns whose EVERY row
     * group carries integral statistics with null counts (a column

@@ -16,6 +16,8 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.DeltaOps
+
 /** Incremental-pipeline state (SURVEY §2.10 T2-T4, §2.6 A3/A4), persisted
   * as three small parquet tables under one root directory:
   *
@@ -188,9 +190,9 @@ class StateStore(spark: SparkSession, root: String) {
     * every persisted frame that scans the table through [[filterPending]].
     */
   def markCompleted(urls: DataFrame): Unit =
-    // the batch is small: one task dedupes it with no shuffle
-    commit(urls.select(col(urls.columns.head).as("url")).coalesce(1).distinct()
-      .join(completed, Seq("url"), "left_anti"), "completed", replace = false)
+    // the batch dedupe keeps the table a set; one task, no shuffle: it is small
+    commit(DeltaOps.delta(urls.select(col(urls.columns.head).as("url")).coalesce(1).distinct(),
+      completed, "url"), "completed", replace = false)
 
   /** [[markCompleted]] for a driver-side batch of URLs that passed
     * [[filterPending]] earlier in the same run, so none is in the set yet:
@@ -201,7 +203,7 @@ class StateStore(spark: SparkSession, root: String) {
 
   /** J2 guard: tasks not yet completed (cli.py:101-103). */
   def filterPending(tasks: DataFrame, urlCol: String): DataFrame =
-    tasks.join(completed.withColumnRenamed("url", urlCol), Seq(urlCol), "left_anti")
+    DeltaOps.delta(tasks, completed.select(col("url").as(urlCol)), urlCol)
 
   // ---- T4: dead-letter queue + replay ----
 
@@ -224,9 +226,8 @@ class StateStore(spark: SparkSession, root: String) {
 
   /** J4: remove urls that have since succeeded (state.py:162-167). */
   def clearSucceeded(succeededUrls: DataFrame): Unit =
-    commit(failed.join(
-      succeededUrls.select(col(succeededUrls.columns.head).as("url")),
-      Seq("url"), "left_anti"), "failed")
+    commit(DeltaOps.delta(failed,
+      succeededUrls.select(col(succeededUrls.columns.head).as("url")), "url"), "failed")
 
   // ---- A3: state summary ----
 

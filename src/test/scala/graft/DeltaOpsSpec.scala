@@ -22,9 +22,21 @@ class DeltaOpsSpec extends SparkSpec {
     assert(DeltaOps.delta(current, current.select("url"), "url").count() == 0)
   }
 
-  test("filterCompleted drops completed keys only") {
-    val out = DeltaOps.filterCompleted(current, existing, "url")
+  test("delta as the J2 completed-set guard drops completed keys only") {
+    val out = DeltaOps.delta(current, existing, "url")
     assert(out.count() == 2)
+  }
+
+  test("a build side with duplicate and null keys gives the rows of its distinct() form") {
+    val cur = Seq((Option("u1"), 1), (Option("u2"), 2), (None, 3), (Option("u3"), 4), (Option("u3"), 5))
+      .toDF("url", "payload")
+    val build = Seq(Option("u2"), Option("u2"), None, None, Option("u3")).toDF("url")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (Option(r.getString(0)), r.getInt(1))).sortBy(_._2).toSeq
+    val got = rows(DeltaOps.delta(cur, build, "url"))
+    assert(got == rows(cur.join(build.distinct(), Seq("url"), "left_anti")))
+    // the null-key row of `current` matches nothing and is kept
+    assert(got == Seq((Some("u1"), 1), (None, 3)))
   }
 
   test("enrich keeps the max-ordered result per key, deterministically") {
@@ -44,9 +56,9 @@ class DeltaOpsSpec extends SparkSpec {
     assert(out.head.getAs[String]("tag") == "zz") // max over (seq, tag)
   }
 
-  test("clearSucceeded removes exactly the succeeded keys (J4)") {
+  test("delta as the J4 DLQ removal removes exactly the succeeded keys") {
     val failed = Seq(("u1", "e1"), ("u2", "e2")).toDF("url", "error")
-    val out = DeltaOps.clearSucceeded(failed, Seq("u2").toDF("url"), "url")
+    val out = DeltaOps.delta(failed, Seq("u2").toDF("url"), "url")
     assert(out.select("url").as[String].collect().toSeq == Seq("u1"))
   }
 

@@ -62,23 +62,6 @@ class DownloaderSpec extends SparkSpec {
     assert(DownloaderSpec.attempts.get() == 0) // fetch never invoked
   }
 
-  test("numExecutors splits the cluster-global budget: aggregate rate ≤ ratePerSec") {
-    // Two simulated executors sharing a 40/s global budget: each JVM's
-    // bucket must enforce 20/s. This local-mode JVM stands in for one
-    // executor — 10 fetches through its bucket need ≥ 9/20 s ≈ 450 ms of
-    // spacing, so TWO such executors in parallel would aggregate to at
-    // most 40/s. A failure here (elapsed < 400 ms) would mean the JVM ran
-    // at the unsplit global rate and the fleet would run at 2× budget.
-    val dir = tmpDir
-    val tasks = (1 to 10).map(i => DownloadTask(s"u$i", s"$dir/e$i.bin")).toDS()
-    val t0 = System.nanoTime()
-    Downloader.download(tasks, _ => "x".getBytes("UTF-8"),
-      maxConcurrent = 10, ratePerSec = 40.0, numExecutors = 2).collect()
-    val elapsedMs = (System.nanoTime() - t0) / 1e6
-    assert(elapsedMs >= 400,
-      s"elapsed ${elapsedMs}ms — per-JVM rate was not ratePerSec/numExecutors")
-  }
-
   test("rate limiter spaces acquisitions at roughly the configured rate") {
     val dir = tmpDir
     val tasks = (1 to 5).map(i => DownloadTask(s"u$i", s"$dir/f$i.bin")).toDS()
@@ -137,8 +120,8 @@ class DownloaderSpec extends SparkSpec {
   }
 
   test("a stale truncated <dest>.part is refetched; the final file is whole, no .part left") {
-    // a task killed mid-write left a partial .part; skipExisting trusts
-    // only the final name, so the URL is fetched again
+    // a task killed mid-write left a partial .part; the existing-file skip
+    // trusts only the final name, so the URL is fetched again
     val dir = tmpDir
     val dest = s"$dir/doc.pdf"
     Files.write(Paths.get(s"$dest.part"), "trunc".getBytes("UTF-8"))

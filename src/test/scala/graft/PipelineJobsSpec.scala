@@ -202,9 +202,10 @@ class PipelineJobsSpec extends SparkSpec {
       else Jobs.stubFetch(url)
     val (out, jobs) = jobsOf(Jobs.delta(spark, work, "life", pagesDir, 2, failOn3))
     assert(out == (1L, 0L, 1L))
-    // 12 jobs here, none of them a write; the same delta committing through
-    // Spark write jobs (DLQ, CSV part files, completed) ran 14.
-    assert(jobs <= 12, s"a fetching delta ran $jobs Spark jobs")
+    // 10 jobs here, none of them a write; 11 with a distinct() on the
+    // existing-URL side of the delta anti-join, and 14 when the delta also
+    // committed through Spark write jobs (DLQ, CSV part files, completed).
+    assert(jobs <= 10, s"a fetching delta ran $jobs Spark jobs")
   }
 
   test("CSV append: single file, one header, fixed column order, null→\"\" (K1/X14)") {
@@ -263,9 +264,10 @@ class PipelineJobsSpec extends SparkSpec {
     writeLifePages(pagesDir, Seq(Seq(("UIN1", "Alpha", 1)), Seq(("UIN2", "Beta", 2), ("UIN3", "Gamma", 0))))
     val (out, jobs) = jobsOf(run())
     assert(out == (1L, 0L, 0L))
-    // 6 jobs here; the two-branch delta it replaced (link-less rows unioned
-    // back in a second scan and parse of every page) ran 8.
-    assert(jobs <= 6, s"metadata-only delta ran $jobs Spark jobs")
+    // 5 jobs here; 6 with a distinct() on the existing-URL side of the delta
+    // anti-join, and 8 for the two-branch delta (link-less rows unioned back
+    // in a second scan and parse of every page).
+    assert(jobs <= 5, s"metadata-only delta ran $jobs Spark jobs")
   }
 
   test("an unknown product type is rejected before any state is written") {

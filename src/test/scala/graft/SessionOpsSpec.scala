@@ -43,7 +43,7 @@ class SessionOpsSpec extends SparkSpec {
     // ids 0..19 near 0.0; ids 20..39 near 10.0
     val vecs = ((0 until 20).map(i => (i.toLong, around(0.0))) ++
       (20 until 40).map(i => (i.toLong, around(10.0)))).toDF("vec_id", "embedding")
-    val cents = SimilarityOps.kmeansCentroids(vecs, k = 2, iters = 5)
+    val cents = SimilarityOps.trainCentroids(vecs, k = 2, iters = 5)
     val means = cents.map(_._2.sum / 4).sorted
     assert(math.abs(means(0) - 0.0) < 0.1, s"got $means")
     assert(math.abs(means(1) - 10.0) < 0.1, s"got $means")
