@@ -1,10 +1,6 @@
 package graft
 
-import graft.functions.{Rounding => R, TextFunctions => T}
-import graft.operators._
-import graft.operators.ParsePipeline.PageHtml
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2 plus the LLM-data-pipeline operators, each with a

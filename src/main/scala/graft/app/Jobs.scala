@@ -6,8 +6,11 @@ import graft.functions.{TextFunctions => T}
 import graft.operators.{DeltaOps, ParsePipeline}
 import graft.sources.{CsvMeta, PageSource}
 import graft.state.StateStore
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** The reference's four CLI entry points (SURVEY §3) as Spark jobs.
   *
@@ -42,6 +45,12 @@ object Jobs {
 
   /** §3.1/§3.2 shared core: pages → parse → delta → tasks → fetch →
     * enrich → append. Returns (newRows, successes, failures) counts.
+    *
+    * The delta is collected once and the batch is finished from its rows
+    * on the driver: the fetch tasks and the CSV lines are computed over
+    * local relations made from them, and each row takes its URL's
+    * download result from a map. The driver holds one batch: at most one
+    * run's new rows.
     */
   def runPipeline(spark: SparkSession, state: StateStore, workDir: String,
                   productType: String, pages: Dataset[ParsePipeline.PageHtml],
@@ -58,66 +67,65 @@ object Jobs {
     // page to a single pass.
     // The CSV is first cut back to its committed length: the rows of a tail
     // an earlier run appended but never committed are derived again here.
-    // `fresh` MUST be pinned before the CSV append below mutates its input:
-    // a lazy re-evaluation after the append would re-read the grown CSV and
-    // see an empty delta (SURVEY §7.4 — checkpoint before side effects).
     val csv = csvPath(workDir, productType)
     CsvMeta.truncateToCommitted(spark, csv)
-    val existing = CsvMeta.existingUrlRows(spark, csv, productType)
-    val fresh = DeltaOps.delta(parsed, existing, "document_url")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val freshCount = fresh.count()
+    // collected: the batch cannot re-read the CSV its append grows (SURVEY §7.4)
+    val fresh = DeltaOps.delta(parsed, CsvMeta.existingUrlRows(spark, csv, productType),
+      "document_url")
+    val rows = fresh.collect().toSeq
+    def local(batch: Seq[Row], schema: StructType = fresh.schema) =
+      spark.createDataFrame(batch.asJava, schema)
 
-      if (metadataOnly) { // F6: skip the download stage entirely
-        CsvMeta.append(fresh, productType, csv)
-        return (freshCount, 0L, 0L)
-      }
+    if (metadataOnly) { // F6: skip the download stage entirely
+      CsvMeta.append(local(rows), productType, csv)
+      return (rows.size.toLong, 0L, 0L)
+    }
 
-      // F3 + X7/X9: downloadable rows → tasks with computed destinations.
-      val tasks = fresh.where(col("document_url").isNotNull)
-        .select(col("document_url").as("url"),
-          concat(lit(s"$workDir/downloads/$productType/"),
-            T.sanitizeFilename(coalesce(col("document_filename"),
-              T.filenameFromUrl(col("document_url")),
-              T.urlHash(col("document_url")).cast("string")))).as("destination"))
+    // F3 + X7/X9: one task per linked URL, with a computed destination.
+    val urlAt = fresh.schema.fieldIndex("document_url")
+    val linked = rows.filterNot(_.isNullAt(urlAt)).distinctBy(_.getString(urlAt))
+    val tasks = local(linked).select(col("document_url").as("url"),
+      concat(lit(s"$workDir/downloads/$productType/"),
+        T.sanitizeFilename(coalesce(col("document_filename"),
+          T.filenameFromUrl(col("document_url")),
+          T.urlHash(col("document_url")).cast("string")))).as("destination"))
 
-      // J2: drop tasks already completed in a prior run (T3 exactly-once).
-      val pending = state.filterPending(tasks, "url")
-        .as(Encoders.product[DownloadTask])
+    // J2: drop tasks already completed in a prior run (T3 exactly-once).
+    val pending = state.filterPending(tasks, "url")
+      .as(Encoders.product[DownloadTask])
 
-      // S6-S8 fetch. Its results are collected, one small row per fetched
-      // URL: the DLQ, the CSV and `completed` read them on the driver, and
-      // a collected result can never be fetched again (SURVEY §7.4).
-      val results = Downloader.download(pending, fetch).collect().toSeq
-      val (ok, bad) = results.partition(_.success)
+    // S6-S8 fetch. Its results are collected, one small row per fetched
+    // URL: the DLQ, the CSV and `completed` read them on the driver, and
+    // a collected result can never be fetched again (SURVEY §7.4).
+    val results = Downloader.download(pending, fetch).collect().toSeq
+    val (ok, bad) = results.partition(_.success)
 
-      // T4: failures go to the DLQ first; a re-run retries them either way.
-      if (bad.nonEmpty) state.markFailed(failures(spark, bad))
+    // T4: failures go to the DLQ first; a re-run retries them either way.
+    if (bad.nonEmpty) state.mergeFailed(Nil, bad.map(r => r.url -> r.error))
 
-      // J3: enrich products with their download outcome, then K1 append.
-      val enriched = DeltaOps.enrich(
-        fresh,
-        spark.createDataFrame(results).select(col("url").as("document_url"),
-          col("file_path").as("local_file_path"), col("file_size"), col("success")),
-        "document_url", "file_size")
-        .drop("file_size", "success")
-      CsvMeta.append(enriched, productType, csv)
+    // J3: each row gets its URL's download outcome, then K1 append.
+    val byUrl = results.groupMapReduce(_.url)(identity)(resultOrder.max)
+    val enriched = rows.map(r => Row.fromSeq(r.toSeq :+
+      Option(r.getString(urlAt)).flatMap(byUrl.get).map(_.file_path).orNull))
+    CsvMeta.append(local(enriched, fresh.schema.add("local_file_path", StringType)),
+      productType, csv)
 
-      // T3: mark URLs completed only once their rows are committed to the
-      // CSV. After a crash before that commit the re-run derives the same
-      // rows, re-fetches them (a stored file answers with no download)
-      // and appends their file paths; marked first, it would append an
-      // empty local_file_path. They passed `filterPending` above, so none
-      // is in the set yet.
-      if (ok.nonEmpty) state.markCompleted(ok.map(_.url))
-      (freshCount, ok.size.toLong, bad.size.toLong)
-    } finally fresh.unpersist()
+    // T3: mark URLs completed only once their rows are committed to the
+    // CSV. After a crash before that commit the re-run derives the same
+    // rows, re-fetches them (a stored file answers with no download)
+    // and appends their file paths; marked first, it would append an
+    // empty local_file_path. They passed `filterPending` above, so none
+    // is in the set yet.
+    if (ok.nonEmpty) state.markCompleted(ok.map(_.url))
+    (rows.size.toLong, ok.size.toLong, bad.size.toLong)
   }
 
-  /** The DLQ rows (url, error) of failed fetch results. */
-  private def failures(spark: SparkSession, bad: Seq[Downloader.DownloadResult]): DataFrame =
-    spark.createDataFrame(bad.map(r => (r.url, r.error))).toDF("url", "error")
+  /** The J3 pick among the results of one URL, by the contract enrich's
+    * total order: max by file size, then file path (null lowest), then
+    * success.
+    */
+  private val resultOrder: Ordering[Downloader.DownloadResult] =
+    Ordering.by(r => (r.file_size, Option(r.file_path), r.success))
 
   /** §3.1 scrape: resume from state, scan [resume..totalPages]. A scrape
     * with no page left to scan leaves its session completed.
@@ -165,12 +173,9 @@ object Jobs {
       .as(Encoders.product[DownloadTask])
     val results = Downloader.download(tasks, fetch).collect().toSeq
     val (ok, bad) = results.partition(_.success)
-    if (ok.nonEmpty) {
-      val urls = spark.createDataFrame(ok.map(r => Tuple1(r.url))).toDF("url")
-      state.markCompleted(urls)
-      state.clearSucceeded(urls)
-    }
-    if (bad.nonEmpty) state.markFailed(failures(spark, bad))
+    if (ok.nonEmpty)
+      state.markCompleted(spark.createDataFrame(ok.map(r => Tuple1(r.url))).toDF("url"))
+    if (results.nonEmpty) state.mergeFailed(ok.map(_.url), bad.map(r => r.url -> r.error))
     (ok.size.toLong, bad.size.toLong)
   }
 

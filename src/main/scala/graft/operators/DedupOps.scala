@@ -433,7 +433,7 @@ object DedupOps {
     // KernelSpread: single-row-group scans plan ONE task (guide §2.5) —
     // spread the narrow (id, text) input so the kernel uses every core;
     // no-op when the scan already has >= cores partitions.
-    KernelSpread.spreadDf(
+    KernelSpread.spread(
       docs.select(col(idCol).cast("long"), col(textCol).cast("string")))
       .as[(Long, String)]
       .mapPartitions { it =>
@@ -972,7 +972,7 @@ object DedupOps {
     // KernelSpread: single-row-group scans plan ONE task (guide §2.5) —
     // spread the narrow (id, text) input so the kernel uses every core;
     // no-op when the scan already has >= cores partitions.
-    KernelSpread.spreadDf(
+    KernelSpread.spread(
       docs.select(col(idCol).cast("long"), col(textCol).cast("string")))
       .as[(Long, String)]
       .mapPartitions { it =>

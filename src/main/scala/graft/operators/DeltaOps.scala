@@ -49,6 +49,8 @@ object DeltaOps {
     * broken by every remaining payload column (a total order, so the
     * output is identical under any partitioning; max_by benefits from
     * partial aggregation — no window, no arbitrary dropDuplicates row).
+    * The ingest job (`graft.app.Jobs.runPipeline`) holds its batch on the
+    * driver and picks by the same order there.
     */
   def enrich(products: DataFrame, results: DataFrame, key: String,
              orderCol: String): DataFrame = {

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 
 /** Scan-parallelism guard for expensive row kernels (optimization guide
   * §2.5 "input skew — one huge unsplittable file").
@@ -51,16 +51,14 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   */
 object KernelSpread {
   /** Rows each spread task should carry, i.e. the per-task chunk the
-    * kernel-cost tier justifies. Default chosen from the round-18
-    * width probes on the PNG/winnowing kernels (documents fixture:
-    * 5k rows, best total at width ~8 ⇒ ~640 rows/task; the driver's
-    * 8-core control run independently showed 8-way beating 32-way ~2×
-    * on exactly the spread-kept queries). Env-overridable for probing
-    * and for production tiers with much costlier kernels.
+    * kernel-cost tier justifies. Chosen from the round-18 width probes on
+    * the PNG/winnowing kernels (documents fixture: 5k rows, best total at
+    * width ~8 ⇒ ~640 rows/task; the driver's 8-core control run
+    * independently showed 8-way beating 32-way ~2× on exactly the
+    * spread-kept queries). A caller with a much costlier kernel passes
+    * its own `rowsPerTask`.
     */
-  val DefaultRowsPerTask: Long =
-    sys.env.get("SPARK_GRAFT_SPREAD_ROWS_PER_TASK").map(_.toLong)
-      .getOrElse(640L)
+  val DefaultRowsPerTask: Long = 640L
 
   /** (canonicalized-plan semantic hash, schema hash) → input row count;
     * per-JVM, perf-metadata only (a hash collision can only mis-size
@@ -82,7 +80,10 @@ object KernelSpread {
     math.min(want.toLong, byRows).toInt
   }
 
-  /** Typed variant (generator inputs: `Dataset[Long]` ids). */
+  /** `ds`, round-robin-repartitioned to [[widthFor]] tasks when it has
+    * fewer partitions than that; a DataFrame is a `Dataset[Row]`, so
+    * kernel input projections like (id, text) pass through here too.
+    */
   def spread[T](ds: Dataset[T],
                 rowsPerTask: Long = DefaultRowsPerTask): Dataset[T] = {
     val want = ds.sparkSession.sparkContext.defaultParallelism
@@ -90,17 +91,6 @@ object KernelSpread {
     else {
       val target = widthFor(ds, rowsPerTask)
       if (ds.rdd.getNumPartitions >= target) ds else ds.repartition(target)
-    }
-  }
-
-  /** Untyped variant (kernel input projections like (id, text)). */
-  def spreadDf(df: DataFrame,
-               rowsPerTask: Long = DefaultRowsPerTask): DataFrame = {
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= want) df
-    else {
-      val target = widthFor(df, rowsPerTask)
-      if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
     }
   }
 }

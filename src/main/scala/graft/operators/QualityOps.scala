@@ -71,7 +71,7 @@ object QualityOps {
     // construction; string cast is injective on the long/string columns
     // this profiler accepts), min/max over the same strings. Two small
     // keyed shuffles, no Expand, codegen-friendly buffers.
-    val pairs = KernelSpread.spreadDf(df.select(cols.map(col): _*))
+    val pairs = KernelSpread.spread(df.select(cols.map(col): _*))
       .select(explode(array(cols.map(c =>
         struct(lit(c).as("col_name"), col(c).cast("string").as("v"))): _*)).as("p"))
       .select("p.*")

@@ -3,9 +3,8 @@ package graft.queries
 import graft.Tables
 import graft.functions.{Rounding => R, TextFunctions => T}
 import graft.operators._
-import graft.operators.ParsePipeline.PageHtml
 import graft.queries.Fixtures._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Corpus curation: curate gates, splits, stratified/weighted/capped sampling, epoch shuffle, HRW routing, the flagship training-manifest pipeline.

@@ -1,11 +1,8 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.{Rounding => R, TextFunctions => T}
 import graft.operators._
-import graft.operators.ParsePipeline.PageHtml
-import graft.queries.Fixtures._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal binary columns: image/video/audio/document metadata, decode, resize, frame sampling kernels.

@@ -1,11 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.{Rounding => R, TextFunctions => T}
+import graft.functions.{Rounding => R}
 import graft.operators._
-import graft.operators.ParsePipeline.PageHtml
 import graft.queries.Fixtures._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Core relational / warehouse shapes: aggregation, top-k, windows, pivot/unpivot, cube/rollup, outer joins, z-order, data-skipping manifests.

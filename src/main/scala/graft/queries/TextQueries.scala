@@ -1,11 +1,10 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.{Rounding => R, TextFunctions => T}
+import graft.functions.{TextFunctions => T}
 import graft.operators._
-import graft.operators.ParsePipeline.PageHtml
 import graft.queries.Fixtures._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Text analysis and tokenization: quality scores, lang-ID, BPE, packing, chunking, redaction, boilerplate, token rarity, bigram LM.

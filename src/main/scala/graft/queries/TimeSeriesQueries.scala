@@ -1,11 +1,9 @@
 package graft.queries
 
 import graft.Tables
-import graft.functions.{Rounding => R, TextFunctions => T}
+import graft.functions.{Rounding => R}
 import graft.operators._
-import graft.operators.ParsePipeline.PageHtml
-import graft.queries.Fixtures._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Event-time analytics: sessionization, windows, funnels, attribution, EWMA spikes, Markov chains, CEP patterns, rolling aggregates.

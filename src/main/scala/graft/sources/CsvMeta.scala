@@ -23,9 +23,9 @@ import graft.state.FileCommit
   * Fidelity note (SURVEY §7.4): the reference appends to ONE file with ONE
   * header. Spark's CSV sink writes a directory of part files with a header
   * per part, so [[append]] formats the rows with Spark's own CSV generator
-  * (`to_csv`, the sink's options) and streams them from one partition to
-  * the driver, which appends them to the end of the single target file in
-  * place. The driver holds at most one batch of lines.
+  * (`to_csv`, the sink's options) and collects them to the driver, which
+  * appends them to the end of the single target file in place. The driver
+  * holds at most one batch of lines.
   */
 object CsvMeta {
 
@@ -54,15 +54,10 @@ object CsvMeta {
       "local_file_path", "r2_url", "type_of_product", "archive_status",
       "scraped_at"))
 
-  /** S4: the existing-URL set of a metadata CSV (delta_download.py:41-51);
-    * empty/missing file → empty set.
-    */
-  def loadExistingUrls(spark: SparkSession, csvPath: String, productType: String): DataFrame =
-    // S4's set; the ingest's anti-join reads `existingUrlRows` instead
-    existingUrlRows(spark, csvPath, productType).distinct()
-
-  /** [[loadExistingUrls]] for a CSV of unknown product type: infers the
-    * header, which costs a Spark job per call.
+  /** S4: the existing-URL set of a metadata CSV of unknown product type
+    * (delta_download.py:41-51); empty/missing file → empty set. Infers the
+    * header, which costs a Spark job per call; the ingest's anti-join
+    * reads [[existingUrlRows]] instead.
     */
   def loadExistingUrls(spark: SparkSession, csvPath: String): DataFrame =
     urlRows(spark, csvPath, identity).distinct()
@@ -188,17 +183,18 @@ object CsvMeta {
     *
     * One path, O(batch), with no Spark write job: each row is formatted by
     * `to_csv` — the CSV writer's own generator and options, so the bytes
-    * are those `df.write.csv` would write — and the lines are streamed from
-    * one partition (`toLocalIterator`) onto the end of the CSV in place,
-    * through the raw FS under a checksummed one, else the FS's own
-    * `append`. The CSV's new byte length is then committed to the
-    * `<csv>.committed` sidecar by an atomic rename. Bytes past the
-    * committed length are not part of the CSV: every append, and
+    * are those `df.write.csv` would write — and the lines are collected
+    * and written onto the end of the CSV in place, through the raw FS under
+    * a checksummed one, else the FS's own `append`. Over a local relation
+    * (the ingest's collected batch) Catalyst folds the formatting, so the
+    * collect runs no Spark job. The CSV's new byte length is then
+    * committed to the `<csv>.committed` sidecar by an atomic rename. Bytes
+    * past the committed length are not part of the CSV: every append, and
     * [[truncateToCommitted]], cuts them off first.
     *
     * Crash windows:
-    *  - while the rows stream, or before the length commit: the tail past
-    *    the committed length is dropped by the next run, whose delta
+    *  - while the lines are written, or before the length commit: the tail
+    *    past the committed length is dropped by the next run, whose delta
     *    derives those rows again (`Jobs.runPipeline` marks their URLs
     *    completed only after this returns);
     *  - a new CSV commits length 0 before its first byte, so a crash while
@@ -213,7 +209,7 @@ object CsvMeta {
     val lines = df.select(to_csv(struct(cols.map(c =>
         if (df.columns.contains(c)) coalesce(col(c).cast("string"), lit("")).as(c)
         else lit("").as(c)): _*), java.util.Map.of("emptyValue", "", "nullValue", "")))
-      .as(Encoders.STRING).coalesce(1).toLocalIterator()
+      .as(Encoders.STRING).collect()
 
     val target = new Path(csvPath)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -224,7 +220,7 @@ object CsvMeta {
       else inPlace(fs, target, "append")(_.append(target))
     try {
       if (base == 0) out.write((cols.mkString(",") + "\n").getBytes(UTF_8))
-      lines.forEachRemaining(l => out.write((l + "\n").getBytes(UTF_8)))
+      lines.foreach(l => out.write((l + "\n").getBytes(UTF_8)))
     } finally out.close()
     commitLength(fs, target, fs.getFileStatus(target).getLen)
   }

@@ -186,8 +186,9 @@ class StateStore(spark: SparkSession, root: String) {
     * rewritten. The table stays a set, and a call writes O(batch) bytes.
     *
     * The file is installed by [[commit]], not by Spark's own Append into
-    * `completed/`: that would make the cache manager drop and re-plan
-    * every persisted frame that scans the table through [[filterPending]].
+    * `completed/`: that would run a write job, and make the cache manager
+    * drop and re-plan any persisted frame of a caller that scans the
+    * table through [[filterPending]].
     */
   def markCompleted(urls: DataFrame): Unit =
     // the batch dedupe keeps the table a set; one task, no shuffle: it is small
@@ -210,24 +211,26 @@ class StateStore(spark: SparkSession, root: String) {
   def failed: DataFrame = readOrEmpty("failed")
 
   /** Record failures; a url already in the DLQ gets retries+1 and the new
-    * error (state.py:142-156). The DLQ and the batch are small: they are
-    * merged on the driver, so the commit reads the table once.
+    * error (state.py:142-156). Reads the batch, then [[mergeFailed]].
     */
-  def markFailed(failures: DataFrame): Unit = {
+  def markFailed(failures: DataFrame): Unit =
+    mergeFailed(Nil, failures.select(col("url").cast("string"), col("error").cast("string"))
+      .collect().toSeq.map(r => r.getString(0) -> r.getString(1)))
+
+  /** The DLQ's one commit: `succeeded` urls leave it (J4,
+    * state.py:162-167) and each (url, error) of `failures` enters it, a
+    * url already there with retries+1 and the new error (state.py:142-156).
+    * The DLQ and the batch are small: they are merged on the driver, so
+    * the commit reads the table once and installs it once.
+    */
+  def mergeFailed(succeeded: Seq[String], failures: Seq[(String, String)]): Unit = {
     val now = java.sql.Timestamp.from(java.time.Instant.now())
-    val incoming = failures.select(col("url").cast("string"), col("error").cast("string")).collect()
     val prior = failed.collect().toSeq
     val retries = prior.map(r => r.getString(0) -> r.getInt(2)).toMap
-    val urls = incoming.map(_.getString(0)).toSet
-    commit(prior.filterNot(r => urls(r.getString(0))) ++ incoming.map(r =>
-      Row(r.getString(0), r.getString(1), retries.getOrElse(r.getString(0), 0) + 1, now)),
-      "failed", replace = true)
+    val leaving = succeeded.toSet ++ failures.map(_._1)
+    commit(prior.filterNot(r => leaving(r.getString(0))) ++ failures.map { case (url, error) =>
+      Row(url, error, retries.getOrElse(url, 0) + 1, now) }, "failed", replace = true)
   }
-
-  /** J4: remove urls that have since succeeded (state.py:162-167). */
-  def clearSucceeded(succeededUrls: DataFrame): Unit =
-    commit(DeltaOps.delta(failed,
-      succeededUrls.select(col(succeededUrls.columns.head).as("url")), "url"), "failed")
 
   // ---- A3: state summary ----
 

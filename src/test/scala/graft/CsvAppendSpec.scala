@@ -18,22 +18,23 @@ class CsvAppendSpec extends SparkSpec {
   private def tmpDir(): String =
     Files.createTempDirectory("csvappend").toString
 
-  test("loadExistingUrls reads with the product type's schema; a foreign header fails") {
+  test("existingUrlRows reads with the product type's schema; a foreign header fails") {
     val csv = tmpDir() + "/health_products.csv"
     CsvMeta.append(Seq(("u1", "P1"), ("", "P2"), ("u1", "P3")).toDF("document_url", "product_name"),
       "health", csv)
-    val urls = CsvMeta.loadExistingUrls(spark, csv, "health")
+    val urls = CsvMeta.existingUrlRows(spark, csv, "health")
       .collect().map(_.getString(0)).toSeq
-    assert(urls == Seq("u1"))
+    // one row per linked CSV row: the anti-join's build side is not de-duplicated
+    assert(urls == Seq("u1", "u1"))
     // the health header does not match the life columns: the read fails
     // instead of projecting the wrong column
-    val err = intercept[Exception](CsvMeta.loadExistingUrls(spark, csv, "life").collect())
+    val err = intercept[Exception](CsvMeta.existingUrlRows(spark, csv, "life").collect())
     val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
     assert(chain.exists(e => Option(e.getMessage).exists(_.toLowerCase.contains("header"))), err.toString)
   }
 
   test("a missing CSV's URL set is empty and the delta anti-join against it is dropped") {
-    val existing = CsvMeta.loadExistingUrls(spark, tmpDir() + "/life_products.csv", "life")
+    val existing = CsvMeta.existingUrlRows(spark, tmpDir() + "/life_products.csv", "life")
     assert(existing.isEmpty)
     val current = Seq(("u1", "P1"), (null: String, "P2")).toDF("document_url", "product_name")
     val fresh = graft.operators.DeltaOps.delta(current, existing, "document_url")
@@ -61,7 +62,7 @@ class CsvAppendSpec extends SparkSpec {
     CsvMeta.append(Seq(("u2", "P2")).toDF("document_url", "product_name"), "health", csv)
     assert(!Files.exists(crc))
     assert(spark.read.option("header", "true").csv(csv).count() == 2)
-    assert(CsvMeta.loadExistingUrls(spark, csv, "health").as[String].collect().sorted.toSeq ==
+    assert(CsvMeta.existingUrlRows(spark, csv, "health").as[String].collect().sorted.toSeq ==
       Seq("u1", "u2"))
     assert(CsvMeta.loadExistingUrls(spark, csv).as[String].collect().sorted.toSeq == Seq("u1", "u2"))
   }

@@ -58,7 +58,7 @@ class KernelSpreadSpec extends SparkSpec {
       .map { case (id, t) => (id, t.split("\\s+").count(_.nonEmpty)) }
       .collect().toSet
     // rowsPerTask = 1 forces a real exchange even on 3 rows
-    val spread = KernelSpread.spreadDf(docs, rowsPerTask = 1L)
+    val spread = KernelSpread.spread(docs, rowsPerTask = 1L)
       .as[(Long, String)]
       .map { case (id, t) => (id, t.split("\\s+").count(_.nonEmpty)) }
       .collect().toSet

@@ -191,6 +191,29 @@ class PipelineJobsSpec extends SparkSpec {
     assert(paths(linked(1)).isEmpty)
   }
 
+  test("a URL on two rows of one batch is fetched once and both rows get its file (J3)") {
+    import PipelineJobsSpec.fetches
+    val work = mkWorkDir()
+    val pagesDir = s"$work/pages"
+    writeLifePages(pagesDir, Seq(Seq(("UIN1", "Alpha", 1), ("UIN5", "Alias", 1), ("UIN2", "Beta", 2))))
+    fetches.clear()
+    val counting: String => Array[Byte] = url => {
+      fetches.computeIfAbsent(url, _ => new AtomicInteger()).incrementAndGet()
+      Jobs.stubFetch(url)
+    }
+    assert(Jobs.delta(spark, work, "life", pagesDir, 1, counting) == (3L, 2L, 0L))
+    val doc1 = "https://example.invalid/documents/doc1.pdf"
+    assert(fetches.asScala.view.mapValues(_.get).toMap ==
+      Map(doc1 -> 1, "https://example.invalid/documents/doc2.pdf" -> 1))
+    val rows = spark.read.option("header", "true").csv(Jobs.csvPath(work, "life")).collect()
+      .filter(_.getAs[String]("document_url") == doc1)
+    assert(rows.map(_.getAs[String]("uin")).sorted.toSeq == Seq("UIN1", "UIN5"))
+    val paths = rows.map(_.getAs[String]("local_file_path")).distinct.toSeq
+    assert(paths.size == 1 && paths.head.endsWith("Doc-1"), paths)
+    assert(Files.size(Paths.get(paths.head)) == Jobs.stubFetch(doc1).length)
+    assert(Jobs.delta(spark, work, "life", pagesDir, 1, counting) == (0L, 0L, 0L))
+  }
+
   test("a delta that fetches runs a bounded number of Spark jobs") {
     val work = mkWorkDir()
     val pagesDir = s"$work/pages"
@@ -202,10 +225,12 @@ class PipelineJobsSpec extends SparkSpec {
       else Jobs.stubFetch(url)
     val (out, jobs) = jobsOf(Jobs.delta(spark, work, "life", pagesDir, 2, failOn3))
     assert(out == (1L, 0L, 1L))
-    // 10 jobs here, none of them a write; 11 with a distinct() on the
-    // existing-URL side of the delta anti-join, and 14 when the delta also
-    // committed through Spark write jobs (DLQ, CSV part files, completed).
-    assert(jobs <= 10, s"a fetching delta ran $jobs Spark jobs")
+    // 5 jobs here: the collected delta, then the fetch. 10 with the batch
+    // persisted, counted, enriched by a group-by join and streamed to the
+    // CSV from one partition; 11 with a distinct() on the existing-URL side
+    // of the delta anti-join, and 14 when the delta also committed through
+    // Spark write jobs (DLQ, CSV part files, completed).
+    assert(jobs <= 5, s"a fetching delta ran $jobs Spark jobs")
   }
 
   test("CSV append: single file, one header, fixed column order, null→\"\" (K1/X14)") {
@@ -264,10 +289,12 @@ class PipelineJobsSpec extends SparkSpec {
     writeLifePages(pagesDir, Seq(Seq(("UIN1", "Alpha", 1)), Seq(("UIN2", "Beta", 2), ("UIN3", "Gamma", 0))))
     val (out, jobs) = jobsOf(run())
     assert(out == (1L, 0L, 0L))
-    // 5 jobs here; 6 with a distinct() on the existing-URL side of the delta
-    // anti-join, and 8 for the two-branch delta (link-less rows unioned back
-    // in a second scan and parse of every page).
-    assert(jobs <= 5, s"metadata-only delta ran $jobs Spark jobs")
+    // 2 jobs here: the collected delta; the CSV lines are formatted over a
+    // local relation. 5 with the batch persisted, counted and streamed to
+    // the CSV from one partition; 6 with a distinct() on the existing-URL
+    // side of the delta anti-join, and 8 for the two-branch delta (link-less
+    // rows unioned back in a second scan and parse of every page).
+    assert(jobs <= 2, s"metadata-only delta ran $jobs Spark jobs")
   }
 
   test("an unknown product type is rejected before any state is written") {

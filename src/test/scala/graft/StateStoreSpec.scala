@@ -50,7 +50,7 @@ class StateStoreSpec extends SparkSpec {
       r.getAs[String]("url") -> (r.getAs[Int]("retries"), r.getAs[String]("error"))).toMap
     assert(dlq("u1") == (2, "http 500"))
     assert(dlq("u2") == (1, "dns"))
-    st.clearSucceeded(Seq("u1").toDF("url"))
+    st.mergeFailed(Seq("u1"), Nil)
     assert(st.failed.collect().map(_.getAs[String]("url")).toSeq == Seq("u2"))
   }
 
@@ -122,8 +122,7 @@ class StateStoreSpec extends SparkSpec {
     st.startSession("life", 10)
     st.markFailed(Seq(("u1", "timeout"), ("u2", "dns")).toDF("url", "error"))
     st.markFailed(Seq(("u1", "http 500")).toDF("url", "error"))
-    st.clearSucceeded(Seq("u2").toDF("url"))
-    st.markFailed(Seq(("u3", "http 404")).toDF("url", "error"))
+    st.mergeFailed(Seq("u2"), Seq(("u3", "http 404")))
     val plain = spark.read.parquet(s"$root/failed")
     assert(plain.collect().toSet == st.failed.collect().toSet)
     assert(plain.select("url", "retries").as[(String, Int)].collect().toMap ==
@@ -204,7 +203,7 @@ class StateStoreSpec extends SparkSpec {
   test("markCompleted keeps a persisted frame that scans completed/ cached") {
     val st = store()
     st.markCompleted(Seq("a").toDF("url"))
-    // the shape of runPipeline's fetch results: persisted over filterPending
+    // a caller's frame persisted over filterPending
     val pending = st.filterPending(Seq("a", "b").toDF("url"), "url").persist()
     try {
       assert(pending.count() == 1)
