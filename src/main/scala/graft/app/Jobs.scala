@@ -8,7 +8,7 @@ import graft.sources.{CsvMeta, PageSource}
 import graft.state.StateStore
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{StringType, StructType, TimestampType}
 
 import scala.jdk.CollectionConverters._
 
@@ -56,9 +56,8 @@ object Jobs {
                   productType: String, pages: Dataset[ParsePipeline.PageHtml],
                   fetch: String => Array[Byte],
                   metadataOnly: Boolean = false): (Long, Long, Long) = {
-    // G1-G4 + P* + F*: pages → typed rows, stamped (X12).
-    val parsed = ParsePipeline.withScrapedAt(
-      ParsePipeline.parse(spark, pages, productType))
+    // G1-G4 + P* + F*: pages → typed rows.
+    val parsed = ParsePipeline.parse(spark, pages, productType)
 
     // J1: only rows whose document_url is NOT already in the metadata CSV.
     // A link-less row (null document_url) passes the anti-join unchanged:
@@ -69,56 +68,73 @@ object Jobs {
     // an earlier run appended but never committed are derived again here.
     val csv = csvPath(workDir, productType)
     CsvMeta.truncateToCommitted(spark, csv)
-    // collected: the batch cannot re-read the CSV its append grows (SURVEY §7.4)
     val fresh = DeltaOps.delta(parsed, CsvMeta.existingUrlRows(spark, csv, productType),
       "document_url")
-    val rows = fresh.collect().toSeq
-    def local(batch: Seq[Row], schema: StructType = fresh.schema) =
-      spark.createDataFrame(batch.asJava, schema)
+    // J2: each row carries whether its URL completed in a prior run (T3
+    // exactly-once), evaluated in the same plan, so no second plan
+    // filters the tasks.
+    val batch = if (metadataOnly) fresh
+      else fresh.withColumn(Completed, state.isCompleted("document_url"))
+    // collected: the batch cannot re-read the CSV its append grows (SURVEY §7.4)
+    val rows = batch.collect().toSeq
+    // X12: one scraped_at instant per run, taken when the delta is collected
+    // (as current_timestamp() would be), before the fetch. It is stamped on
+    // the driver's rows, not in the delta's plan: there whole-stage codegen
+    // inlines the folded literal, so every run compiled its parse stage anew.
+    val scrapedAt = java.sql.Timestamp.from(java.time.Instant.now())
+    def local(batch: Seq[Row], schema: StructType) = spark.createDataFrame(batch.asJava, schema)
+    // K1: every row of the batch, stamped, with its `local_file_path`
+    def append(filePath: Row => String): Unit =
+      CsvMeta.append(local(rows.map(r => Row.fromSeq(r.toSeq.take(fresh.schema.size) :+
+          scrapedAt :+ filePath(r))),
+        fresh.schema.add("scraped_at", TimestampType).add("local_file_path", StringType)),
+        productType, csv)
 
     if (metadataOnly) { // F6: skip the download stage entirely
-      CsvMeta.append(local(rows), productType, csv)
+      append(_ => null)
       return (rows.size.toLong, 0L, 0L)
     }
 
-    // F3 + X7/X9: one task per linked URL, with a computed destination.
-    val urlAt = fresh.schema.fieldIndex("document_url")
-    val linked = rows.filterNot(_.isNullAt(urlAt)).distinctBy(_.getString(urlAt))
-    val tasks = local(linked).select(col("document_url").as("url"),
-      concat(lit(s"$workDir/downloads/$productType/"),
-        T.sanitizeFilename(coalesce(col("document_filename"),
-          T.filenameFromUrl(col("document_url")),
-          T.urlHash(col("document_url")).cast("string")))).as("destination"))
+    // F3 + X7/X9: one task per pending linked URL, with a computed destination.
+    val (urlAt, doneAt) = (batch.schema.fieldIndex("document_url"), batch.schema.fieldIndex(Completed))
+    val pending = rows.filterNot(r => r.isNullAt(urlAt) || r.getBoolean(doneAt))
+      .distinctBy(_.getString(urlAt))
 
-    // J2: drop tasks already completed in a prior run (T3 exactly-once).
-    val pending = state.filterPending(tasks, "url")
-      .as(Encoders.product[DownloadTask])
-
-    // S6-S8 fetch. Its results are collected, one small row per fetched
-    // URL: the DLQ, the CSV and `completed` read them on the driver, and
-    // a collected result can never be fetched again (SURVEY §7.4).
-    val results = Downloader.download(pending, fetch).collect().toSeq
+    // S6-S8 fetch, only when a URL is pending: most monthly batches have
+    // none. Its results are collected, one small row per fetched URL: the
+    // DLQ, the CSV and `completed` read them on the driver, and a collected
+    // result can never be fetched again (SURVEY §7.4).
+    val results = if (pending.isEmpty) Nil else {
+      val tasks = local(pending, batch.schema).select(col("document_url").as("url"),
+        concat(lit(s"$workDir/downloads/$productType/"),
+          T.sanitizeFilename(coalesce(col("document_filename"),
+            T.filenameFromUrl(col("document_url")),
+            T.urlHash(col("document_url")).cast("string")))).as("destination"))
+        .as(Encoders.product[DownloadTask])
+      Downloader.download(tasks, fetch).collect().toSeq
+    }
     val (ok, bad) = results.partition(_.success)
 
     // T4: failures go to the DLQ first; a re-run retries them either way.
     if (bad.nonEmpty) state.mergeFailed(Nil, bad.map(r => r.url -> r.error))
 
-    // J3: each row gets its URL's download outcome, then K1 append.
+    // J3: each row gets its URL's download outcome, then K1 append. A row
+    // whose URL was completed in a prior run is appended with no file path.
     val byUrl = results.groupMapReduce(_.url)(identity)(resultOrder.max)
-    val enriched = rows.map(r => Row.fromSeq(r.toSeq :+
-      Option(r.getString(urlAt)).flatMap(byUrl.get).map(_.file_path).orNull))
-    CsvMeta.append(local(enriched, fresh.schema.add("local_file_path", StringType)),
-      productType, csv)
+    append(r => Option(r.getString(urlAt)).flatMap(byUrl.get).map(_.file_path).orNull)
 
     // T3: mark URLs completed only once their rows are committed to the
     // CSV. After a crash before that commit the re-run derives the same
     // rows, re-fetches them (a stored file answers with no download)
     // and appends their file paths; marked first, it would append an
-    // empty local_file_path. They passed `filterPending` above, so none
-    // is in the set yet.
+    // empty local_file_path. Only URLs not flagged completed above were
+    // fetched, so none is in the set yet.
     if (ok.nonEmpty) state.markCompleted(ok.map(_.url))
     (rows.size.toLong, ok.size.toLong, bad.size.toLong)
   }
+
+  /** The J2 flag column of the collected batch. */
+  private val Completed = "_completed"
 
   /** The J3 pick among the results of one URL, by the contract enrich's
     * total order: max by file size, then file path (null lowest), then

@@ -27,7 +27,12 @@ import scala.util.control.NonFatal
   * In-flight pool: the tasks go to one partition, which runs
   * `maxConcurrent` blocking fetch workers, so `maxConcurrent` requests are
   * in flight (the reference's semaphore ≤10) however many task slots the
-  * cluster has. The workers pull from one queue ordered by not-before
+  * cluster has. The partitions are merged by `coalesce(1)`, a narrow
+  * dependency, so the fetch is one Spark job of one stage and one task;
+  * `repartition(1)` would add a shuffle, whose map side AQE runs as a job
+  * of its own. The task Dataset's own plan then runs in that one task too,
+  * which suits its callers: a local relation of collected rows, or the
+  * small DLQ table. The workers pull from one queue ordered by not-before
   * time; a retry re-enters it at its backoff deadline, so a URL backing
   * off holds no worker. The rate limiter is per-JVM and shared by every
   * worker in it, so the one fetch task enforces `ratePerSec`.
@@ -155,7 +160,7 @@ object Downloader {
     require(maxConcurrent >= 1, s"maxConcurrent must be >= 1, got $maxConcurrent")
     implicit val enc = Encoders.product[DownloadResult]
     tasks
-      .repartition(1)
+      .coalesce(1)
       .mapPartitions { it =>
         val ctx = TaskContext.get()
         val out = ArrayBuffer.empty[DownloadResult]

@@ -138,7 +138,12 @@ object ParsePipeline {
         when(col("docUrlPrev").isNotNull, col("docFilenamePrev"))
           .otherwise(col("docFilenameLast")).as("document_filename"))
 
-  /** X12: stamp the ingest timestamp (models.py:19). */
+  /** X12: stamp the ingest timestamp (models.py:19) as a column of a plan.
+    * `current_timestamp()` folds to a literal per query, which whole-stage
+    * codegen inlines, so a stage under it compiles anew on every run; the
+    * ingest job (`graft.app.Jobs.runPipeline`) stamps its collected rows on
+    * the driver instead.
+    */
   def withScrapedAt(df: DataFrame): DataFrame =
     df.withColumn("scraped_at", current_timestamp())
 

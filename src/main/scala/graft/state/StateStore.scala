@@ -11,7 +11,7 @@ import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit.MICROS
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT32, INT64}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -188,19 +188,33 @@ class StateStore(spark: SparkSession, root: String) {
     * The file is installed by [[commit]], not by Spark's own Append into
     * `completed/`: that would run a write job, and make the cache manager
     * drop and re-plan any persisted frame of a caller that scans the
-    * table through [[filterPending]].
+    * table through [[filterPending]] or [[isCompleted]].
     */
   def markCompleted(urls: DataFrame): Unit =
     // the batch dedupe keeps the table a set; one task, no shuffle: it is small
     commit(DeltaOps.delta(urls.select(col(urls.columns.head).as("url")).coalesce(1).distinct(),
       completed, "url"), "completed", replace = false)
 
-  /** [[markCompleted]] for a driver-side batch of URLs that passed
-    * [[filterPending]] earlier in the same run, so none is in the set yet:
-    * the batch's distinct URLs are committed with no Spark job.
+  /** [[markCompleted]] for a driver-side batch of URLs that were not
+    * completed when the caller read [[isCompleted]] or [[filterPending]]
+    * earlier in the same run, so none is in the set yet: the batch's
+    * distinct URLs are committed with no Spark job.
     */
   def markCompleted(urls: Seq[String]): Unit =
     commit(urls.distinct.map(Row(_)), "completed", replace = false)
+
+  /** J2 guard as a column of the caller's plan (cli.py:101-103): whether
+    * the row's `urlCol` is in the completed set. It is an EXISTS subquery,
+    * which Catalyst plans as an existence join (broadcast while the set is
+    * small), so a key completed twice cannot duplicate a row. A null URL is
+    * never completed. `urlCol` may not be `url`: an outer reference
+    * resolves against the subquery's own columns first, so it would
+    * compare the set's column with itself.
+    */
+  def isCompleted(urlCol: String): Column = {
+    require(urlCol != "url", "isCompleted needs a URL column not named url")
+    completed.where(col("url") === col(urlCol).outer()).exists()
+  }
 
   /** J2 guard: tasks not yet completed (cli.py:101-103). */
   def filterPending(tasks: DataFrame, urlCol: String): DataFrame =

@@ -6,7 +6,9 @@ import graft.sources.CsvMeta
 import graft.state.StateStore
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
+import java.time.{Instant, LocalDateTime, ZoneOffset}
+import java.time.temporal.ChronoUnit
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import scala.jdk.CollectionConverters._
 
@@ -225,12 +227,119 @@ class PipelineJobsSpec extends SparkSpec {
       else Jobs.stubFetch(url)
     val (out, jobs) = jobsOf(Jobs.delta(spark, work, "life", pagesDir, 2, failOn3))
     assert(out == (1L, 0L, 1L))
-    // 5 jobs here: the collected delta, then the fetch. 10 with the batch
-    // persisted, counted, enriched by a group-by join and streamed to the
-    // CSV from one partition; 11 with a distinct() on the existing-URL side
-    // of the delta anti-join, and 14 when the delta also committed through
-    // Spark write jobs (DLQ, CSV part files, completed).
-    assert(jobs <= 5, s"a fetching delta ran $jobs Spark jobs")
+    // 4 jobs here: the broadcasts of the CSV's URLs and of the completed
+    // set, the collected delta, then the fetch. 5 with the completed-set
+    // guard planned apart over the tasks and the fetch behind a
+    // repartition(1); 10 with the batch persisted, counted, enriched by a
+    // group-by join and streamed to the CSV from one partition; 11 with a
+    // distinct() on the existing-URL side of the delta anti-join, and 14
+    // when the delta also committed through Spark write jobs (DLQ, CSV
+    // part files, completed).
+    assert(jobs <= 4, s"a fetching delta ran $jobs Spark jobs")
+  }
+
+  test("a delta with no pending URL runs no fetch job (T3/J2)") {
+    import PipelineJobsSpec.fetches
+    val work = mkWorkDir()
+    val pagesDir = s"$work/pages"
+    writeLifePages(pagesDir, Seq(Seq(("UIN1", "Alpha", 1)), Seq(("UIN2", "Beta", 2))))
+    fetches.clear()
+    val counting: String => Array[Byte] = url => {
+      fetches.computeIfAbsent(url, _ => new AtomicInteger()).incrementAndGet()
+      Jobs.stubFetch(url)
+    }
+    assert(Jobs.delta(spark, work, "life", pagesDir, 2, counting) == (2L, 2L, 0L))
+    fetches.clear()
+    // T3: the second run over the same pages
+    val (out, jobs) = jobsOf(Jobs.delta(spark, work, "life", pagesDir, 2, counting))
+    assert(out == (0L, 0L, 0L))
+    // 3 jobs here, all the collect's: the broadcasts of the CSV's URLs and
+    // of the completed set, and the collected delta (also 3 with the guard
+    // planned apart over the tasks).
+    assert(jobs <= 3, s"an empty delta ran $jobs Spark jobs")
+    // fresh rows, none pending: a link-less row and a URL completed before
+    new StateStore(spark, s"$work/state").markCompleted(Seq("https://example.invalid/documents/doc3.pdf"))
+    writeLifePages(pagesDir, Seq(Seq(("UIN1", "Alpha", 1)),
+      Seq(("UIN2", "Beta", 2), ("UIN3", "Gamma", 3), ("UIN0", "Zero", 0))))
+    val (out2, jobs2) = jobsOf(Jobs.delta(spark, work, "life", pagesDir, 2, counting))
+    assert(out2 == (2L, 0L, 0L))
+    assert(fetches.isEmpty)
+    // 3 jobs here too. 5 with the completed-set guard planned apart over
+    // the task relation and the fetch run over the empty pending set.
+    assert(jobs2 <= 3, s"a delta with nothing to fetch ran $jobs2 Spark jobs")
+  }
+
+  test("a URL completed in a prior run is appended with no file and never fetched (J2)") {
+    import PipelineJobsSpec.fetches
+    val work = mkWorkDir()
+    val pagesDir = s"$work/pages"
+    val (doc1, doc2) = ("https://example.invalid/documents/doc1.pdf",
+      "https://example.invalid/documents/doc2.pdf")
+    // doc1 was fetched before, as under another product type: it is
+    // completed, but in no row of this type's CSV
+    new StateStore(spark, s"$work/state").markCompleted(Seq(doc1))
+    writeLifePages(pagesDir, Seq(Seq(("UIN1", "Alpha", 1), ("UIN2", "Beta", 2))))
+    fetches.clear()
+    val counting: String => Array[Byte] = url => {
+      fetches.computeIfAbsent(url, _ => new AtomicInteger()).incrementAndGet()
+      Jobs.stubFetch(url)
+    }
+    assert(Jobs.delta(spark, work, "life", pagesDir, 1, counting) == (2L, 1L, 0L))
+    assert(fetches.asScala.view.mapValues(_.get).toMap == Map(doc2 -> 1))
+    val rows = spark.read.option("header", "true").csv(Jobs.csvPath(work, "life")).collect()
+      .map(r => r.getAs[String]("document_url") -> Option(r.getAs[String]("local_file_path")))
+    assert(rows.map(_._1).sorted.toSeq == Seq(doc1, doc2))
+    val paths = rows.toMap
+    assert(paths(doc1).isEmpty)
+    assert(paths(doc2).exists(_.endsWith("Doc-2")))
+    val state = new StateStore(spark, s"$work/state")
+    assert(state.completed.collect().map(_.getString(0)).sorted.toSeq == Seq(doc1, doc2))
+    // its row is in the CSV now, so the next delta leaves it out
+    assert(Jobs.delta(spark, work, "life", pagesDir, 1, counting) == (0L, 0L, 0L))
+    assert(fetches.asScala.view.mapValues(_.get).toMap == Map(doc2 -> 1))
+  }
+
+  test("a warm delta compiles no code (X12)") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val work = mkWorkDir()
+    val pagesDir = s"$work/pages"
+    def grownTo(n: Int) = {
+      writeLifePages(pagesDir, Seq((1 to n).map(d => (s"UIN$d", s"Name$d", d))))
+      Jobs.delta(spark, work, "life", pagesDir, 1)
+    }
+    // the first run reads no CSV and no completed set: its plan differs
+    assert(grownTo(1) == (1L, 1L, 0L))
+    assert(grownTo(2) == (1L, 1L, 0L))
+    assert(grownTo(3) == (1L, 1L, 0L))
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(grownTo(4) == (1L, 1L, 0L))
+    // 2 classes per call when each run's scraped_at literal was inlined
+    // into the parse stage's generated source
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled == 0,
+      "a warm delta compiled generated code")
+  }
+
+  test("scraped_at is one instant per run, taken before the fetch (X12)") {
+    val work = mkWorkDir()
+    val pagesDir = s"$work/pages"
+    writeLifePages(pagesDir, Seq(Seq(("UIN1", "Alpha", 1), ("UIN2", "Beta", 2), ("UIN0", "Zero", 0))))
+    import PipelineJobsSpec.firstCall
+    firstCall.set(null)
+    val slow: String => Array[Byte] = url => {
+      firstCall.compareAndSet(null, Instant.now())
+      Thread.sleep(700)
+      Jobs.stubFetch(url)
+    }
+    val before = Instant.now()
+    assert(Jobs.delta(spark, work, "life", pagesDir, 1, slow) == (3L, 2L, 0L))
+    val stamps = spark.read.option("header", "true").csv(Jobs.csvPath(work, "life")).collect()
+      .map(_.getAs[String]("scraped_at")).distinct.toSeq
+    assert(stamps.size == 1, stamps)
+    // written in the session time zone, UTC
+    val at = LocalDateTime.parse(stamps.head.replace(' ', 'T'))
+      .toInstant(ZoneOffset.UTC)
+    assert(!at.isBefore(before.truncatedTo(ChronoUnit.MICROS)), s"$at < $before")
+    assert(!at.isAfter(firstCall.get), s"$at is after the first fetch at ${firstCall.get}")
   }
 
   test("CSV append: single file, one header, fixed column order, null→\"\" (K1/X14)") {
@@ -330,4 +439,7 @@ object PipelineJobsSpec {
     * under local mode, so a closure reaches the counts through this object.
     */
   val fetches = new ConcurrentHashMap[String, AtomicInteger]()
+
+  /** When a fetch was first called, reached the same way. */
+  val firstCall = new AtomicReference[Instant]()
 }

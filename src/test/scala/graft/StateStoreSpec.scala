@@ -63,6 +63,18 @@ class StateStoreSpec extends SparkSpec {
     assert(pending.as[String].collect().toSeq == Seq("c"))
   }
 
+  test("isCompleted flags each row once, a key completed twice too (J2)") {
+    val st = store()
+    // the driver-side form does not read the set: "a" lands in it twice
+    st.markCompleted(Seq("a"))
+    st.markCompleted(Seq("a", "b"))
+    val rows = Seq("a", "c", null).toDF("document_url")
+    val flagged = rows.withColumn("done", st.isCompleted("document_url"))
+      .collect().map(r => Option(r.getString(0)) -> r.getBoolean(1)).toSeq
+    assert(flagged.sortBy(_._1) == Seq(None -> false, Some("a") -> true, Some("c") -> false))
+    intercept[IllegalArgumentException](st.isCompleted("url"))
+  }
+
   test("a finished <table>.tmp left by a crash before its install is ignored (K5)") {
     val root = Files.createTempDirectory("graft-state").toString
     val st = new StateStore(spark, root)

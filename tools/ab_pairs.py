@@ -14,11 +14,12 @@ BENCHMARK.json). For each --claim metric it also checks the 9-of-10 rule:
 the change wins at least 9/10 of the pairs and its median beats the base
 median by more than the base's inter-quartile range. The host's CPU steal
 during each run is printed next to it: a run on a stolen host reads slow
-for reasons outside the program, so each --claim verdict is printed a
-second time over only the pairs whose two runs' steal differs by at most
-STEAL_GAP points, with the number of such pairs. --out writes every run
-record and the summary as JSON, with each checkout's commit (and whether
-its tree was edited) in place of its path.
+for reasons outside the program, so the summary is printed a second time
+over only the pairs whose two runs' steal differs by at most STEAL_GAP
+points, with the number of such pairs: every end-to-end metric with the
+9-of-10 verdict it would get, then each --claim verdict. --out writes
+every run record and both summaries as JSON, with each checkout's commit
+(and whether its tree was edited) in place of its path.
 """
 import argparse
 import json
@@ -78,7 +79,9 @@ def directions(checkout):
 
 
 def summarize(pairs, better, claims):
-    rows, verdicts = [], {}
+    """One row per end-to-end metric, each with its 9-of-10 verdict, and
+    the verdicts of the `claims`."""
+    rows = []
     ok = [(b, c) for b, c in pairs if "metrics" in b and "metrics" in c]
     for name, way in better.items():
         got = [(b["metrics"][name]["value"], c["metrics"][name]["value"]) for b, c in ok
@@ -89,15 +92,13 @@ def summarize(pairs, better, claims):
         (bq1, bmed, bq3), (cq1, cmed, cq3) = quartiles(bs), quartiles(cs)
         wins = sum((y < x) if way == "lower" else (y > x) for x, y in got)
         gap = (bmed - cmed) if way == "lower" else (cmed - bmed)
+        need = math.ceil(0.9 * len(got))
         rows.append({"metric": name, "better": way, "pairs": len(got), "wins": wins,
                      "base": [bq1, bmed, bq3], "change": [cq1, cmed, cq3],
                      "move_pct": 100.0 * (cmed - bmed) / bmed if bmed else None,
-                     "gap": gap, "base_iqr": bq3 - bq1})
-        if name in claims:
-            need = math.ceil(0.9 * len(got))
-            verdicts[name] = {"wins": wins, "need": need, "gap": gap, "base_iqr": bq3 - bq1,
-                              "met": wins >= need and gap > bq3 - bq1}
-    return rows, verdicts
+                     "gap": gap, "base_iqr": bq3 - bq1,
+                     "need": need, "met": wins >= need and gap > bq3 - bq1})
+    return rows, {r["metric"]: r for r in rows if r["metric"] in claims}
 
 
 def steal_matched(pairs):
@@ -111,6 +112,15 @@ def steal_matched(pairs):
 def verdict_line(name, v):
     return (f"claim {name}: wins {v['wins']} (need {v['need']}), median gap {v['gap']:.4g} "
             f"vs base IQR {v['base_iqr']:.4g} -> {'MET' if v['met'] else 'NOT met'}")
+
+
+def print_rows(rows, verdict=False):
+    for r in rows:
+        b, c = r["base"], r["change"]
+        move = f"{r['move_pct']:+.1f}%" if r["move_pct"] is not None else "n/a"
+        rule = f"  9/10 rule {'MET' if r['met'] else 'not met'}" if verdict else ""
+        print(f"  {r['metric']:13s} {b[1]:.4g} [{b[0]:.4g}, {b[2]:.4g}] -> "
+              f"{c[1]:.4g} [{c[0]:.4g}, {c[2]:.4g}]  {move}  wins {r['wins']}/{r['pairs']}{rule}")
 
 
 def main():
@@ -146,17 +156,14 @@ def main():
     better = directions(sides["change"])
     rows, verdicts = summarize(pairs, better, set(a.claim))
     matched = steal_matched(pairs)
-    _, matched_verdicts = summarize(matched, better, set(a.claim))
+    matched_rows, matched_verdicts = summarize(matched, better, set(a.claim))
     print(f"\n{a.workload}: {n} pairs, medians [q1, q3], base -> change")
-    for r in rows:
-        b, c = r["base"], r["change"]
-        move = f"{r['move_pct']:+.1f}%" if r["move_pct"] is not None else "n/a"
-        print(f"  {r['metric']:13s} {b[1]:.4g} [{b[0]:.4g}, {b[2]:.4g}] -> "
-              f"{c[1]:.4g} [{c[0]:.4g}, {c[2]:.4g}]  {move}  wins {r['wins']}/{r['pairs']}")
+    print_rows(rows)
     for name, v in verdicts.items():
         print(verdict_line(name, v))
-    if a.claim:
-        print(f"{len(matched)} of {n} pairs have steal within {STEAL_GAP:g} points of each other")
+    print(f"\n{len(matched)} of {n} pairs have steal within {STEAL_GAP:g} points of each other; "
+          "over those pairs:")
+    print_rows(matched_rows, verdict=True)
     for name, v in matched_verdicts.items():
         print(f"  over those pairs, {verdict_line(name, v)}")
     if a.out:
@@ -166,6 +173,7 @@ def main():
                        "pairs": [{"base": b, "change": c} for b, c in pairs],
                        "summary": rows, "claims": verdicts,
                        "steal_matched": {"max_gap_points": STEAL_GAP, "pairs": len(matched),
+                                         "summary": matched_rows,
                                          "claims": matched_verdicts}}, fh, indent=1)
 
 
